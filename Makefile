@@ -4,10 +4,12 @@
 #                   then the plan audit (pushdown / cartesian / wide-scan).
 #   make test     — full pytest suite.
 #   make bench    — median-of-3 suite bench at sf0.1 (writes BENCH.json).
+#   make perfbench-smoke — every perfbench workload at tiny size, traced
+#                   and untraced, with its correctness checks (~3 min).
 
 PY ?= python
 
-.PHONY: verify gate gate-small audit test bench
+.PHONY: verify gate gate-small audit test bench perfbench-smoke
 
 verify: gate gate-small audit
 
@@ -25,3 +27,6 @@ test:
 
 bench:
 	$(PY) bench.py
+
+perfbench-smoke:
+	python3 -m pytest perfbench/test_smoke.py -q -p no:cacheprovider

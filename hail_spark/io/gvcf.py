@@ -62,7 +62,7 @@ def _parse_gvcf_lines(body: DataFrame) -> DataFrame:
         F.element_at(c, 5) == ".", F.array().cast("array<string>")
     ).otherwise(F.split(F.element_at(c, 5), ","))
     alts = F.array_remove(alts_all, NON_REF)
-    entry = _entry_struct(fmt, F.element_at(c, 10))
+    entry = _entry_struct(fmt, F.split(F.element_at(c, 10), ":"))
     return body.select(
         F.element_at(c, 1).alias("contig"),
         F.element_at(c, 2).cast("int").alias("pos"),

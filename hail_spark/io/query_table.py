@@ -28,12 +28,19 @@ def _key_meta(path: str) -> list[str]:
         return json.load(f)["key"]
 
 
-def _row_group_bounds(pf: pq.ParquetFile, col_idx: int):
-    """(min, max) per row group for one column, None if stats absent."""
+def _row_group_bounds(pf: pq.ParquetFile, field: str):
+    """(min, max) per row group for one top-level field, None where
+    stats are absent. Statistics live on parquet LEAF columns, whose
+    numbering differs from the top-level field order as soon as a
+    nested column precedes the field, so the leaf is resolved by its
+    path; a nested field has no single leaf and gets no bounds."""
+    leaf = next(
+        (i for i in range(pf.metadata.num_columns) if pf.schema.column(i).path == field),
+        None,
+    )
     out = []
     for rg in range(pf.metadata.num_row_groups):
-        col = pf.metadata.row_group(rg).column(col_idx)
-        st = col.statistics
+        st = None if leaf is None else pf.metadata.row_group(rg).column(leaf).statistics
         out.append((st.min, st.max) if st is not None and st.has_min_max else None)
     return out
 
@@ -68,11 +75,10 @@ def build_key_manifest(path: str, key: list[str]) -> bool:
     entries = {}
     for fp in sorted(glob.glob(os.path.join(path, "rows", "*.parquet"))):
         pf = pq.ParquetFile(fp)
-        names = pf.schema_arrow.names
-        if k0 not in names:
+        if k0 not in pf.schema_arrow.names:
             return _skip()
         fmin, fmax = None, None
-        for b in _row_group_bounds(pf, names.index(k0)):
+        for b in _row_group_bounds(pf, k0):
             if b is None:
                 fmin, fmax = None, None
                 break
@@ -149,11 +155,9 @@ def query_table(path: str, point=None, interval: tuple | None = None) -> list[di
     rows: list[dict] = []
     for fp in files:
         pf = pq.ParquetFile(fp)
-        names = pf.schema_arrow.names
-        ci = names.index(k0)
         groups = [
             rg
-            for rg, b in enumerate(_row_group_bounds(pf, ci))
+            for rg, b in enumerate(_row_group_bounds(pf, k0))
             if b is None or (b[0] <= hi and b[1] >= lo)
         ]
         if not groups:
@@ -208,8 +212,7 @@ def table_stats(path: str) -> dict[str, Any]:
         n_rows += pf.metadata.num_rows
         n_groups += pf.metadata.num_row_groups
         if key:
-            ci = pf.schema_arrow.names.index(key[0])
-            for b in _row_group_bounds(pf, ci):
+            for b in _row_group_bounds(pf, key[0]):
                 if b:
                     bounds.append(b)
     return {

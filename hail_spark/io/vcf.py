@@ -7,10 +7,18 @@ parser + tabix splits) and io/vcf/ExportVCF.scala (272 LoC).
 Spark-first design: the body is ``spark.read.text`` (distributed
 line splits for free) and the entire line parse is Catalyst
 expressions — ``split``/``str_to_map``/``try_cast``/``transform`` —
-so parsing runs inside whole-stage codegen with zero Python in the
-hot path. The header is read once from the head of the first file
-(driver-side ``limit`` over the text source, one small partition
-read — the same eager header pass the reference does in LoadVCF).
+with zero Python in the hot path. The header is read once from the
+head of the first file (driver-side ``limit`` over the text source,
+one small partition read — the same eager header pass the reference
+does in LoadVCF).
+
+The sample columns are parsed by ONE higher-order ``transform`` over
+the sample indices, the way LoadVCF loops over its samples, so the
+plan has the same size for 3 samples as for 3,000. A per-sample
+unrolled entry expression grows the plan linearly with the cohort,
+and Spark's driver-side analysis, optimization and codegen of that
+plan cost seconds per import at a few hundred samples, before any
+job runs. ``export_vcf`` renders the genotype columns the same way.
 
 Row fields: ``locus struct<contig,position>``, ``alleles
 array<string>``, ``rsid``, ``qual``, ``filters array<string>``,
@@ -61,11 +69,10 @@ def _info_field(m: Column, key: str, number: str, vcf_type: str) -> Column:
     ).alias(key)
 
 
-def _entry_struct(fmt: Column, sample: Column) -> Column:
-    """Parse one sample's colon-delimited field string against the
-    per-row FORMAT key list. Samples may legally truncate trailing
-    fields, so every access is position-guarded."""
-    vals = F.split(sample, ":")
+def _entry_struct(fmt: Column, vals: Column) -> Column:
+    """Parse one sample's field values (its column already split on
+    ``:``) against the per-row FORMAT key list. Samples may legally
+    truncate trailing fields, so every access is position-guarded."""
 
     def field(key: str) -> Column:
         # F.get is 0-based and NULL on out-of-bounds — covers both "key
@@ -108,20 +115,28 @@ def import_vcf(
     info_decls = [_INFO_RE.match(h).groups() for h in head if _INFO_RE.match(h)]
 
     body = text.filter(~F.col("value").startswith("#"))
-    # materialize the tab-split ONCE: the n_samples entry builders (and
-    # the info/fmt parses) each reference the token array, and
-    # CollapseProject would inline — i.e. re-split the whole line — per
-    # reference, making the parse O(n_samples^2) per row (measured 43 s
-    # -> ~4 s on the reference's 100-sample sample.vcf)
+    # materialize the tab-split ONCE: the row fields and the sample
+    # lambda each reference the token array, and CollapseProject would
+    # inline — i.e. re-split the whole line — per reference
     body = body.select(F.split(F.col("value"), "\t").alias("__c"))
     # second barrier for the FORMAT key list: every entry field probes
-    # it with array_position, so inlining would re-split it per probe
-    body = body.select(
-        F.col("__c"), F.split(F.element_at(F.col("__c"), 9), ":").alias("__fmt")
-    )
+    # it with array_position, per sample, so inlining would re-split it
+    # per probe. F.get is NULL-safe: sites-only lines have no FORMAT
+    # column, and ANSI element_at would fail them
+    body = body.select(F.col("__c"), F.split(F.get(F.col("__c"), 8), ":").alias("__fmt"))
     c = F.col("__c")
     info_map = F.str_to_map(F.element_at(c, 8), F.lit(";"), F.lit("="))
     fmt = F.col("__fmt")
+    # 1-based column numbers of the samples. Spark's sequence(10, 9)
+    # counts DOWN, so zero samples need an explicit empty array.
+    # element_at (not get) keeps a data line with fewer sample columns
+    # than the header an error rather than silently missing entries
+    sample_idx = (
+        F.sequence(F.lit(10), F.lit(9 + len(samples)))
+        if samples
+        else F.array().cast("array<int>")
+    )
+    sample_vals = F.transform(sample_idx, lambda i: F.split(F.element_at(c, i), ":"))
     row_cols = [
         F.struct(
             F.element_at(c, 1).alias("contig"),
@@ -144,9 +159,7 @@ def import_vcf(
         ).alias("info")
         if info_decls
         else F.lit(None).cast("string").alias("info"),
-        F.array(
-            *[_entry_struct(fmt, F.element_at(c, 10 + i)) for i in range(len(samples))]
-        ).alias(ENTRIES),
+        F.transform(sample_vals, lambda v: _entry_struct(fmt, v)).alias(ENTRIES),
     ]
     rows = body.select(*row_cols)
     if min_partitions and rows.rdd.getNumPartitions() < min_partitions:
@@ -209,7 +222,7 @@ def export_vcf(mt: MatrixTable, path: str) -> None:
         .otherwise(F.array_join("filters", ";")),
         info_str() if info_fields else F.lit("."),
         F.lit("GT"),
-        *[gt_str(F.col(ENTRIES)[i]) for i in range(len(samples))],
+        F.transform(F.col(ENTRIES), gt_str),
     )
     header = "\t".join(
         ["#CHROM", "POS", "ID", "REF", "ALT", "QUAL", "FILTER", "INFO", "FORMAT"] + samples

@@ -21,6 +21,13 @@ def _defined(arr: Column, f) -> Column:
     return F.filter(arr, lambda e: e.isNotNull() & f(e).isNotNull())
 
 
+def _gt_sum(gts: Column) -> Column:
+    """Alt-allele count over an array of called GTs. The bigint
+    accumulator takes int32 and int64 GT alike: aggregate requires the
+    merge result to keep the zero value's type exactly."""
+    return F.aggregate(gts, F.lit(0).cast("bigint"), lambda a, g: a + g)
+
+
 def variant_qc(mt: MatrixTable, gt_field: str = "GT", name: str = "variant_qc", hwe: bool = True) -> MatrixTable:
     """Per-row (variant) QC (ref qc.py:219 field set): call_rate,
     n_(not_)called, n_filtered, n_het/hom_ref/hom_var/non_ref,
@@ -39,7 +46,7 @@ def variant_qc(mt: MatrixTable, gt_field: str = "GT", name: str = "variant_qc", 
         n_hom_ref = F.size(F.filter(called, lambda g: g == 0))
         n_hom_var = F.size(F.filter(called, lambda g: g == 2))
         an = (n_called * 2).cast("int")
-        ac1 = F.aggregate(called, F.lit(0), lambda a, g: a + g).cast("int")
+        ac1 = _gt_sum(called).cast("int")
         n_filtered = F.size(F.filter(entries, lambda e: e.isNull()))
         n_non_ref = F.size(F.filter(called, lambda g: g > 0))
         fields = [
@@ -140,9 +147,7 @@ def sample_qc(mt: MatrixTable, gt_field: str = "GT"):
     has_alleles = "alleles" in mt._df.columns
     e = F.col(ENTRIES)
     gts = F.transform(e, lambda x: x[gt_field])
-    ac1 = F.aggregate(
-        F.filter(gts, lambda g: g.isNotNull()), F.lit(0), lambda a, g: a + g
-    )
+    ac1 = _gt_sum(F.filter(gts, lambda g: g.isNotNull()))
     row_cols = [F.posexplode(e).alias("__s", "__e"), ac1.alias("__ac")]
     if has_alleles:
         ref = F.element_at("alleles", 1)
@@ -285,7 +290,7 @@ def compute_charr(
         an = 2 * F.size(gts)
         ref_af = F.when(
             an > 0,
-            1.0 - F.aggregate(gts, F.lit(0), lambda a, g: a + g).cast("double") / an,
+            1.0 - _gt_sum(gts).cast("double") / an,
         )
     filtered = df.where(F.size("alleles") == 2) if "alleles" in df.columns else df
     long = (

@@ -151,6 +151,83 @@ def test_vcf_roundtrip(spark, vcf_path, tmp_path):
     assert sorted(a, key=key) == sorted(b, key=key)
 
 
+def _vcf_text(samples: list[str], lines: list[str], fmt_col: bool = True) -> str:
+    cols = ["#CHROM", "POS", "ID", "REF", "ALT", "QUAL", "FILTER", "INFO"]
+    cols += ["FORMAT", *samples] if fmt_col else []
+    head = ["##fileformat=VCFv4.2", "\t".join(cols)]
+    return "\n".join(head + lines) + "\n"
+
+
+def test_import_vcf_plan_size_independent_of_samples(spark, tmp_path):
+    """The sample columns parse through one lambda, so the analyzed
+    plan does not grow with the cohort."""
+
+    def plan_len(n):
+        p = tmp_path / f"s{n}.vcf"
+        line = "1\t100\t.\tA\tT\t.\t.\t.\tGT:DP\t" + "\t".join(["0/1:5"] * n)
+        p.write_text(_vcf_text([f"S{i}" for i in range(n)], [line]))
+        mt = import_vcf(spark, str(p))
+        assert mt.count_cols() == n
+        return len(mt._df._jdf.queryExecution().analyzed().toString())
+
+    small, large = plan_len(3), plan_len(300)
+    assert large <= 2 * small, (small, large)
+
+
+def test_import_vcf_sites_only(spark, tmp_path):
+    p = tmp_path / "sites.vcf"
+    p.write_text(
+        _vcf_text(
+            [],
+            ["1\t10\trs1\tA\tC\t5\tPASS\t.", "1\t20\t.\tG\tT,C\t.\tq10\t."],
+            fmt_col=False,
+        )
+    )
+    mt = import_vcf(spark, str(p))
+    assert mt.count_cols() == 0
+    rows = sorted(mt._df.collect(), key=lambda r: r["locus"]["position"])
+    assert [tuple(r["locus"]) for r in rows] == [("1", 10), ("1", 20)]
+    assert [r["alleles"] for r in rows] == [["A", "C"], ["G", "T", "C"]]
+    assert [r["rsid"] for r in rows] == ["rs1", None]
+    assert [r["qual"] for r in rows] == [5.0, None]
+    assert [r["filters"] for r in rows] == [[], ["q10"]]
+    assert [r["__entries"] for r in rows] == [[], []]
+
+
+def test_import_vcf_truncated_sample_fields(spark, tmp_path):
+    """Samples may drop trailing FORMAT fields; the missing ones are
+    NULL, and FORMAT order is per row."""
+    p = tmp_path / "trunc.vcf"
+    p.write_text(
+        _vcf_text(
+            ["A", "B"],
+            [
+                "1\t10\t.\tA\tC\t.\t.\t.\tGT:AD:DP:GQ:PL\t0|1:3,4:7\t1/1:0,9:9:40:90,9,0",
+                "1\t20\t.\tA\tC\t.\t.\t.\tDP:GT\t5:0/0\t.",
+            ],
+        )
+    )
+    rows = sorted(import_vcf(spark, str(p))._df.collect(), key=lambda r: r["locus"]["position"])
+    a, b = (e.asDict() for e in rows[0]["__entries"])
+    assert a == {"GT": 1, "GTA": [0, 1], "phased": True, "AD": [3, 4], "DP": 7, "GQ": None, "PL": None}
+    assert b == {"GT": 2, "GTA": [1, 1], "phased": False, "AD": [0, 9], "DP": 9, "GQ": 40, "PL": [90, 9, 0]}
+    a, b = (e.asDict() for e in rows[1]["__entries"])
+    assert (a["GT"], a["DP"], a["AD"]) == (0, 5, None)
+    assert b == dict.fromkeys(b, None)
+
+
+def test_import_vcf_short_data_line_fails(spark, tmp_path):
+    """A data line with fewer sample columns than the header is
+    malformed: the parse fails rather than yielding missing entries."""
+    p = tmp_path / "short.vcf"
+    p.write_text(
+        _vcf_text(["A", "B"], ["1\t10\t.\tA\tC\t.\t.\t.\tGT\t0/1"])
+    )
+    mt = import_vcf(spark, str(p))
+    with pytest.raises(Exception, match="INVALID_ARRAY_INDEX"):
+        mt._df.collect()
+
+
 def test_query_table_point_and_range(spark, tmp_path):
     from hail_spark.io.query_table import query_table, table_stats
     from hail_spark.table import Table
@@ -179,6 +256,26 @@ def test_query_table_point_and_range(spark, tmp_path):
     assert st["key"] == ["o_orderkey"] and st["n_rows"] == t.df.count()
     with pytest.raises(ValueError):
         query_table(p)
+
+
+def test_query_table_key_after_nested_column(spark, tmp_path):
+    """Parquet statistics are per LEAF column: with a struct before the
+    key, the key's top-level index names a leaf of the struct. Bounds
+    must come from the key's own leaf."""
+    from hail_spark.io.query_table import query_table, table_stats
+    from hail_spark.table import Table
+
+    df = spark.range(200).select(
+        F.struct(F.col("id").cast("int").alias("a"), (F.col("id") + 1000).cast("int").alias("b")).alias("info"),
+        F.col("id").cast("int").alias("k"),
+    )
+    p = str(tmp_path / "nested_first")
+    Table.from_spark(df, key=("k",)).write(p)
+    rows = query_table(p, point=5)
+    assert rows == [{"info": {"a": 5, "b": 1005}, "k": 5}]
+    assert sorted(r["k"] for r in query_table(p, interval=(10, 14))) == [10, 11, 12, 13, 14]
+    bounds = table_stats(p)["key_bounds"]
+    assert bounds and min(b[0] for b in bounds) == 0 and max(b[1] for b in bounds) == 199
 
 
 def test_plink_roundtrip(spark, tmp_path):

@@ -87,6 +87,38 @@ def test_sample_qc(mt, spark):
     assert out["s2"]["n_called"] == 3 and out["s2"]["n_hom_var"] == 2
 
 
+def test_qc_int64_gt_matches_int32(spark):
+    """GT arrives as int32 from import_vcf and as int64 from e.g. pandas
+    or JSON sources; QC output must not depend on the width."""
+    rows = [
+        {
+            "locus": {"contig": "1", "position": 100 + v},
+            "alleles": ["A", "T"],
+            "__entries": [
+                {"GT": g, "DP": 20 + v, "GQ": 30, "AD": [1, 19 + v]}
+                for g in ([2, 1, 0, None, 2] if v % 2 else [2, 2, 1, 0, 0])
+            ],
+        }
+        for v in range(6)
+    ]
+    cols = [{"s": f"s{j}"} for j in range(5)]
+
+    def run(gt_type):
+        df = spark.createDataFrame(
+            rows,
+            "locus struct<contig:string,position:int>, alleles array<string>, "
+            f"__entries array<struct<GT:{gt_type},DP:int,GQ:int,AD:array<int>>>",
+        )
+        m = MatrixTable(df, ("locus", "alleles"), cols, ("s",))
+        vq = sorted(qc.variant_qc(m).rows().df.select("locus", "variant_qc").collect())
+        by_s = lambda r: r["s"]  # noqa: E731
+        sq = sorted(qc.sample_qc(m).collect(), key=by_s)
+        ch = sorted(qc.compute_charr(m, min_af=0.0, max_af=1.0, min_dp=1, min_gq=1).collect(), key=by_s)
+        return vq, sq, ch
+
+    assert run("bigint") == run("int")
+
+
 def test_group_rows_by(mt):
     g = mt.group_rows_by("contig").aggregate(
         mean_dp=lambda e: F.avg(e["DP"]), n_called=lambda e: F.count(e["GT"])
