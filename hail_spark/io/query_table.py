@@ -7,10 +7,11 @@ key b-tree index (hail/hail/src/is/hail/io/index/IndexReader.scala)
 driver-side. Our native format is key-sorted parquet (Table.write,
 table.py), so the equivalent index is parquet row-group min/max
 statistics: this module opens the parquet footer(s) with pyarrow,
-prunes row groups whose [min, max] key interval misses the probe, and
-scans only the surviving groups — O(row-group) driver-side I/O, no
-cluster round trip, exactly the latency class of the reference's
-indexed reads.
+prunes row groups whose [min, max] key interval misses the probe, reads
+only the surviving groups, and selects their matching rows with one
+Arrow compute mask over the key column (no per-row Python work) —
+O(row-group) driver-side I/O, no cluster round trip, exactly the
+latency class of the reference's indexed reads.
 """
 
 from __future__ import annotations
@@ -20,6 +21,8 @@ import json
 import os
 from typing import Any
 
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 
@@ -134,13 +137,13 @@ def _manifest_files(path: str, k0: str, lo, hi) -> list[str] | None:
 
 
 def query_table(path: str, point=None, interval: tuple | None = None) -> list[dict]:
-    """Read rows whose first key field equals ``point`` (or falls in
-    ``interval=(lo, hi)`` inclusive) from a Table.write output dir.
+    """Rows whose first key equals ``point`` (or lies in ``interval=(lo,
+    hi)``, inclusive) in a Table.write output dir, read on the driver.
 
-    Runs entirely on the driver with pyarrow; the persisted key
-    manifest (written by Table.write) selects candidate FILES without
-    opening any footer, then row-group min/max stats prune within the
-    survivors — only overlapping row groups are deserialized."""
+    The key manifest picks candidate files, row-group min/max stats prune
+    within them, and one Arrow mask selects the rows of the groups read;
+    null and NaN keys never match. A struct, list or map first key (e.g.
+    a MatrixTable's ``locus``) raises ValueError before any data is read."""
     if (point is None) == (interval is None):
         raise ValueError("exactly one of point / interval is required")
     key = _key_meta(path)
@@ -155,6 +158,9 @@ def query_table(path: str, point=None, interval: tuple | None = None) -> list[di
     rows: list[dict] = []
     for fp in files:
         pf = pq.ParquetFile(fp)
+        if pa.types.is_nested(ktype := pf.schema_arrow.field(k0).type):
+            raise ValueError(f"query_table: key field {k0!r} has non-scalar type {ktype}; "
+                             "only a scalar first key can be probed")
         groups = [
             rg
             for rg, b in enumerate(_row_group_bounds(pf, k0))
@@ -163,11 +169,8 @@ def query_table(path: str, point=None, interval: tuple | None = None) -> list[di
         if not groups:
             continue
         tbl = pf.read_row_groups(groups)
-        col = tbl.column(k0).to_pylist()
-        keep = [i for i, v in enumerate(col) if v is not None and lo <= v <= hi]
-        if keep:
-            sub = tbl.take(keep).to_pylist()
-            rows.extend(sub)
+        col = tbl.column(k0)
+        rows.extend(tbl.filter(pc.and_(pc.greater_equal(col, lo), pc.less_equal(col, hi))).to_pylist())
     return rows
 
 

@@ -13,6 +13,14 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def _default_driver_memory() -> str:
+    """Half the host's physical memory: the driver JVM shares the host
+    with its Python workers and the OS page cache, so a fixed size
+    (Spark heaps grow toward it) can exceed a small machine's RAM."""
+    return f"{os.sysconf('SC_PAGE_SIZE') * os.sysconf('SC_PHYS_PAGES') // 2**21}m"
+
+
 _DEFAULTS = {
     "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
     "spark.sql.adaptive.enabled": "true",
@@ -26,7 +34,11 @@ _DEFAULTS = {
     "spark.sql.optimizer.nestedSchemaPruning.enabled": "true",
     "spark.sql.parquet.compression.codec": "zstd",
     "spark.ui.enabled": "false",
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+    # Python workers unpickle functions defined in hail_spark modules,
+    # so they need the package's parent dir on their path even when
+    # the user never exported PYTHONPATH
+    "spark.executorEnv.PYTHONPATH": os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
 }
 
 

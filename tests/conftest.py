@@ -16,9 +16,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 # SPARK_GRAFT_CPUS from the driver).
 os.environ["SPARK_GRAFT_CPUS"] = os.environ.get("SPARK_GRAFT_TEST_CPUS", "8")
 # One JVM serves the whole suite, and tests leave cached blocks behind.
-# Under the engine's 16g default the heap grows with them until the
-# kernel kills the JVM on a 16 GB host (every later test then fails to
-# connect); a bounded heap evicts and spills them instead.
+# Under a 16g heap it grew with them until the kernel killed the JVM on
+# a 16 GB host (every later test then failed to connect); a heap well
+# below the engine's default (half the host's memory) evicts and spills
+# them instead.
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
 
 from hail_spark import get_spark  # noqa: E402

@@ -2,6 +2,7 @@
 round-trip. Mirrors the reference's impex tests
 (hail/python/test/hail/methods/test_impex.py) on synthetic fixtures."""
 
+import datetime
 import textwrap
 
 import pytest
@@ -228,32 +229,89 @@ def test_import_vcf_short_data_line_fails(spark, tmp_path):
         mt._df.collect()
 
 
-def test_query_table_point_and_range(spark, tmp_path):
+# key column from an even integer v (each key on two rows), and the
+# same mapping for Python-side probes
+_QT_KEYS = {
+    "int64": (lambda v: v, lambda v: v),
+    "int32": (lambda v: v.cast("int"), lambda v: v),
+    # every 25th key pair is null (nulls sort last)
+    "string": (
+        lambda v: F.when(v % 50 == 24, None).otherwise(F.format_string("k%05d", v)),
+        lambda v: f"k{v:05d}",
+    ),
+    "date": (
+        lambda v: F.date_add(F.lit(datetime.date(2000, 1, 1)), v.cast("int")),
+        lambda v: datetime.date(2000, 1, 1) + datetime.timedelta(days=v),
+    ),
+    "double": (lambda v: v / 4.0, lambda v: v / 4.0),
+}
+
+
+@pytest.mark.parametrize("layout", ["multi_file", "multi_row_group"])
+@pytest.mark.parametrize("ktype", list(_QT_KEYS))
+def test_query_table_point_and_range(spark, tmp_path, ktype, layout):
+    """Point and interval lookups equal a Spark filter on the source for
+    every key type, across file and row-group boundaries."""
     from hail_spark.io.query_table import query_table, table_stats
     from hail_spark.table import Table
 
-    t = Table.from_spark(
-        spark.read.parquet("/root/testdata/sf0.001/orders.parquet"), key=("o_orderkey",)
+    to_col, to_key = _QT_KEYS[ktype]
+    n = 3000
+    v = F.col("id") - F.col("id") % 2
+    src = spark.range(n).select(to_col(v).alias("k"), (F.col("id") * 3).alias("p"))
+    # multi_file: one file per shuffle partition, so AQE must not
+    # coalesce the small write; multi_row_group: AQE coalesces it into
+    # few files, each cut into row groups of at most 400 rows
+    conf = (
+        {"spark.sql.adaptive.coalescePartitions.enabled": "false"}
+        if layout == "multi_file"
+        else {"parquet.block.row.count.limit": "400"}
     )
-    p = str(tmp_path / "orders_native")
-    t.write(p)
-    some = t.df.select("o_orderkey", "o_totalprice").take(5)
-    probe = some[3]["o_orderkey"]
-    rows = query_table(p, point=probe)
-    assert len(rows) == 1 and rows[0]["o_orderkey"] == probe
-    assert abs(rows[0]["o_totalprice"] - some[3]["o_totalprice"]) < 1e-9
-    # range probe vs spark filter
-    lo, hi = probe, probe + 50
-    got = sorted(r["o_orderkey"] for r in query_table(p, interval=(lo, hi)))
-    want = sorted(
-        r["o_orderkey"]
-        for r in t.df.filter((F.col("o_orderkey") >= lo) & (F.col("o_orderkey") <= hi)).collect()
-    )
-    assert got == want
-    # missing key -> empty
-    assert query_table(p, point=-99999) == []
+    old = {c: spark.conf.get(c, None) for c in conf}
+    p = str(tmp_path / "t")
+    try:
+        for c, val in conf.items():
+            spark.conf.set(c, val)
+        Table.from_spark(src, key=("k",)).write(p)
+    finally:
+        for c, val in old.items():
+            if val is None:
+                spark.conf.unset(c)
+            else:
+                spark.conf.set(c, val)
     st = table_stats(p)
-    assert st["key"] == ["o_orderkey"] and st["n_rows"] == t.df.count()
+    assert st["key"] == ["k"] and st["n_rows"] == n
+    if layout == "multi_file":
+        assert st["n_files"] >= 3
+    else:
+        assert st["n_row_groups"] >= 3 * st["n_files"]
+
+    def want(lo, hi):
+        rows = src.filter((F.col("k") >= F.lit(lo)) & (F.col("k") <= F.lit(hi))).collect()
+        return sorted((r["k"], r["p"]) for r in rows)
+
+    def got(**probe):
+        rows = query_table(p, **probe)
+        assert all(set(r) == {"k", "p"} for r in rows)
+        return sorted((r["k"], r["p"]) for r in rows)
+
+    # present: first, middle and last key; absent: odd values and
+    # values outside the key range
+    for x in (0, 1000, n - 2, 1, 1001, n + 100):
+        k = to_key(x)
+        assert got(point=k) == want(k, k), (ktype, layout, x)
+    assert len(got(point=to_key(1000))) == 2 and got(point=to_key(1001)) == []
+    # intervals spanning each of the first two file or row-group
+    # boundaries, one with absent endpoints, and the whole key range
+    keys = sorted({r["k"] for r in src.select("k").collect() if r["k"] is not None})
+    for lo_b, hi_b in st["key_bounds"][:2]:
+        i = keys.index(hi_b)
+        lo, hi = keys[i - 3], keys[i + 3]
+        res = got(interval=(lo, hi))
+        assert res == want(lo, hi) and res[0][0] <= hi_b < res[-1][0], (ktype, layout, lo, hi)
+    lo, hi = to_key(1001), to_key(1501)
+    assert got(interval=(lo, hi)) == want(lo, hi)
+    assert got(interval=(keys[0], keys[-1])) == want(keys[0], keys[-1])
     with pytest.raises(ValueError):
         query_table(p)
 
@@ -362,6 +420,18 @@ def test_query_matrix_table_rows(spark, tmp_path):
     uid = rows[0]["user_id"]
     pt = query_matrix_table_rows(p, point=uid)
     assert len(pt) == 1 and "entries" in pt[0]
+
+
+def test_query_matrix_table_rows_rejects_struct_key(spark, tmp_path, vcf_path):
+    """A VCF-imported MatrixTable is keyed by the ``locus`` struct, which
+    a scalar key range cannot order: the lookup names the field and its
+    type instead of failing inside the row filter."""
+    from hail_spark.io.query_table import query_matrix_table_rows
+
+    p = str(tmp_path / "vcf_mt")
+    import_vcf(spark, vcf_path).write(p)
+    with pytest.raises(ValueError, match=r"'locus' has non-scalar type struct<contig: string, position: int"):
+        query_matrix_table_rows(p, point={"contig": "1", "position": 100})
 
 
 def test_import_avro_pure_python_fallback(spark, tmp_path):
