@@ -1440,7 +1440,7 @@ FROM long GROUP BY user_id ORDER BY user_id
 
 
 def mt_col_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-column aggregation across all rows (sample_qc shape:
+    """Per-column aggregation across all rows (aggregate_cols_elementwise:
     posexplode + groupBy col index)."""
     mt = _events_mt(spark, sf_dir)
     out = mt.aggregate_cols_elementwise(
@@ -1683,9 +1683,9 @@ FROM long GROUP BY user_id ORDER BY user_id
 
 
 def sample_qc_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """sample_qc (ref qc.py:59): per-column QC via posexplode + groupBy
-    col index — the wide-aggregation path that scales past driver-side
-    column counts."""
+    """sample_qc (ref qc.py:59): per-column QC as one map-only
+    per-sample accumulation over the entries arrays (no per-entry
+    shuffle)."""
     from hail_spark.matrixtable import MatrixTable
     from hail_spark.methods.qc import sample_qc
 
@@ -3961,7 +3961,7 @@ ORDER BY k.user_id, id
 def charr_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """compute_charr contamination estimator (ref qc.py:1822): hom-var
     ref-read fraction scaled by in-sample ref AF, filtered on GQ/DP —
-    one posexplode + groupBy(sample), same shape as sample_qc."""
+    the same map-only per-sample accumulation as sample_qc."""
     from hail_spark.matrixtable import MatrixTable
     from hail_spark.methods.qc import compute_charr
 

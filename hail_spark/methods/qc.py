@@ -1,9 +1,14 @@
-"""QC method library — pure compositions over MatrixTable ops.
+"""QC method library — compositions over MatrixTable ops.
 
 Parity target: hail/python/hail/methods/qc.py (sample_qc :59,
-variant_qc :219). Both are aggregate compositions: variant_qc is a
-row-wise entry aggregation (array HOFs, one pass, no shuffle);
-sample_qc is a per-column aggregation (posexplode + groupBy col index).
+variant_qc :219, compute_charr :1822). variant_qc is a row-wise entry
+aggregation (array HOFs, one pass, no shuffle). sample_qc and
+compute_charr aggregate per column, as Hail's AggArrayPerElement does:
+the JVM projects each row's entries to primitive per-sample arrays, one
+map-only ``mapInArrow`` pass folds them into per-sample numpy vectors
+per partition, the partials are merged (on the executors first when
+there are many), and the driver returns the result as a local DataFrame
+(no per-entry rows; only partials are ever shuffled).
 
 Genotype calls use the int encoding of SURVEY.md §2.9 (biallelic:
 0 = hom-ref, 1 = het, 2 = hom-var, NULL = missing).
@@ -11,10 +16,17 @@ Genotype calls use the int encoding of SURVEY.md §2.9 (biallelic:
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+import pickle
+from functools import reduce
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..matrixtable import ENTRIES, MatrixTable
+from .local import local_frame
 
 
 def _defined(arr: Column, f) -> Column:
@@ -129,90 +141,200 @@ def variant_qc(mt: MatrixTable, gt_field: str = "GT", name: str = "variant_qc", 
     return out
 
 
+# Per-partition partials are merged on the executors, this many at a
+# time, until at most this many are left for the driver to merge.
+_FAN_IN = 16
+# A step folds at most this many entries (rows × columns) at once, so its
+# dense numpy matrices stay bounded whatever the column count.
+_STEP_CELLS = 1 << 22
+
+
+def _per_sample(df: DataFrame, n: int, zero, step, merge, what: str):
+    """Fold every row of ``df`` into per-sample totals, map-only.
+
+    ``df``'s first column is an array with one slot per matrix column;
+    rows where it is NULL are skipped, and a row of any other length
+    raises. ``step`` turns an Arrow batch of at most ``_STEP_CELLS // n``
+    of the remaining rows into a partial result, ``merge`` combines two
+    of them and ``zero`` is the partial of no rows. Each partition folds
+    its rows into one partial; the executors merge those ``_FAN_IN`` at
+    a time until at most ``_FAN_IN`` are left, and the driver merges
+    those in order. So the driver holds ``_FAN_IN`` partials of O(n)
+    numbers each, whatever the partition count."""
+    step_rows = max(1, _STEP_CELLS // max(n, 1))
+
+    def run(batches):
+        acc = zero
+        for b in batches:
+            b = b.filter(b.column(0).is_valid())
+            lens = pc.list_value_length(b.column(0)).to_numpy()
+            if (lens != n).any():
+                raise ValueError(
+                    f"{what}: a row's {ENTRIES} has {lens[lens != n][0]} entries "
+                    f"but the matrix has {n} columns"
+                )
+            for i in range(0, b.num_rows, step_rows):
+                acc = merge(acc, step(b.slice(i, step_rows)))
+        yield pa.RecordBatch.from_pydict({"acc": [pickle.dumps(acc)]})
+
+    def fold(batches):
+        acc = zero
+        for b in batches:
+            for part in b.column(0).to_pylist():
+                acc = merge(acc, pickle.loads(part))
+        yield pa.RecordBatch.from_pydict({"acc": [pickle.dumps(acc)]})
+
+    parts = df.mapInArrow(run, "acc binary")
+    # Counting the partitions plans the RDD, which runs any shuffle in
+    # ``df``'s plan; collecting the same RDD does not run it again. The
+    # merge rounds plan anew, so ``df``'s shuffles run twice when there
+    # are more than _FAN_IN partials.
+    rdd = parts.rdd
+    k = rdd.getNumPartitions()
+    if k > _FAN_IN:
+        while k > _FAN_IN:
+            k = -(-k // _FAN_IN)
+            parts = parts.repartition(k).mapInArrow(fold, "acc binary")
+        rdd = parts.rdd
+    return reduce(merge, (pickle.loads(r[0]) for r in rdd.collect()), zero)
+
+
+def _masked(col: pa.ListArray, n: int) -> tuple[np.ndarray, np.ndarray]:
+    """(values, defined) matrices, one row per list, of an array<double>
+    column whose lists all have ``n`` slots; NULL slots hold 0."""
+    flat = col.flatten()
+    ok = flat.is_valid().to_numpy(zero_copy_only=False).reshape(-1, n)
+    return flat.fill_null(0.0).to_numpy(zero_copy_only=False).reshape(-1, n), ok
+
+
+def _moments(x: np.ndarray, ok: np.ndarray) -> tuple:
+    """Per column of ``x``: count, sum, centred sum of squares, min and
+    max of the defined values."""
+    cnt = ok.sum(axis=0)
+    s1 = x.sum(axis=0, where=ok)
+    with np.errstate(invalid="ignore", divide="ignore"):
+        m2 = ((x - s1 / cnt) ** 2).sum(axis=0, where=ok)
+    return cnt, s1, m2, x.min(axis=0, where=ok, initial=np.inf), x.max(axis=0, where=ok, initial=-np.inf)
+
+
+def _merge_moments(a: tuple, b: tuple) -> tuple:
+    """Chan, Golub & LeVeque's pairwise update: the centred sums of
+    squares combine without the cancellation of sum(x^2) - n mean^2."""
+    (n1, s1, m1, lo1, hi1), (n2, s2, m2, lo2, hi2) = a, b
+    n = n1 + n2
+    with np.errstate(invalid="ignore", divide="ignore"):
+        d = s2 / n2 - s1 / n1
+        cross = np.where(n1 * n2 > 0, d * d * n1 * n2 / n, 0.0)
+    return n, s1 + s2, m1 + m2 + cross, np.minimum(lo1, lo2), np.maximum(hi1, hi2)
+
+
+_CALL_COUNTS = (
+    "n_total", "n_called", "n_filtered", "n_het", "n_hom_ref", "n_hom_var", "n_non_ref",
+    "n_singleton",
+)
+_ALLELE_COUNTS = ("n_snp", "n_insertion", "n_deletion", "n_transition", "n_transversion", "n_star")
+
+
 def sample_qc(mt: MatrixTable, gt_field: str = "GT"):
     """Per-column (sample) QC DataFrame (ref qc.py:59 field set):
     counts/call_rate, n_filtered, dp_stats/gq_stats when DP/GQ entries
-    exist, n_singleton (private AC==1 alleles — needs the per-row AC,
-    computed in the same HOF pass), r_het_hom_var, and when the matrix
-    carries ``alleles`` rows also n_snp/n_insertion/n_deletion/
-    n_transition/n_transversion/n_star with r_ti_tv and
-    r_insertion_deletion. One posexplode + per-column hash agg (the
-    distributed wide-aggregation path); the per-row AC and allele-type
-    category ride the exploded rows as derived columns — no second
-    pass."""
+    exist, n_singleton (private AC==1 alleles), r_het_hom_var, and when
+    the matrix carries ``alleles`` rows also n_snp/n_insertion/
+    n_deletion/n_transition/n_transversion/n_star (alt-allele dosage)
+    with r_ti_tv and r_insertion_deletion. One row per column, in
+    column order, followed by the column fields.
+
+    Hail's AggArrayPerElement shape, map-only: the JVM projects each
+    row to a GT code array (-2 missing entry, -1 missing call), DP/GQ
+    as ``array<double>`` and one allele-category flag array; one
+    ``mapInArrow`` pass folds those into per-sample numpy count and
+    moment vectors per partition; the executors merge the partials
+    until few are left, and the driver merges those and returns a local
+    DataFrame. The driver holds at most ``_FAN_IN`` partials of about
+    24 numbers per sample, whatever the partition count. A worker's
+    Arrow input batch holds at most
+    ``spark.sql.execution.arrow.maxBytesPerBatch`` (64 MB by default),
+    and each numpy step at most ``_STEP_CELLS`` entries, so worker
+    memory does not grow with the sample count either. The job runs
+    when ``sample_qc`` is called. Rows with NULL entries are skipped;
+    without any row every statistic is NULL; an entries array whose
+    length is not the column count raises."""
     from ..expr import functions as hf
 
-    spark = mt._df.sparkSession
-    entry_names = {f.name for f in mt._df.schema[ENTRIES].dataType.elementType.fields}
+    n = len(mt._cols)
+    stat_fields = [f for f in ("DP", "GQ") if f in _entry_names(mt)]
     has_alleles = "alleles" in mt._df.columns
     e = F.col(ENTRIES)
-    gts = F.transform(e, lambda x: x[gt_field])
-    ac1 = _gt_sum(F.filter(gts, lambda g: g.isNotNull()))
-    row_cols = [F.posexplode(e).alias("__s", "__e"), ac1.alias("__ac")]
-    if has_alleles:
-        ref = F.element_at("alleles", 1)
-        alt = F.element_at("alleles", 2)
-        row_cols += [
-            hf.allele_type(ref, alt).alias("__atype"),
-            hf.is_transition(ref, alt).alias("__ti"),
-            hf.is_transversion(ref, alt).alias("__tv"),
-        ]
-    long = mt._df.select(*row_cols)
-    g = F.col("__e")[gt_field]
-    aggs = [
-        F.count(F.lit(1)).alias("n_total"),
-        F.count(g).alias("n_called"),
-        F.count(F.when(F.col("__e").isNull(), 1)).alias("n_filtered"),
-        F.count(F.when(g == 1, 1)).alias("n_het"),
-        F.count(F.when(g == 0, 1)).alias("n_hom_ref"),
-        F.count(F.when(g == 2, 1)).alias("n_hom_var"),
-        F.count(F.when(g > 0, 1)).alias("n_non_ref"),
-        (F.count(g).cast("double") / F.count(F.lit(1))).alias("call_rate"),
-        F.count(F.when((F.col("__ac") == 1) & (g == 1), 1)).alias("n_singleton"),
+    proj = [
+        F.transform(
+            e,
+            lambda x: F.when(x.isNull(), F.lit(-2)).otherwise(
+                F.coalesce(x[gt_field].cast("int"), F.lit(-1))
+            ),
+        ).alias("gt")
     ]
-    for fld, out_name in (("DP", "dp_stats"), ("GQ", "gq_stats")):
-        if fld in entry_names:
-            v = F.col("__e")[fld].cast("double")
-            aggs.append(
-                F.struct(
-                    F.avg(v).alias("mean"),
-                    F.stddev_pop(v).alias("stdev"),
-                    F.min(v).alias("min"),
-                    F.max(v).alias("max"),
-                ).alias(out_name)
-            )
+    proj += [F.transform(e, lambda x: x[f].cast("double")).alias(f) for f in stat_fields]
     if has_alleles:
-        # allele-level counts (ref qc.py:173-200): each call contributes
-        # its alt-allele DOSAGE (het → 1, hom-var → 2), not 1 per
-        # genotype — hom-var calls carry two copies of the alt allele
-        nonref = g > 0
-        dose = F.when(nonref, g.cast("bigint")).otherwise(F.lit(0))
-        aggs += [
-            F.sum(F.when(F.col("__atype") == "SNP", dose).otherwise(0)).cast("bigint").alias("n_snp"),
-            F.sum(F.when(F.col("__atype") == "Insertion", dose).otherwise(0)).cast("bigint").alias("n_insertion"),
-            F.sum(F.when(F.col("__atype") == "Deletion", dose).otherwise(0)).cast("bigint").alias("n_deletion"),
-            F.sum(F.when(F.col("__ti"), dose).otherwise(0)).cast("bigint").alias("n_transition"),
-            F.sum(F.when(F.col("__tv"), dose).otherwise(0)).cast("bigint").alias("n_transversion"),
-            F.sum(F.when(F.col("__atype") == "Star", dose).otherwise(0)).cast("bigint").alias("n_star"),
-        ]
-    per_idx = long.groupBy("__s").agg(*aggs)
-    ratios = [
-        F.when(F.col("n_hom_var") > 0, F.col("n_het") / F.col("n_hom_var")).alias(
-            "r_het_hom_var"
+        ref, alt = F.element_at("alleles", 1), F.element_at("alleles", 2)
+        atype = hf.allele_type(ref, alt)
+        flags = (
+            atype == "SNP", atype == "Insertion", atype == "Deletion",
+            hf.is_transition(ref, alt), hf.is_transversion(ref, alt), atype == "Star",
         )
-    ]
-    if has_alleles:
-        ratios += [
-            F.when(F.col("n_transversion") > 0, F.col("n_transition") / F.col("n_transversion")).alias("r_ti_tv"),
-            F.when(F.col("n_deletion") > 0, F.col("n_insertion") / F.col("n_deletion")).alias("r_insertion_deletion"),
+        proj.append(F.array(*[F.coalesce(c, F.lit(False)) for c in flags]).alias("flags"))
+    n_stats = len(stat_fields)
+
+    def step(b):
+        G = b.column(0).flatten().to_numpy(zero_copy_only=False).reshape(-1, n)
+        called = G >= 0
+        ac = np.where(called, G, 0).sum(axis=1)
+        counts = [
+            np.full(n, len(G)), called.sum(axis=0), (G == -2).sum(axis=0),
+            (G == 1).sum(axis=0), (G == 0).sum(axis=0), (G == 2).sum(axis=0),
+            (G > 0).sum(axis=0), ((ac == 1)[:, None] & (G == 1)).sum(axis=0),
         ]
-    per_idx = per_idx.select("*", *ratios).withColumn(
-        "n_not_called", F.col("n_total") - F.col("n_called")
+        if has_alleles:
+            cats = b.column(1 + n_stats).flatten().to_numpy(zero_copy_only=False)
+            cats = cats.reshape(-1, len(_ALLELE_COUNTS)).T.astype(np.int64)
+            counts.extend(cats @ np.where(G > 0, G, 0))
+        moments = [_moments(*_masked(b.column(1 + i), n)) for i in range(n_stats)]
+        return np.array(counts, dtype=np.int64), moments
+
+    def merge(a, b):
+        return a[0] + b[0], [_merge_moments(x, y) for x, y in zip(a[1], b[1])]
+
+    zero = (
+        np.zeros((len(_CALL_COUNTS) + len(_ALLELE_COUNTS) * has_alleles, n), np.int64),
+        [_moments(np.zeros((0, n)), np.zeros((0, n), bool))] * n_stats,
     )
-    col_df = spark.createDataFrame(
-        [{"__s": i, **c} for i, c in enumerate(mt._cols)]
-    )
-    return F.broadcast(per_idx).join(col_df, on="__s", how="right").drop("__s")
+    counts, moments = _per_sample(mt._df.select(*proj), n, zero, step, merge, "sample_qc")
+    c = dict(zip(_CALL_COUNTS + _ALLELE_COUNTS, counts))
+    absent = c["n_total"] == 0
+
+    def col(v, null=False):
+        return pa.array(v, mask=absent | null)
+
+    with np.errstate(invalid="ignore", divide="ignore"):
+        def ratio(a, b):
+            return col(c[a] / c[b], c[b] == 0)
+
+        out = {f: col(c[f]) for f in _CALL_COUNTS[:-1]}
+        out["call_rate"] = ratio("n_called", "n_total")
+        out["n_singleton"] = col(c["n_singleton"])
+        for f, (cnt, s1, m2, lo, hi) in zip(stat_fields, moments):
+            out[f"{f.lower()}_stats"] = pa.StructArray.from_arrays(
+                [pa.array(v, mask=cnt == 0) for v in (s1 / cnt, np.sqrt(m2 / cnt), lo, hi)],
+                names=["mean", "stdev", "min", "max"],
+                mask=pa.array(absent),
+            )
+        if has_alleles:
+            out.update({f: col(c[f]) for f in _ALLELE_COUNTS})
+        out["r_het_hom_var"] = ratio("n_het", "n_hom_var")
+        if has_alleles:
+            out["r_ti_tv"] = ratio("n_transition", "n_transversion")
+            out["r_insertion_deletion"] = ratio("n_insertion", "n_deletion")
+        out["n_not_called"] = col(c["n_total"] - c["n_called"])
+    return local_frame(mt._df.sparkSession, mt._cols, pa.table(out))
 
 
 def hwe_expected_het_freq(af: Column) -> Column:
@@ -276,12 +398,12 @@ def compute_charr(
     external AF below 10k samples but we default to the in-sample
     estimate: 1 - sum(GT)/2N over called entries).
 
-    One posexplode + groupBy(sample index) — the same single-shuffle
-    wide-aggregation shape as sample_qc.
+    Same map-only per-sample accumulation as sample_qc: the JVM projects
+    each kept row to its ref-read fractions (NULL for filtered entries)
+    and ref_AF, and the Python workers sum the scaled fractions and
+    count them per sample (two numbers per sample and partial, merged
+    like sample_qc's). A sample with no kept entry gets NULL.
     """
-    from pyspark.sql import DataFrame  # noqa: F401
-
-    df = mt._df
     ents = F.col(ENTRIES)
     if ref_af_field:
         ref_af = F.col(ref_af_field)
@@ -292,31 +414,40 @@ def compute_charr(
             an > 0,
             1.0 - _gt_sum(gts).cast("double") / an,
         )
-    filtered = df.where(F.size("alleles") == 2) if "alleles" in df.columns else df
-    long = (
-        filtered.select(ref_af.alias("__raf"), ents.alias("__es"))
-        .where((F.col("__raf") > min_af) & (F.col("__raf") < max_af))
-        .select("__raf", F.posexplode("__es").alias("__idx", "__e"))
+    has_dp = "DP" in _entry_names(mt)
+
+    def ref_fraction(e):
+        ad = e[ad_field]
+        dp = F.coalesce(e["DP"] if has_dp else F.lit(None).cast("int"),
+                        F.element_at(ad, 1) + F.element_at(ad, 2))
+        kept = (e[gt_field] == 2) & (e["GQ"] >= min_gq) & dp.between(min_dp, max_dp) & ad.isNotNull()
+        ad0 = F.element_at(ad, 1).cast("double")
+        ad1 = F.element_at(ad, 2).cast("double")
+        return F.when(kept, ad0 / (ad0 + ad1))
+
+    df = mt._df
+    if "alleles" in df.columns:
+        df = df.where(F.size("alleles") == 2)
+    rows = (
+        df.select(ents.alias(ENTRIES), ref_af.alias("raf"))
+        .where((F.col("raf") > min_af) & (F.col("raf") < max_af))
+        .select(F.transform(ENTRIES, ref_fraction).alias("frac"), "raf")
     )
-    e = F.col("__e")
-    dp = F.coalesce(e["DP"] if "DP" in _entry_names(mt) else F.lit(None).cast("int"),
-                    F.element_at(e[ad_field], 1) + F.element_at(e[ad_field], 2))
-    kept = long.where(
-        (e[gt_field] == 2)
-        & (e["GQ"] >= min_gq)
-        & dp.between(min_dp, max_dp)
-        & e[ad_field].isNotNull()
+    n = len(mt._cols)
+
+    def step(b):
+        x, ok = _masked(b.column(0), n)
+        raf = b.column(1).to_numpy(zero_copy_only=False)[:, None]
+        return (x / raf).sum(axis=0, where=ok), ok.sum(axis=0)
+
+    total, count = _per_sample(
+        rows, n, (np.zeros(n), np.zeros(n, np.int64)), step,
+        lambda a, b: (a[0] + b[0], a[1] + b[1]), "compute_charr",
     )
-    ad0 = F.element_at(e[ad_field], 1).cast("double")
-    ad1 = F.element_at(e[ad_field], 2).cast("double")
-    per_idx = kept.groupBy("__idx").agg(
-        F.avg((ad0 / (ad0 + ad1)) / F.col("__raf")).alias("charr")
-    )
-    spark = df.sparkSession
-    col_df = spark.createDataFrame([{"__idx": i, **c} for i, c in enumerate(mt._cols)])
-    return (
-        F.broadcast(per_idx).join(col_df, on="__idx", how="right")
-        .select(*[k for k in mt._col_key], "charr")
+    with np.errstate(invalid="ignore", divide="ignore"):
+        charr = pa.array(total / count, mask=count == 0)
+    return local_frame(df.sparkSession, mt._cols, pa.table({"charr": charr})).select(
+        *mt._col_key, "charr"
     )
 
 

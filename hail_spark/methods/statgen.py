@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from ..expr.stats import pchisqtail, pgenchisq, pnorm, pT
 from ..matrixtable import ENTRIES, MatrixTable
+from .local import local_frame
 
 
 def _col_vector(mt: MatrixTable, y) -> np.ndarray:
@@ -104,6 +105,18 @@ def _entry_matrix(pdf_entries: pd.Series, field: str, n: int) -> np.ndarray:
                 if v is not None:
                     out[i, j] = v
     return out
+
+
+def _scores_frame(mt: MatrixTable, scores: np.ndarray) -> DataFrame:
+    """PCA scores as a local DataFrame: the column key fields and
+    ``scores`` (sorted by name), one row per column in column order."""
+    return local_frame(
+        mt._df.sparkSession,
+        [
+            {**{kf: c[kf] for kf in mt._col_key}, "scores": scores[i].tolist()}
+            for i, c in enumerate(mt._cols)
+        ],
+    )
 
 
 def _mean_impute(X: np.ndarray) -> np.ndarray:
@@ -423,12 +436,7 @@ def pca(
     evals_k = evals[order]
     V = evecs[:, order]
     scores = V * np.sqrt(np.maximum(evals_k, 0.0))
-    scores_df = spark.createDataFrame(
-        [
-            {**{kf: c[kf] for kf in mt._col_key}, "scores": scores[i].tolist()}
-            for i, c in enumerate(mt._cols)
-        ]
-    )
+    scores_df = _scores_frame(mt, scores)
     loadings_df = None
     if compute_loadings:
         bV = spark.sparkContext.broadcast(
@@ -526,12 +534,7 @@ def hwe_normalized_pca(
     evals_k = evals[order]
     V = evecs[:, order]  # n_samples × k
     scores = V * np.sqrt(np.maximum(evals_k, 0.0))
-    scores_df = spark.createDataFrame(
-        [
-            {**{kf: c[kf] for kf in mt._col_key}, "scores": scores[i].tolist()}
-            for i, c in enumerate(mt._cols)
-        ]
-    )
+    scores_df = _scores_frame(mt, scores)
     loadings_df = None
     if compute_loadings:
         bV = spark.sparkContext.broadcast(V / np.sqrt(np.maximum(evals_k, 1e-300)))
@@ -827,12 +830,7 @@ def _blanczos_pca(
     Vbm = K.matmul(BlockMatrix.from_numpy(spark, P, block_size))  # n × k
     V = Vbm.to_numpy()
     scores = V * np.sqrt(evals_k)
-    scores_df = spark.createDataFrame(
-        [
-            {**{kf: c[kf] for kf in mt._col_key}, "scores": scores[i].tolist()}
-            for i, c in enumerate(mt._cols)
-        ]
-    )
+    scores_df = _scores_frame(mt, scores)
     loadings_df = None
     if compute_loadings:
         Vs = V / np.sqrt(np.maximum(evals_k, 1e-300))
