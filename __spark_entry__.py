@@ -757,10 +757,8 @@ FROM events
 """
 
 
-
-
 # ===================================================================== #
-# LLM-data pipeline operators (dedup / similarity / text analysis)
+# LLM-data pipeline operators (dedup / text analysis)
 # ===================================================================== #
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: hash-groupBy on content hash, keep smallest id."""
@@ -1203,100 +1201,6 @@ WHERE cos >= 0.4 ORDER BY id_a, id_b
 """
 
 
-def ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-k (query set broadcast, one corpus scan)."""
-    from hail_spark.llmdata import similarity
-
-    e = _t(spark, sf_dir, "embeddings").df
-    q = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    out = similarity.brute_force_topk(e, q, k=10)
-    return out.select(
-        "q_id", "rank", "vec_id", F.round(F.col("cosine"), 6).alias("cosine")
-    ).orderBy("q_id", "rank")
-
-
-_ANN_SQL = """
-WITH q AS (SELECT vec_id q_id, embedding q_vec FROM embeddings WHERE vec_id < 5),
-scored AS (
-  SELECT q.q_id, e.vec_id,
-         list_aggregate(list_transform(range(1, 65),
-             i -> e.embedding[i]::DOUBLE * q.q_vec[i]::DOUBLE), 'sum')
-         / (sqrt(list_aggregate(list_transform(range(1, 65),
-             i -> e.embedding[i]::DOUBLE * e.embedding[i]::DOUBLE), 'sum'))
-          * sqrt(list_aggregate(list_transform(range(1, 65),
-             i -> q.q_vec[i]::DOUBLE * q.q_vec[i]::DOUBLE), 'sum'))) AS cos
-  FROM embeddings e, q),
-ranked AS (SELECT q_id, vec_id, cos,
-                  row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) rank
-           FROM scored)
-SELECT q_id, CAST(rank AS INT) AS rank, vec_id, round(cos, 6) AS cosine
-FROM ranked WHERE rank <= 10 ORDER BY q_id, rank
-"""
-
-
-def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-bucketed ANN (scale path): nlist=16 cells, probe 4. Seeds are
-    md5-rank deterministic, assignment is a zero-shuffle argmax over the
-    inlined codebook — the whole pipeline replays as DuckDB SQL."""
-    from hail_spark.llmdata import similarity
-
-    e = _t(spark, sf_dir, "embeddings").df
-    q = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    assigned, cents = similarity.ivf_build(e, nlist=16)
-    out = similarity.ivf_topk(assigned, cents, q, k=10, nprobe=4)
-    return out.select(
-        "q_id", "rank", "vec_id", F.round(F.col("cosine"), 6).alias("cosine")
-    ).orderBy("q_id", "rank")
-
-
-def _cos_sql(a: str, b: str, dim: int = 64) -> str:
-    """DuckDB cosine mirroring llmdata.dedup.cosine's fold order."""
-    def ss(v: str) -> str:
-        return (
-            f"list_aggregate(list_transform(range(1, {dim + 1}), "
-            f"i -> {v}[i]::DOUBLE * {v}[i]::DOUBLE), 'sum')"
-        )
-
-    dot = (
-        f"list_aggregate(list_transform(range(1, {dim + 1}), "
-        f"i -> {a}[i]::DOUBLE * {b}[i]::DOUBLE), 'sum')"
-    )
-    return f"({dot} / (sqrt({ss(a)}) * sqrt({ss(b)})))"
-
-
-_IVF_SQL = f"""
-WITH cents AS (
-  SELECT (row_number() OVER (ORDER BY h)) - 1 AS cell, c_vec
-  FROM (SELECT md5(CAST(vec_id AS VARCHAR)) AS h, embedding AS c_vec
-        FROM embeddings ORDER BY h LIMIT 16)),
-q AS (SELECT vec_id AS q_id, embedding AS q_vec FROM embeddings WHERE vec_id < 5),
-assigned AS (
-  SELECT vec_id, embedding, cell FROM (
-    SELECT e.vec_id, e.embedding, c.cell,
-           row_number() OVER (PARTITION BY e.vec_id
-               ORDER BY {_cos_sql('e.embedding', 'c.c_vec')} DESC, c.cell) AS rk
-    FROM embeddings e CROSS JOIN cents c) WHERE rk = 1),
-probes AS (
-  SELECT q_id, q_vec, cell FROM (
-    SELECT q.q_id, q.q_vec, c.cell,
-           row_number() OVER (PARTITION BY q.q_id
-               ORDER BY {_cos_sql('q.q_vec', 'c.c_vec')} DESC, c.cell) AS rk
-    FROM q CROSS JOIN cents c) WHERE rk <= 4),
-scored AS (
-  SELECT p.q_id, a.vec_id, {_cos_sql('a.embedding', 'p.q_vec')} AS cos
-  FROM assigned a JOIN probes p USING (cell)),
-ranked AS (SELECT q_id, vec_id, cos,
-                  row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rank
-           FROM scored)
-SELECT q_id, CAST(rank AS INT) AS rank, vec_id, round(cos, 6) AS cosine
-FROM ranked WHERE rank <= 10 ORDER BY q_id, rank
-"""
-
-
 def token_vocab_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed vocabulary build over the corpus: term frequency,
     document frequency, and smoothed idf per token, top-50 by df
@@ -1381,7 +1285,6 @@ SELECT doc_id,
   fingerprint
 FROM feat ORDER BY doc_id
 """
-
 
 
 # ===================================================================== #
@@ -2438,7 +2341,6 @@ FROM calls GROUP BY event_type ORDER BY event_type
 """
 
 
-
 # ===================================================================== #
 # function-library batteries + multiway zip (SURVEY.md §2.9 / §2.3)
 # ===================================================================== #
@@ -2923,338 +2825,6 @@ SELECT user_id, event_type,
        COUNT(*) AS n
 FROM events WHERE user_id BETWEEN 10 AND 60
 GROUP BY user_id, event_type ORDER BY user_id, event_type
-"""
-
-
-def multimodal_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal binary-column pipeline: documents → binary assets →
-    stub-decoded image metadata + embedding + audio features, joined on
-    asset_id. Decode is a deterministic stub (no codec libs in this
-    container); the oracle recomputes the same stubs locally (pyarrow +
-    hashlib, no Spark) and compares via a VALUES literal — verifying the
-    distributed plumbing (binary columns, Arrow batches, map-only
-    extraction, 3-way join) against a direct local evaluation."""
-    from hail_spark.llmdata import multimodal as mm
-
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .filter(F.col("doc_id") < 200)
-        .collect()
-    )
-    assets = mm.make_asset_table(
-        spark,
-        [
-            {"asset_id": d["doc_id"], "content": d["text"].encode(), "source": d["source"]}
-            for d in docs
-        ],
-        "image",
-    )
-    meta = mm.image_metadata(assets)
-    emb = mm.image_embed(assets, dim=8)
-    au = mm.audio_features(assets)
-    out = (
-        meta.join(emb, "asset_id")
-        .join(au, "asset_id")
-        .select(
-            "asset_id",
-            "width",
-            "height",
-            "channels",
-            F.round(F.aggregate("embedding", F.lit(0.0), lambda a, x: a + x), 6).alias(
-                "emb_sum"
-            ),
-            "n_samples",
-            F.round("rms", 6).alias("rms"),
-        )
-    )
-    return out.orderBy("asset_id")
-
-
-def _multimodal_oracle_sql() -> str:
-    """Local (non-Spark) replay of multimodal_pipeline: the same stub
-    codecs applied row-by-row over the same 200 documents with pyarrow +
-    hashlib, emitted as a VALUES literal for DuckDB. The gate runs at
-    sf0.01; set SPARK_GRAFT_ORACLE_SF_DIR to check other scales."""
-    import numpy as np
-    import pyarrow.parquet as pq
-
-    from hail_spark.llmdata.multimodal import (
-        _decode_audio_stub,
-        _decode_image_stub,
-    )
-
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    tb = pq.read_table(f"{sf_dir}/documents.parquet", columns=["doc_id", "text"])
-    rows = []
-    for doc_id, text in sorted(zip(tb["doc_id"].to_pylist(), tb["text"].to_pylist())):
-        if doc_id >= 200:
-            continue
-        content = text.encode()
-        arr = _decode_image_stub(content).astype(np.float32) / 255.0
-        vec = np.resize(arr.mean(axis=2).ravel(), 8).tolist()
-        acc = 0.0  # same left fold as F.aggregate(embedding, 0.0, +)
-        for v in vec:
-            acc += float(v)
-        w = _decode_audio_stub(content)
-        rms = float(np.sqrt(np.mean(w**2)))
-        rows.append(f"({doc_id}, 8, 8, 3, {acc!r}, {len(w)}, {rms!r})")
-    vals = ",\n".join(rows)
-    return f"""
-SELECT CAST(asset_id AS BIGINT) AS asset_id, CAST(width AS INT) AS width,
-       CAST(height AS INT) AS height, CAST(channels AS INT) AS channels,
-       round(CAST(emb_sum AS DOUBLE), 6) AS emb_sum, CAST(n_samples AS BIGINT) AS n_samples,
-       round(CAST(rms AS DOUBLE), 6) AS rms
-FROM (VALUES {vals}) AS t(asset_id, width, height, channels, emb_sum, n_samples, rms)
-ORDER BY asset_id
-"""
-
-
-def image_near_dup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual image near-dup as a first-class operator
-    (llmdata/multimodal.py image_dhash + similarity.py
-    hamming_near_dup_pairs): 120 REAL 8x9 24-bit BMP fixtures built
-    distributed (mapInPandas encode) from deterministic per-doc
-    brightness columns — groups of 3 docs share a base image, the
-    third member's last column is perturbed so exactly one comparison
-    flips in all 8 rows (dHash distance exactly 8). The Spark side
-    runs the full encode → decode → grayscale → dHash → banded
-    pigeonhole join → bit_count(xor) verify pipeline; the oracle
-    replays the dHash CLOSED FORM from the same brightness formula and
-    the pair set arithmetically — an end-to-end conformance check of
-    codec + hash + band join."""
-    from pyspark.sql import Window as W
-
-    from hail_spark.llmdata.multimodal import encode_bmp, image_near_dup
-
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id")
-        .orderBy("doc_id")
-        .limit(120)
-    )
-    fixture = docs.select(
-        (F.row_number().over(W.orderBy("doc_id")) - 1).alias("rn")
-    ).select(
-        "rn",
-        (F.col("rn") / 3).cast("int").alias("g"),
-        (F.col("rn") % 3).alias("m"),
-    )
-
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            ids, blobs = [], []
-            for rn, g, m in zip(pdf["rn"], pdf["g"], pdf["m"]):
-                base = [30 + ((int(g) * 17 + j * 29) % 150) for j in range(8)]
-                rowv = base + [10 if int(m) == 2 else 200]
-                arr = np.tile(
-                    np.array(rowv, dtype=np.uint8)[None, :, None], (8, 1, 3)
-                )
-                ids.append(int(rn))
-                blobs.append(encode_bmp(arr))
-            yield pd.DataFrame({"asset_id": ids, "content": blobs})
-
-    assets = fixture.mapInPandas(gen, schema="asset_id bigint, content binary")
-    pairs = image_near_dup(assets, max_hamming=8, hash_size=8)
-    return pairs.select(
-        F.col("id_a").cast("long").alias("id_a"),
-        F.col("id_b").cast("long").alias("id_b"),
-        F.col("hamming").cast("long").alias("hamming"),
-    ).orderBy("id_a", "id_b")
-
-
-# dHash closed form: every fixture row is identical, so each 32-bit
-# word is the 8-comparison byte replicated 4x and the 64-bit distance
-# is 8 * bit_count(byte_a XOR byte_b); px[j] for j<8 is the base
-# formula, the j=8 column is 200 (members 0/1) or 10 (member 2).
-_IMAGE_NEAR_DUP_SQL = """
-WITH docs AS (SELECT doc_id FROM documents ORDER BY doc_id LIMIT 120),
-mem AS (SELECT (row_number() OVER (ORDER BY doc_id) - 1) AS rn FROM docs),
-gm AS (SELECT rn, rn // 3 AS g, rn % 3 AS m FROM mem),
-bits AS (SELECT rn,
-           CASE WHEN (CASE WHEN j + 1 = 8
-                           THEN (CASE WHEN m = 2 THEN 10 ELSE 200 END)
-                           ELSE 30 + ((g * 17 + (j + 1) * 29) % 150) END)
-                   > (30 + ((g * 17 + j * 29) % 150))
-                THEN 1 ELSE 0 END AS bit, j
-         FROM gm, unnest(range(8)) AS t(j)),
-byte AS (SELECT rn, CAST(SUM(bit * (1 << j)) AS BIGINT) AS bp
-         FROM bits GROUP BY rn)
-SELECT CAST(a.rn AS BIGINT) AS id_a, CAST(b.rn AS BIGINT) AS id_b,
-       CAST(8 * bit_count(xor(a.bp, b.bp)) AS BIGINT) AS hamming
-FROM byte a JOIN byte b ON a.rn < b.rn
-WHERE 8 * bit_count(xor(a.bp, b.bp)) <= 8
-ORDER BY id_a, id_b
-"""
-
-
-def audio_near_dup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual audio near-dup (llmdata/multimodal.py
-    audio_fingerprint + similarity.hamming_near_dup_pairs): 120 REAL
-    16-bit PCM WAV fixtures built distributed from deterministic
-    per-doc window amplitudes (multiplicative-hash envelope so groups
-    are mutually distant; groups of 3: two identical + one last-window
-    perturbation flipping exactly one energy comparison).
-    Spark runs the full PCM encode → decode → windowed-RMS →
-    energy-delta bits → banded Hamming join; the oracle replays the
-    bit pattern CLOSED FORM from the amplitude formula (RMS of a
-    constant window is |A|/32768, strictly monotone in |A|) — the
-    audio sibling of image_near_dup_assets."""
-    from pyspark.sql import Window as W
-
-    from hail_spark.llmdata.multimodal import audio_near_dup, encode_wav_pcm16
-
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id")
-        .orderBy("doc_id")
-        .limit(120)
-    )
-    fixture = docs.select(
-        (F.row_number().over(W.orderBy("doc_id")) - 1).alias("rn")
-    ).select(
-        "rn",
-        (F.col("rn") / 3).cast("int").alias("g"),
-        (F.col("rn") % 3).alias("m"),
-    )
-
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            ids, blobs = [], []
-            for rn, g, m in zip(pdf["rn"], pdf["g"], pdf["m"]):
-                amps = [
-                    100 + ((int(g) + 1) * (w + 7) * 2654435761 % 4096)
-                    for w in range(64)
-                ] + [10 if int(m) == 2 else 30000]
-                wave = np.repeat(np.array(amps, dtype=np.int16), 32)
-                ids.append(int(rn))
-                blobs.append(encode_wav_pcm16(wave))
-            yield pd.DataFrame({"asset_id": ids, "content": blobs})
-
-    assets = fixture.mapInPandas(gen, schema="asset_id bigint, content binary")
-    pairs = audio_near_dup(assets, max_hamming=4, n_windows=65)
-    return pairs.select(
-        F.col("id_a").cast("long").alias("id_a"),
-        F.col("id_b").cast("long").alias("id_b"),
-        F.col("hamming").cast("long").alias("hamming"),
-    ).orderBy("id_a", "id_b")
-
-
-# energy-delta closed form: window RMS of a constant-amplitude window
-# is |A|/32768 (strictly monotone in A for positive A), so bit[w] =
-# amp(w+1) > amp(w); the w=64 window is 3000 (members 0/1) or 50
-# (member 2).
-_AUDIO_NEAR_DUP_SQL = """
-WITH docs AS (SELECT doc_id FROM documents ORDER BY doc_id LIMIT 120),
-mem AS (SELECT (row_number() OVER (ORDER BY doc_id) - 1) AS rn FROM docs),
-gm AS (SELECT rn, rn // 3 AS g, rn % 3 AS m FROM mem),
-bits AS MATERIALIZED (
-  SELECT rn, w,
-    CASE WHEN (CASE WHEN w + 1 = 64 THEN (CASE WHEN m = 2 THEN 10 ELSE 30000 END)
-               ELSE 100 + ((g + 1) * (w + 1 + 7) * 2654435761 % 4096) END)
-            > (100 + ((g + 1) * (w + 7) * 2654435761 % 4096))
-         THEN 1 ELSE 0 END AS bit
-  FROM gm, unnest(range(64)) AS t(w)),
-ham AS (
-  SELECT a.rn AS id_a, b.rn AS id_b,
-         SUM(CASE WHEN a.bit <> b.bit THEN 1 ELSE 0 END) AS hamming
-  FROM bits a JOIN bits b ON a.w = b.w AND a.rn < b.rn
-  GROUP BY a.rn, b.rn)
-SELECT CAST(id_a AS BIGINT) AS id_a, CAST(id_b AS BIGINT) AS id_b,
-       CAST(hamming AS BIGINT) AS hamming
-FROM ham WHERE hamming <= 4 ORDER BY id_a, id_b
-"""
-
-
-def video_near_dup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual video near-dup (llmdata/multimodal.py
-    video_near_dup): 120 video fixtures built distributed, each a
-    concatenation of ten 64-byte frames whose content is a single
-    repeated byte v = (g*31 + f*7) % 251 — frame EQUALITY therefore
-    reduces to v equality, which is what lets the oracle replay the
-    frame-hash Jaccard CLOSED FORM without blake2b. Groups of 3: two
-    identical members, the third's last two frames perturbed
-    (+101 mod 251, collision-free within an asset), so intra-group
-    Jaccard is 1.0 (members 0-1) or 8/12 (vs member 2); cross-group
-    single-frame collisions score 1/19 and fall below min_jaccard.
-    Spark runs the full frame-sample → blake2b hash → posting-list
-    join → windowed-size Jaccard pipeline (no forced broadcasts —
-    sizes ride through the join); the oracle replays pair counts from
-    the byte-value formula."""
-    from pyspark.sql import Window as W
-
-    from hail_spark.llmdata.multimodal import video_near_dup
-
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id")
-        .orderBy("doc_id")
-        .limit(120)
-    )
-    fixture = docs.select(
-        (F.row_number().over(W.orderBy("doc_id")) - 1).alias("rn")
-    ).select(
-        "rn",
-        (F.col("rn") / 3).cast("int").alias("g"),
-        (F.col("rn") % 3).alias("m"),
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ids, blobs = [], []
-            for rn, g, m in zip(pdf["rn"], pdf["g"], pdf["m"]):
-                vals = [
-                    (int(g) * 31 + f * 7 + (101 if int(m) == 2 and f >= 8 else 0))
-                    % 251
-                    for f in range(10)
-                ]
-                ids.append(int(rn))
-                blobs.append(b"".join(bytes([v]) * 64 for v in vals))
-            yield pd.DataFrame({"asset_id": ids, "content": blobs})
-
-    assets = fixture.mapInPandas(gen, schema="asset_id bigint, content binary")
-    pairs = video_near_dup(assets, min_jaccard=0.5, every_n=1)
-    return pairs.select(
-        F.col("id_a").cast("long").alias("id_a"),
-        F.col("id_b").cast("long").alias("id_b"),
-        F.col("n_shared").cast("long").alias("n_shared"),
-        F.round("jaccard", 6).alias("jaccard"),
-    ).orderBy("id_a", "id_b")
-
-
-# frame-hash Jaccard closed form: frames are single-byte-valued, so
-# hash equality == byte-value equality; every asset has 10 distinct
-# frame values (7f distinct mod 251; the +101 perturbation cannot
-# collide intra-asset: 7d = 150 mod 251 has no solution |d| <= 9).
-_VIDEO_NEAR_DUP_SQL = """
-WITH docs AS (SELECT doc_id FROM documents ORDER BY doc_id LIMIT 120),
-mem AS (SELECT (row_number() OVER (ORDER BY doc_id) - 1) AS rn FROM docs),
-gm AS (SELECT rn, rn // 3 AS g, rn % 3 AS m FROM mem),
-fr AS MATERIALIZED (
-  SELECT DISTINCT rn,
-    (g * 31 + f * 7 + CASE WHEN m = 2 AND f >= 8 THEN 101 ELSE 0 END) % 251 AS v
-  FROM gm, unnest(range(10)) AS t(f)),
-sz AS (SELECT rn, COUNT(*) AS n FROM fr GROUP BY rn),
-shared AS (
-  SELECT a.rn AS id_a, b.rn AS id_b, COUNT(*) AS n_shared
-  FROM fr a JOIN fr b ON a.v = b.v AND a.rn < b.rn
-  GROUP BY a.rn, b.rn)
-SELECT CAST(s.id_a AS BIGINT) AS id_a, CAST(s.id_b AS BIGINT) AS id_b,
-       CAST(s.n_shared AS BIGINT) AS n_shared,
-       ROUND(CAST(s.n_shared AS DOUBLE) / (sa.n + sb.n - s.n_shared), 6)
-         AS jaccard
-FROM shared s
-JOIN sz sa ON sa.rn = s.id_a
-JOIN sz sb ON sb.rn = s.id_b
-WHERE CAST(s.n_shared AS DOUBLE) / (sa.n + sb.n - s.n_shared) >= 0.5
-ORDER BY id_a, id_b
 """
 
 
@@ -4212,42 +3782,6 @@ FROM events GROUP BY event_type ORDER BY event_type
 """
 
 
-def kll_cdf_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """True KLL sketch path (operators/kll.py — ApproxCDFAggregator
-    parity): per-partition sketches + driver merge, run in the exact
-    regime (k >> n) so quantiles replay as DuckDB's discrete quantile.
-    The distributed plumbing (mapInPandas partials, level-tagged
-    serialization, merge) is what's under test; the approximate regime
-    is covered by the rank-error pytest."""
-    from hail_spark.operators.kll import kll_sketch
-
-    ev = _t(spark, sf_dir, "events").df.filter(F.col("event_id") % 17 == 0)
-    sk = kll_sketch(ev.repartition(8), "value", k=65536)
-    return ev.sparkSession.createDataFrame(
-        [
-            (
-                sk.n,
-                round(sk.min, 9),
-                round(sk.max, 9),
-                round(sk.quantile(0.25), 9),
-                round(sk.quantile(0.5), 9),
-                round(sk.quantile(0.75), 9),
-            )
-        ],
-        "n bigint, vmin double, vmax double, q25 double, q50 double, q75 double",
-    )
-
-
-_KLL_SQL = """
-SELECT COUNT(value) AS n,
-       round(MIN(value), 9) AS vmin, round(MAX(value), 9) AS vmax,
-       round(quantile_disc(value, 0.25), 9) AS q25,
-       round(quantile_disc(value, 0.50), 9) AS q50,
-       round(quantile_disc(value, 0.75), 9) AS q75
-FROM events WHERE event_id % 17 = 0
-"""
-
-
 def mendel_code_battery_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """hl.mendel_error_code (ref functions.py:6415, 12-code table):
     synthetic trios from the events table hit every (copy state, code)
@@ -4611,7 +4145,7 @@ def _cleanup_staging() -> None:
 
 def _reg_staging(p: str) -> str:
     """Register an already-built (pid-suffixed) staging path for the
-    atexit sweep — the streaming/bucket sites build their own paths
+    atexit sweep — the schema-evolution/bucket sites build their own paths
     (they embed a per-query sequence tag) but must not leave per-pid
     litter behind either."""
     import atexit
@@ -6092,78 +5626,67 @@ SELECT round((SELECT SUM(v * v) FROM a), 6) AS m2,
 # the freshness lever: new/changed queries first, then
 # oldest-evidence-first so stale rows (r01-r03 vintage) get re-greened.
 _DRIVER_GREEN_ROUND: dict = {
-    'add_index': 8, 'ann_brute_topk': 8, 'ann_ivf_topk': 5,
-    'ann_recall_eval': 5, 'anti_join': 8, 'approx_cdf_struct': 3,
+    'add_index': 8, 'anti_join': 8, 'approx_cdf_struct': 3,
     'approx_quantiles_by_type': 3, 'array_agg_explode': 3,
-    'array_sum_embeddings': 4, 'asof_join_events': 5,
-    'assoc_tests_battery': 3, 'attribution_first_last': 6,
-    'auc_by_group_events': 6, 'audio_near_dup_assets': 7,
+    'array_sum_embeddings': 4, 'asof_join_events': 5, 'assoc_tests_battery':
+    3, 'attribution_first_last': 6, 'auc_by_group_events': 6,
     'avro_round_trip': 4, 'balding_nichols_stats': 3, 'basket_rules_parts':
     8, 'bed_intervals_join': 3, 'benford_quality_orders': 8,
     'bfs_purchase_levels': 7, 'bgen_round_trip': 3, 'bigram_logprob_docs':
-    6, 'binom_test_by_type': 4, 'bit_ops_battery': 8,
-    'bloom_decontam_flagged': 6, 'bm25_topk_docs': 4, 'bm_band_matmul': 3,
+    6, 'binom_test_by_type': 4, 'bit_ops_battery': 8, 'bm_band_matmul': 3,
     'bm_matmul': 8, 'bm_row_major': 3, 'bm_sparse_battery': 3,
-    'bm_svd_moments': 3, 'bpe_encode_ids_docs': 5,
-    'bpe_roundtrip_identity': 7, 'bpe_train_merges': 5,
-    'bucketed_join_agg': 6, 'c4_signals_docs': 6, 'call_stats_by_type': 4,
-    'cap_per_group_docs': 5, 'charr_contamination': 3, 'chat_render_docs':
-    6, 'checkpoint_chain': 4, 'chunk_documents_windows': 4,
-    'cluster_keep_best': 5, 'clustering_coefficient_suppliers': 6,
-    'cmh_test': 3, 'cms_token_counts': 7, 'cohort_retention_triangle': 6,
+    'bm_svd_moments': 3, 'bpe_encode_ids_docs': 5, 'bpe_roundtrip_identity':
+    7, 'bpe_train_merges': 5, 'bucketed_join_agg': 6, 'c4_signals_docs': 6,
+    'call_stats_by_type': 4, 'cap_per_group_docs': 5, 'charr_contamination':
+    3, 'chat_render_docs': 6, 'checkpoint_chain': 4,
+    'chunk_documents_windows': 4, 'cluster_keep_best': 5,
+    'clustering_coefficient_suppliers': 6, 'cmh_test': 3,
+    'cms_token_counts': 7, 'cohort_retention_triangle': 6,
     'collapse_bursts_debounce': 6, 'collect_per_key': 8,
     'collection_battery': 4, 'concordance_counts': 8, 'corpus_diff_status':
-    5, 'corpus_report_card': 4, 'corr_regr_agg': 8,
-    'cube_grouping_battery': 7, 'cusum_orders_daily': 8,
-    'datetime_battery': 7, 'de_novo_calls': 3, 'decontam_overlap': 5,
+    5, 'corpus_report_card': 4, 'corr_regr_agg': 8, 'cube_grouping_battery':
+    7, 'cusum_orders_daily': 8, 'datetime_battery': 7, 'de_novo_calls': 3,
     'dedup_clusters': 8, 'dedup_exact': 8, 'densify_sparse': 5,
     'deterministic_shuffle': 8, 'distinct_by_key': 8,
-    'distinctive_terms_tfidf': 6, 'doc_cosine_topk': 8, 'downsample_cells':
-    3, 'dp_noisy_counts_events': 7, 'dsir_importance_select': 8,
-    'duplicated_gram_stats': 5, 'embedding_binarize_words': 8,
-    'embedding_near_dup': 8, 'embedding_near_dup_lsh': 3,
-    'embedding_quantize_int8': 6, 'entity_resolution_parts': 7,
+    'distinctive_terms_tfidf': 6, 'downsample_cells': 3,
+    'dp_noisy_counts_events': 7, 'dsir_importance_select': 8,
+    'duplicated_gram_stats': 5, 'embedding_near_dup': 8,
+    'embedding_near_dup_lsh': 3, 'entity_resolution_parts': 7,
     'explode_words': 8, 'export_entries_by_col_rt': 5, 'faf_by_nation': 5,
     'fanout_round_trip': 4, 'filter_intervals_orders': 4,
     'fixed_width_round_trip': 8, 'fold_entropy_hamming': 3,
-    'frequent_tokens_exact': 6, 'funnel_conversion': 6,
-    'fuzzy_join_tokens': 7, 'gen_round_trip': 4, 'genotype_fn_battery': 3,
-    'gopher_signals': 5, 'grep_lines': 4, 'group_counter': 7,
-    'gvcf_combine_densify': 4, 'hail_native_ht': 4, 'hamming_ann_topk': 8,
-    'haplotype_em': 4, 'hard_negatives_topk': 5,
-    'hashed_linear_score_docs': 4, 'hist_by_type': 3,
-    'hll_distinct_rollup': 6, 'hof_array_battery': 7,
+    'frequent_tokens_exact': 6, 'funnel_conversion': 6, 'fuzzy_join_tokens':
+    7, 'gen_round_trip': 4, 'genotype_fn_battery': 3, 'gopher_signals': 5,
+    'grep_lines': 4, 'group_counter': 7, 'gvcf_combine_densify': 4,
+    'hail_native_ht': 4, 'haplotype_em': 4, 'hashed_linear_score_docs': 4,
+    'hist_by_type': 3, 'hll_distinct_rollup': 6, 'hof_array_battery': 7,
     'hopping_window_events': 8, 'hwe_by_group': 4, 'ibd_pairs': 4,
-    'image_near_dup_assets': 7, 'import_matrix_table_rt': 5,
-    'import_table_impute': 3, 'impute_sex_stats': 3, 'inbreeding_by_type':
-    8, 'incremental_agg_merge': 6, 'incremental_dedup_batch': 4,
-    'info_score_by_bucket': 8, 'interval_join': 8, 'ivfpq_ann_topk': 5,
-    'jackknife_ratio_events': 6, 'json_props_extract': 6,
-    'jsonl_round_trip': 5, 'k_anonymity_events': 6, 'kcore_purchase_graph':
-    8, 'king_kinship': 8, 'kll_cdf_exact_regime': 3, 'kmv_theta_sketch': 6,
-    'knn_label_eval_embeddings': 8, 'ks_drift_events': 6,
-    'label_propagation_communities': 6, 'lambda_gc_events': 5,
-    'latest_by_key_compact': 5, 'ld_matrix_window': 4, 'ld_score_window':
-    4, 'left_join_right_distinct': 8, 'liftover_loci': 8,
-    'line_dedup_docs': 4, 'linreg_rows': 3, 'local_to_global_battery': 3,
-    'logistic_skat_q': 3, 'logreg_score_rows': 3, 'lsh_candidate_recall':
-    5, 'map_globals': 3, 'maximal_independent_set': 3,
-    'mendel_code_battery': 3, 'mendel_errors_by_variant': 3,
-    'merge_upsert_snapshot': 5, 'min_rep_battery': 4, 'minhash_lsh_dedup':
-    8, 'mt_annotate_rows_interval': 4, 'mt_col_agg': 8,
-    'mt_explode_battery': 8, 'mt_filter_entries': 8, 'mt_full_outer_join':
-    4, 'mt_group_cols_by': 2, 'mt_group_rows_by': 2,
-    'mt_native_round_trip': 4, 'mt_row_agg': 2, 'mt_semi_join_rows': 2,
-    'mt_union_battery': 4, 'multimodal_pipeline': 4, 'multiway_zip_join':
-    8, 'mutual_information_features': 6, 'ndarray_sum_groups': 3,
+    'import_matrix_table_rt': 5, 'import_table_impute': 3,
+    'impute_sex_stats': 3, 'inbreeding_by_type': 8, 'incremental_agg_merge':
+    6, 'incremental_dedup_batch': 4, 'info_score_by_bucket': 8,
+    'interval_join': 8, 'jackknife_ratio_events': 6, 'json_props_extract':
+    6, 'jsonl_round_trip': 5, 'k_anonymity_events': 6,
+    'kcore_purchase_graph': 8, 'king_kinship': 8, 'kmv_theta_sketch': 6,
+    'ks_drift_events': 6, 'label_propagation_communities': 6,
+    'lambda_gc_events': 5, 'latest_by_key_compact': 5, 'ld_matrix_window':
+    4, 'ld_score_window': 4, 'left_join_right_distinct': 8, 'liftover_loci':
+    8, 'line_dedup_docs': 4, 'linreg_rows': 3, 'local_to_global_battery': 3,
+    'logistic_skat_q': 3, 'logreg_score_rows': 3, 'lsh_candidate_recall': 5,
+    'map_globals': 3, 'maximal_independent_set': 3, 'mendel_code_battery':
+    3, 'mendel_errors_by_variant': 3, 'merge_upsert_snapshot': 5,
+    'min_rep_battery': 4, 'minhash_lsh_dedup': 8,
+    'mt_annotate_rows_interval': 4, 'mt_col_agg': 8, 'mt_explode_battery':
+    8, 'mt_filter_entries': 8, 'mt_full_outer_join': 4, 'mt_group_cols_by':
+    2, 'mt_group_rows_by': 2, 'mt_native_round_trip': 4, 'mt_row_agg': 2,
+    'mt_semi_join_rows': 2, 'mt_union_battery': 4, 'multiway_zip_join': 8,
+    'mutual_information_features': 6, 'ndarray_sum_groups': 3,
     'neighborhood_fn_graph': 8, 'ngram_jaccard_dedup': 2, 'orc_round_trip':
     6, 'order_by_topk': 2, 'outer_join_coalesce': 8, 'pack_sequences': 2,
     'pagerank_purchase_graph': 8, 'parquet_stats_fast': 7,
-    'parse_cast_battery': 8, 'pc_project_scores': 5, 'pc_relate_kinship':
-    4, 'pca_moments': 3, 'perplexity_buckets': 4, 'pii_scrub': 5,
+    'parse_cast_battery': 8, 'pc_project_scores': 5, 'pc_relate_kinship': 4,
+    'pca_moments': 3, 'perplexity_buckets': 4, 'pii_scrub': 5,
     'pivot_event_values': 5, 'plink_round_trip': 3, 'pmi_collocations_top':
-    6, 'poisreg_score_rows': 3, 'pool_embeddings_mean': 6, 'pq_ann_topk':
-    5, 'pq_rerank_topk': 5, 'prev_nonnull': 2, 'product_agg': 8,
+    6, 'poisreg_score_rows': 3, 'prev_nonnull': 2, 'product_agg': 8,
     'profile_numeric_columns': 7, 'psi_drift_orders': 7,
     'q10_returned_revenue': 5, 'q11_important_stock': 7,
     'q12_shipmode_priority': 7, 'q13_order_count_dist': 7,
@@ -6173,46 +5696,42 @@ _DRIVER_GREEN_ROUND: dict = {
     'q20_potential_promo': 7, 'q21_waiting_supplier': 7,
     'q22_dormant_customers': 7, 'q2_min_cost_supplier': 7,
     'q3_shipping_priority': 7, 'q4_order_priority': 5, 'q5_region_revenue':
-    7, 'q6_forecast_revenue': 7, 'q7_volume_shipping': 7,
-    'q8_market_share': 7, 'q9_product_profit': 7, 'quantile_bins_events':
-    6, 'quantile_normalize_quantities': 8, 'query_mt_rows_point': 8,
+    7, 'q6_forecast_revenue': 7, 'q7_volume_shipping': 7, 'q8_market_share':
+    7, 'q9_product_profit': 7, 'quantile_bins_events': 6,
+    'quantile_normalize_quantities': 8, 'query_mt_rows_point': 8,
     'query_table_point': 8, 'random_mating_hom': 5, 'rename_duplicates_q':
     4, 'resample_events_ffill': 7, 'reservoir_sample': 3,
     'robust_outliers_mad': 7, 'rolling_window_events': 5,
-    'rollup_order_totals': 5, 'row_correlation_pairs': 3,
-    'rrf_hybrid_topk': 4, 'rrm_matrix': 4, 'salted_join_skewed': 5,
-    'sample_qc_stats': 3, 'scalar_battery': 8, 'scan_array_sum': 4,
-    'scan_battery': 2, 'scan_combinators': 2, 'scan_cumulative_sum': 2,
-    'schema_evolution_read': 7, 'search_keyed_battery': 4,
-    'segment_intervals_custkey': 4, 'semantic_dedup_kmeans': 5,
-    'semi_join': 2, 'sequence_trigrams_events': 6, 'session_window_native':
-    5, 'sessionize_events': 5, 'set_ops_per_key': 8,
-    'simhash_fingerprints': 2, 'skat_q_stats': 3, 'skew_report_sources': 7,
-    'span_corruption_pairs': 6, 'span_removal_exactsubstr': 4,
-    'sparse_split_battery': 5, 'split_assign_census': 4,
-    'split_multi_rows': 3, 'split_multi_sites': 2, 'sssp_purchase_graph':
-    8, 'standardize_features': 6, 'stratified_fixed_k_docs': 6,
-    'stratified_sample': 3, 'stream_dedup_replay': 6,
-    'stream_replay_conformance': 6, 'stream_sessionize_replay': 6,
-    'stream_static_join_replay': 6, 'stream_stream_join_replay': 8,
-    'string_features': 2, 'summarize_alleles': 4, 'survival_curve_users':
-    6, 'table_gen': 4, 'table_native_round_trip': 3, 'take_by_per_key': 2,
-    'target_encode_loo': 7, 'tdt_counts': 3, 'temperature_mix_sources': 6,
-    'text_normalize_docs': 5, 'text_profile': 2, 'tidyr_gather': 4,
-    'tidyr_spread': 4, 'time_travel_as_of': 7, 'token_budget_select': 5,
-    'token_vocab': 2, 'tokenizer_oov_rate': 7, 'training_pipeline_e2e': 5,
+    'rollup_order_totals': 5, 'row_correlation_pairs': 3, 'rrm_matrix': 4,
+    'salted_join_skewed': 5, 'sample_qc_stats': 3, 'scalar_battery': 8,
+    'scan_array_sum': 4, 'scan_battery': 2, 'scan_combinators': 2,
+    'scan_cumulative_sum': 2, 'schema_evolution_read': 7,
+    'search_keyed_battery': 4, 'segment_intervals_custkey': 4,
+    'semantic_dedup_kmeans': 5, 'semi_join': 2, 'sequence_trigrams_events':
+    6, 'session_window_native': 5, 'sessionize_events': 5,
+    'set_ops_per_key': 8, 'simhash_fingerprints': 2, 'skat_q_stats': 3,
+    'skew_report_sources': 7, 'span_corruption_pairs': 6,
+    'span_removal_exactsubstr': 4, 'sparse_split_battery': 5,
+    'split_assign_census': 4, 'split_multi_rows': 3, 'split_multi_sites': 2,
+    'sssp_purchase_graph': 8, 'standardize_features': 6,
+    'stratified_fixed_k_docs': 6, 'stratified_sample': 3, 'string_features':
+    2, 'summarize_alleles': 4, 'survival_curve_users': 6, 'table_gen': 4,
+    'table_native_round_trip': 3, 'take_by_per_key': 2, 'target_encode_loo':
+    7, 'tdt_counts': 3, 'temperature_mix_sources': 6, 'text_normalize_docs':
+    5, 'text_profile': 2, 'tidyr_gather': 4, 'tidyr_spread': 4,
+    'time_travel_as_of': 7, 'token_budget_select': 5, 'token_vocab': 2,
+    'tokenizer_oov_rate': 7, 'training_pipeline_e2e': 5,
     'training_shards_manifest': 5, 'transition_matrix_events': 6,
     'triangle_count_suppliers': 7, 'unigram_encode_docs': 8,
     'unigram_logprob': 2, 'union_all': 2, 'union_unify': 2,
     'unpivot_measures': 5, 'url_dedup_canonical': 4,
     'validate_orders_report': 7, 'variant_extract_paths': 7,
     'variant_qc_stats': 2, 'vcf_round_trip': 3, 'vds_densify': 2,
-    'vds_ref_block_battery': 3, 'video_near_dup_assets': 8,
-    'weighted_mix_sources': 4, 'weighted_percentiles_orders': 6,
-    'weighted_sample_topk': 5, 'welch_ttest_events': 6,
-    'window_functions_battery': 7, 'winnow_fingerprints': 3,
-    'winnow_overlap_pairs': 3, 'winsorize_by_type': 6, 'zorder_layout_key':
-    7,
+    'vds_ref_block_battery': 3, 'weighted_mix_sources': 4,
+    'weighted_percentiles_orders': 6, 'weighted_sample_topk': 5,
+    'welch_ttest_events': 6, 'window_functions_battery': 7,
+    'winnow_fingerprints': 3, 'winnow_overlap_pairs': 3,
+    'winsorize_by_type': 6, 'zorder_layout_key': 7,
 }
 
 # Back-compat alias used by tests/scripts: the set of ever-green queries.
@@ -6229,21 +5748,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # driver sample clears all 23 remaining r02 rows + 27 of the r03 rows.
     new_this_round = (
         # implementations changed in round 10 (optimization round 2):
-        # pinned-partitioning checkpoints (graph family), cosine-norm
-        # precompute (ANN family), state-partition window (replays),
-        # size-gated spread/ntile (lambda_gc, rfm), bucketed write,
-        # shared-lineage checkpoints and one-pass folds (this session)
+        # pinned-partitioning checkpoints (graph family), size-gated
+        # spread/ntile (lambda_gc, rfm), bucketed write, shared-lineage
+        # checkpoints and one-pass folds
         "training_shards_manifest",
         "perplexity_buckets",
         "unigram_logprob",
         "training_pipeline_e2e",
         "row_correlation_pairs",
         "lsh_candidate_recall",
-        "bm25_topk_docs",
         "span_removal_exactsubstr",
         "duplicated_gram_stats",
         "line_dedup_docs",
-        "decontam_overlap",
         "pca_moments",
         "pc_relate_kinship",
         "pagerank_purchase_graph",
@@ -6253,12 +5769,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "modularity_communities",
         "neighborhood_fn_graph",
         "harmonic_centrality_graph",
-        "ann_brute_topk",
-        "ann_ivf_topk",
-        "ann_recall_eval",
-        "knn_label_eval_embeddings",
-        "pq_rerank_topk",
-        "hard_negatives_topk",
         "embedding_near_dup",
         "embedding_near_dup_lsh",
         "lambda_gc_events",
@@ -6270,18 +5780,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "entity_resolution_parts",
         "bucketed_join_agg",
         "incremental_dedup_batch",
-        # streaming replays stay inside the freshness head (the driver's
-        # ~50-query oracle sample must re-verify the state-partition
-        # change) but at its END: a replay runs dozens of micro-batches,
-        # each paying the session's remaining JIT/codegen warmup, so an
-        # early slot multiplies cold-start into the replay's timing
-        # (measured: 4-16x inflated readings at head position 29-33 vs
-        # 2-9 s after the warm head)
-        "stream_replay_conformance",
-        "stream_dedup_replay",
-        "stream_sessionize_replay",
-        "stream_static_join_replay",
-        "stream_stream_join_replay",
     )
     first = {k: base[k] for k in new_this_round if k in base}
     never = {
@@ -6334,8 +5832,6 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "simhash_fingerprints": simhash_fingerprints,
         "embedding_near_dup": embedding_near_dup,
         "embedding_near_dup_lsh": embedding_near_dup_lsh,
-        "ann_brute_topk": ann_topk,
-        "ann_ivf_topk": ann_ivf_topk,
         "text_profile": text_profile_q,
         "token_vocab": token_vocab_q,
         "mt_row_agg": mt_row_agg,
@@ -6382,10 +5878,6 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bm_svd_moments": bm_svd_moments_q,
         "info_score_by_bucket": info_score_by_bucket,
         "liftover_loci": liftover_loci,
-        "multimodal_pipeline": multimodal_pipeline,
-        "image_near_dup_assets": image_near_dup_q,
-        "video_near_dup_assets": video_near_dup_q,
-        "audio_near_dup_assets": audio_near_dup_q,
         "linreg_rows": linreg_rows_q,
         "logreg_score_rows": logreg_score_rows_q,
         "poisreg_score_rows": poisreg_score_rows_q,
@@ -6404,7 +5896,6 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "vds_ref_block_battery": vds_ref_block_battery_q,
         "approx_quantiles_by_type": approx_quantiles_q,
         "approx_cdf_struct": approx_cdf_struct_q,
-        "kll_cdf_exact_regime": kll_cdf_q,
         "mendel_code_battery": mendel_code_battery_q,
         "local_to_global_battery": local_to_global_battery_q,
         "split_multi_rows": split_multi_rows_q,
@@ -6448,23 +5939,16 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lambda_gc_events": lambda_gc_q,
         "random_mating_hom": random_mating_q,
         "gopher_signals": gopher_signals_q,
-        "decontam_overlap": decontam_overlap_q,
         "pii_scrub": pii_scrub_q,
         "line_dedup_docs": line_dedup_q,
-        "pq_ann_topk": pq_ann_q,
-        "ann_recall_eval": ann_recall_q,
-        "pq_rerank_topk": pq_rerank_q,
         "token_budget_select": token_budget_q,
-        "pool_embeddings_mean": pool_embeddings_q,
         "lsh_candidate_recall": lsh_recall_q,
         "text_normalize_docs": text_normalize_q,
         "cap_per_group_docs": cap_per_group_q,
-        "hard_negatives_topk": hard_negatives_q,
         "asof_join_events": asof_join_q,
         "sessionize_events": sessionize_q,
         "rolling_window_events": rolling_window_q,
         "frequent_tokens_exact": frequent_tokens_q,
-        "bloom_decontam_flagged": bloom_decontam_q,
         "hll_distinct_rollup": hll_distinct_q,
         "q4_order_priority": q4_priority_q,
         "q10_returned_revenue": q10_returns_q,
@@ -6473,8 +5957,6 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "weighted_sample_topk": weighted_sample_q,
         "corpus_diff_status": corpus_diff_q,
         "session_window_native": session_window_q,
-        "stream_replay_conformance": stream_replay_q,
-        "stream_stream_join_replay": stream_stream_join_q,
         "hopping_window_events": hopping_window_q,
         "q7_volume_shipping": q7_volume_q,
         "q8_market_share": q8_market_share_q,
@@ -6492,10 +5974,7 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q21_waiting_supplier": q21_waiting_q,
         "window_functions_battery": window_battery_q,
         "cube_grouping_battery": cube_battery_q,
-        "embedding_quantize_int8": quantize_emb_q,
         "tokenizer_oov_rate": oov_rate_q,
-        "stream_dedup_replay": stream_dedup_replay_q,
-        "stream_static_join_replay": stream_static_join_q,
         "datetime_battery": datetime_battery_q,
         "variant_extract_paths": variant_q,
         "parquet_stats_fast": parquet_stats_q,
@@ -6509,21 +5988,17 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "fuzzy_join_tokens": fuzzy_join_q,
         "pagerank_purchase_graph": pagerank_q,
         "sssp_purchase_graph": sssp_q,
-        "doc_cosine_topk": sparse_cosine_q,
         "basket_rules_parts": basket_rules_q,
         "cusum_orders_daily": cusum_orders_q,
         "kcore_purchase_graph": kcore_q,
         "benford_quality_orders": benford_q,
         "quantile_normalize_quantities": quantile_norm_q,
-        "knn_label_eval_embeddings": knn_label_eval_q,
         "neighborhood_fn_graph": neighborhood_fn_q,
         "harmonic_centrality_graph": harmonic_centrality_q,
         "resample_events_ffill": resample_events_q,
         "validate_orders_report": validate_orders_q,
         "skew_report_sources": skew_report_q,
         "cms_token_counts": cms_counts_q,
-        "embedding_binarize_words": binarize_emb_q,
-        "hamming_ann_topk": hamming_ann_q,
         "temperature_mix_sources": temperature_mix_q,
         "pivot_event_values": pivot_q,
         "unpivot_measures": unpivot_q,
@@ -6542,7 +6017,6 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "quantile_bins_events": quantile_bins_q,
         "distinctive_terms_tfidf": distinctive_terms_q,
         "weighted_mix_sources": weighted_mix_q,
-        "ivfpq_ann_topk": ivfpq_ann_q,
         "chunk_documents_windows": chunk_documents_q,
         "incremental_dedup_batch": incremental_dedup_q,
         "url_dedup_canonical": url_dedup_q,
@@ -6555,8 +6029,6 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "perplexity_buckets": perplexity_buckets_q,
         "span_removal_exactsubstr": span_removal_q,
         "corpus_report_card": corpus_report_q,
-        "bm25_topk_docs": bm25_q,
-        "rrf_hybrid_topk": rrf_hybrid_q,
         "semantic_dedup_kmeans": semantic_dedup_q,
         "duplicated_gram_stats": duplicated_gram_stats_q,
         "training_pipeline_e2e": training_pipeline_q,
@@ -6583,7 +6055,6 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "span_corruption_pairs": span_corruption_q,
         "sequence_trigrams_events": sequence_trigrams_q,
         "mutual_information_features": mutual_information_q,
-        "stream_sessionize_replay": stream_sessionize_replay_q,
         "psi_drift_orders": psi_drift_q,
         "ks_drift_events": ks_drift_q,
         "k_anonymity_events": k_anonymity_q,
@@ -6595,7 +6066,6 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "incremental_agg_merge": incremental_agg_q,
         "stratified_fixed_k_docs": stratified_fixed_k_q,
         "stratified_split_guarantee": stratified_split_q,
-        "tdigest_kll_quantile_xcheck": tdigest_kll_xcheck_q,
         "rfm_segments_customers": rfm_segments_q,
         "gini_spend_nation": gini_spend_q,
         "hhi_supplier_concentration": hhi_concentration_q,
@@ -6604,7 +6074,6 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dau_mau_stickiness": dau_mau_q,
         "pct_change_monthly_revenue": pct_change_monthly_q,
         "containment_near_supersets": containment_q,
-        "stopword_overflow_report": stopword_overflow_q,
         "dow_seasonality_events": dow_seasonality_q,
         "burstiness_daily_events": burstiness_q,
         "adamic_adar_links": adamic_adar_q,
@@ -6669,8 +6138,6 @@ def oracle_sql() -> dict[str, str]:
         "simhash_fingerprints": _SIMHASH_SQL,
         "embedding_near_dup": _EMB_DUP_SQL,
         "embedding_near_dup_lsh": _emb_lsh_sql(),
-        "ann_brute_topk": _ANN_SQL,
-        "ann_ivf_topk": _IVF_SQL,
         "text_profile": _TEXT_PROFILE_SQL,
         "token_vocab": _TOKEN_VOCAB_SQL,
         "mt_row_agg": _MT_ROW_AGG_SQL,
@@ -6717,10 +6184,6 @@ def oracle_sql() -> dict[str, str]:
         "bm_svd_moments": _BM_SVD_SQL,
         "info_score_by_bucket": _INFO_SCORE_SQL,
         "liftover_loci": _LIFTOVER_SQL,
-        "multimodal_pipeline": _multimodal_oracle_sql(),
-        "image_near_dup_assets": _IMAGE_NEAR_DUP_SQL,
-        "video_near_dup_assets": _VIDEO_NEAR_DUP_SQL,
-        "audio_near_dup_assets": _AUDIO_NEAR_DUP_SQL,
         "linreg_rows": _LINREG_SQL,
         "logreg_score_rows": _LOGREG_SCORE_SQL,
         "poisreg_score_rows": _POISREG_SCORE_SQL,
@@ -6739,7 +6202,6 @@ def oracle_sql() -> dict[str, str]:
         "vds_ref_block_battery": _VDS_REF_BLOCK_SQL,
         "approx_quantiles_by_type": _APPROX_Q_SQL,
         "approx_cdf_struct": _APPROX_CDF_SQL,
-        "kll_cdf_exact_regime": _KLL_SQL,
         "mendel_code_battery": _MENDEL_CODE_SQL,
         "local_to_global_battery": _LOCAL_TO_GLOBAL_SQL,
         "split_multi_rows": _SPLIT_MULTI_ROWS_SQL,
@@ -6783,23 +6245,16 @@ def oracle_sql() -> dict[str, str]:
         "lambda_gc_events": _LAMBDA_GC_SQL,
         "random_mating_hom": _RANDOM_MATING_SQL,
         "gopher_signals": _GOPHER_SQL,
-        "decontam_overlap": _DECONTAM_SQL,
         "pii_scrub": _PII_SCRUB_SQL,
         "line_dedup_docs": _LINE_DEDUP_SQL,
-        "pq_ann_topk": _PQ_ANN_SQL,
-        "ann_recall_eval": _ANN_RECALL_SQL,
-        "pq_rerank_topk": _PQ_RERANK_SQL,
         "token_budget_select": _TOKEN_BUDGET_SQL,
-        "pool_embeddings_mean": _POOL_EMB_SQL,
         "lsh_candidate_recall": _LSH_RECALL_SQL,
         "text_normalize_docs": _TEXT_NORMALIZE_SQL,
         "cap_per_group_docs": _CAP_PER_GROUP_SQL,
-        "hard_negatives_topk": _HARD_NEG_SQL,
         "asof_join_events": _ASOF_SQL,
         "sessionize_events": _SESSIONIZE_SQL,
         "rolling_window_events": _ROLLING_SQL,
         "frequent_tokens_exact": _FREQ_TOKENS_SQL,
-        "bloom_decontam_flagged": _BLOOM_DECONTAM_SQL,
         "hll_distinct_rollup": _HLL_DISTINCT_SQL,
         "q4_order_priority": _Q4_SQL,
         "q10_returned_revenue": _Q10_SQL,
@@ -6808,8 +6263,6 @@ def oracle_sql() -> dict[str, str]:
         "weighted_sample_topk": _WEIGHTED_SAMPLE_SQL,
         "corpus_diff_status": _CORPUS_DIFF_SQL,
         "session_window_native": _SESSION_WINDOW_SQL,
-        "stream_replay_conformance": _STREAM_REPLAY_SQL,
-        "stream_stream_join_replay": _STREAM_SS_JOIN_SQL,
         "hopping_window_events": _HOPPING_WINDOW_SQL,
         "q7_volume_shipping": _Q7_SQL,
         "q8_market_share": _Q8_SQL,
@@ -6827,10 +6280,7 @@ def oracle_sql() -> dict[str, str]:
         "q21_waiting_supplier": _Q21_SQL,
         "window_functions_battery": _WINDOW_BATTERY_SQL,
         "cube_grouping_battery": _CUBE_BATTERY_SQL,
-        "embedding_quantize_int8": _QUANTIZE_EMB_SQL,
         "tokenizer_oov_rate": _OOV_RATE_SQL,
-        "stream_dedup_replay": _STREAM_DEDUP_SQL,
-        "stream_static_join_replay": _STREAM_STATIC_JOIN_SQL,
         "datetime_battery": _DATETIME_BATTERY_SQL,
         "variant_extract_paths": _VARIANT_SQL,
         "parquet_stats_fast": _PARQUET_STATS_SQL,
@@ -6844,21 +6294,17 @@ def oracle_sql() -> dict[str, str]:
         "fuzzy_join_tokens": _FUZZY_JOIN_SQL,
         "pagerank_purchase_graph": _PAGERANK_SQL,
         "sssp_purchase_graph": _SSSP_SQL,
-        "doc_cosine_topk": _SPARSE_COSINE_SQL,
         "basket_rules_parts": _BASKET_RULES_SQL,
         "cusum_orders_daily": _CUSUM_ORDERS_SQL,
         "kcore_purchase_graph": _KCORE_SQL,
         "benford_quality_orders": _BENFORD_SQL,
         "quantile_normalize_quantities": _QUANTILE_NORM_SQL,
-        "knn_label_eval_embeddings": _KNN_LABEL_EVAL_SQL,
         "neighborhood_fn_graph": _NEIGHBORHOOD_FN_SQL,
         "harmonic_centrality_graph": _HARMONIC_CENTRALITY_SQL,
         "resample_events_ffill": _RESAMPLE_SQL,
         "validate_orders_report": _VALIDATE_SQL,
         "skew_report_sources": _SKEW_REPORT_SQL,
         "cms_token_counts": _CMS_COUNTS_SQL,
-        "embedding_binarize_words": _BINARIZE_EMB_SQL,
-        "hamming_ann_topk": _HAMMING_ANN_SQL,
         "temperature_mix_sources": _TEMPERATURE_MIX_SQL,
         "pivot_event_values": _PIVOT_SQL,
         "unpivot_measures": _UNPIVOT_SQL,
@@ -6877,7 +6323,6 @@ def oracle_sql() -> dict[str, str]:
         "quantile_bins_events": _QUANTILE_BINS_SQL,
         "distinctive_terms_tfidf": _DISTINCTIVE_TERMS_SQL,
         "weighted_mix_sources": _WEIGHTED_MIX_SQL,
-        "ivfpq_ann_topk": _IVFPQ_SQL,
         "chunk_documents_windows": _CHUNK_DOCS_SQL,
         "incremental_dedup_batch": _INCR_DEDUP_SQL,
         "url_dedup_canonical": _URL_DEDUP_SQL,
@@ -6890,8 +6335,6 @@ def oracle_sql() -> dict[str, str]:
         "perplexity_buckets": _PPL_BUCKETS_SQL,
         "span_removal_exactsubstr": _SPAN_REMOVE_SQL,
         "corpus_report_card": _CORPUS_REPORT_SQL,
-        "bm25_topk_docs": _BM25_SQL,
-        "rrf_hybrid_topk": _RRF_SQL,
         "semantic_dedup_kmeans": _SEMANTIC_DEDUP_SQL,
         "duplicated_gram_stats": _DUP_GRAM_SQL,
         "training_pipeline_e2e": _TRAINING_PIPELINE_SQL,
@@ -6918,7 +6361,6 @@ def oracle_sql() -> dict[str, str]:
         "span_corruption_pairs": _SPAN_CORRUPTION_SQL,
         "sequence_trigrams_events": _SEQ_TRIGRAMS_SQL,
         "mutual_information_features": _MUTUAL_INFO_SQL,
-        "stream_sessionize_replay": _STREAM_SESSIONIZE_SQL,
         "psi_drift_orders": _PSI_SQL,
         "ks_drift_events": _KS_SQL,
         "k_anonymity_events": _K_ANON_SQL,
@@ -6930,7 +6372,6 @@ def oracle_sql() -> dict[str, str]:
         "incremental_agg_merge": _INCREMENTAL_AGG_SQL,
         "stratified_fixed_k_docs": _STRAT_FIXED_K_SQL,
         "stratified_split_guarantee": _STRATIFIED_SPLIT_SQL,
-        "tdigest_kll_quantile_xcheck": _TDIGEST_KLL_SQL,
         "rfm_segments_customers": _RFM_SQL,
         "gini_spend_nation": _GINI_SQL,
         "hhi_supplier_concentration": _HHI_SQL,
@@ -6939,7 +6380,6 @@ def oracle_sql() -> dict[str, str]:
         "dau_mau_stickiness": _DAU_MAU_SQL,
         "pct_change_monthly_revenue": _PCT_CHANGE_SQL,
         "containment_near_supersets": _CONTAINMENT_SQL,
-        "stopword_overflow_report": _STOPWORD_OVERFLOW_SQL,
         "dow_seasonality_events": _DOW_SEASONALITY_SQL,
         "burstiness_daily_events": _BURSTINESS_SQL,
         "adamic_adar_links": _ADAMIC_ADAR_SQL,
@@ -7437,47 +6877,6 @@ kids AS (
 SELECT pos, s, gt AS "GT" FROM founders
 UNION ALL SELECT pos, s, gt FROM kids
 ORDER BY pos, s
-"""
-
-
-def decontam_overlap_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination (GPT-3 appendix C convention;
-    llmdata/decontam.py): the synthetic 'benchmark' is every 13th
-    document; training docs sharing any 8-token n-gram with it are
-    flagged. Engine: xxhash64 gram hashing JVM-side, broadcast
-    semi-join against distinct benchmark grams, map-side partial hit
-    counts — the document corpus is read once, never shuffled."""
-    from hail_spark.llmdata.decontam import decontaminate
-
-    d = _t(spark, sf_dir, "documents").df
-    bench = d.filter(F.col("doc_id") % 13 == 0)
-    out = decontaminate(d, bench, n=8, min_hits=1)
-    return out.select(
-        "doc_id", "n_grams", "n_hits", "contaminated"
-    ).orderBy("doc_id")
-
-
-_DECONTAM_SQL = r"""
-WITH tok AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(
-           trim(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g')), '\s+'),
-           w -> w != '') AS toks
-  FROM documents),
-grams AS (
-  SELECT doc_id, array_to_string(list_slice(toks, i, i + 7), ' ') AS g
-  FROM tok, UNNEST(range(1, len(toks) - 8 + 2)) AS t(i)
-  WHERE len(toks) >= 8),
-bench AS (SELECT DISTINCT g FROM grams WHERE doc_id % 13 = 0),
-hits AS (SELECT d.doc_id, COUNT(*) AS n_hits
-         FROM grams d JOIN bench USING (g) GROUP BY 1),
-base AS (SELECT doc_id,
-                CASE WHEN len(toks) >= 8 THEN len(toks) - 7 ELSE 0 END AS n_grams
-         FROM tok)
-SELECT b.doc_id, CAST(b.n_grams AS BIGINT) AS n_grams,
-       CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
-       COALESCE(h.n_hits, 0) >= 1 AS contaminated
-FROM base b LEFT JOIN hits h USING (doc_id) ORDER BY b.doc_id
 """
 
 
@@ -8306,149 +7705,6 @@ GROUP BY doc_id ORDER BY doc_id
 """
 
 
-def pq_ann_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ANN (llmdata/similarity.py pq_train /
-    pq_encode / pq_topk — Jegou et al. ADC): m=8 subspaces, 16 codes,
-    seed codebooks (n_iter=0 so the whole pipeline — codebook
-    selection, per-subspace argmin encoding, LUT-sum asymmetric
-    distances, ranking — replays exactly in SQL; Lloyd-trained
-    codebooks are covered by pytest differentials)."""
-    from hail_spark.llmdata import similarity as sim
-
-    e = _t(spark, sf_dir, "embeddings").df
-    q = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    cbs = sim.pq_train(e, m=8, ncodes=16, n_iter=0)
-    out = sim.pq_topk(sim.pq_encode(e, cbs), cbs, q, k=10)
-    return out.select(
-        "q_id", "rank", "vec_id", F.round("adist", 6).alias("adist")
-    ).orderBy("q_id", "rank")
-
-
-_PQ_ANN_SQL = """
-WITH seeds AS (
-  SELECT (row_number() OVER (ORDER BY h)) - 1 AS code, c_vec
-  FROM (SELECT md5(CAST(vec_id AS VARCHAR)) h, embedding c_vec
-        FROM embeddings ORDER BY h LIMIT 16)),
-subs AS (SELECT unnest(range(0, 8)) AS s),
-q AS (SELECT vec_id q_id, embedding q_vec FROM embeddings WHERE vec_id < 5),
-codes AS (
-  SELECT vec_id, s, code FROM (
-    SELECT e.vec_id, sub.s, sd.code,
-      row_number() OVER (PARTITION BY e.vec_id, sub.s ORDER BY round(
-        list_aggregate(list_transform(range(1, 9),
-          j -> (e.embedding[sub.s*8+j]::DOUBLE - round(sd.c_vec[sub.s*8+j]::DOUBLE, 6))
-             * (e.embedding[sub.s*8+j]::DOUBLE - round(sd.c_vec[sub.s*8+j]::DOUBLE, 6))),
-          'sum'), 9), sd.code) rk
-    FROM embeddings e CROSS JOIN subs sub CROSS JOIN seeds sd) WHERE rk = 1),
-lut AS (
-  SELECT q.q_id, sub.s, sd.code,
-    list_aggregate(list_transform(range(1, 9),
-      j -> (q.q_vec[sub.s*8+j]::DOUBLE - round(sd.c_vec[sub.s*8+j]::DOUBLE, 6))
-         * (q.q_vec[sub.s*8+j]::DOUBLE - round(sd.c_vec[sub.s*8+j]::DOUBLE, 6))),
-      'sum') AS d
-  FROM q CROSS JOIN subs sub CROSS JOIN seeds sd),
-scored AS (
-  SELECT l.q_id, c.vec_id, SUM(l.d) AS adist
-  FROM codes c JOIN lut l ON l.s = c.s AND l.code = c.code
-  GROUP BY l.q_id, c.vec_id),
-ranked AS (SELECT q_id, vec_id, adist,
-  row_number() OVER (PARTITION BY q_id ORDER BY round(adist, 9), vec_id) AS rank
-  FROM scored)
-SELECT q_id, CAST(rank AS INT) AS rank, vec_id, round(adist, 6) AS adist
-FROM ranked WHERE rank <= 10 ORDER BY q_id, rank
-"""
-
-
-def ann_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Retrieval-quality EVAL as a gated query (round 5): recall@10 of
-    the PQ ADC path against brute-force cosine ground truth, per query
-    — the metric a 100-TB user tunes m/ncodes/nprobe by
-    (tests/test_ann_recall.py pins floors on synthetic planted
-    neighbors; this gates the same computation end-to-end on the
-    shared corpus). Deterministic: n_iter=0 seed codebooks, rounded
-    tie-breaks on both rankings — the oracle replays ground truth, PQ
-    encoding, ADC ranking AND the overlap join in SQL."""
-    from hail_spark.llmdata import similarity as sim
-
-    e = _t(spark, sf_dir, "embeddings").df
-    q = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    brute = sim.brute_force_topk(e, q, k=10).select("q_id", "vec_id")
-    cbs = sim.pq_train(e, m=8, ncodes=16, n_iter=0)
-    pq = (
-        sim.pq_topk(sim.pq_encode(e, cbs), cbs, q, k=10)
-        .select("q_id", "vec_id", F.lit(1).alias("__hit"))
-    )
-    return (
-        brute.join(pq, ["q_id", "vec_id"], "left")
-        .groupBy("q_id")
-        .agg(
-            (F.sum(F.coalesce(F.col("__hit"), F.lit(0))) / F.lit(10.0)).alias(
-                "recall_at_10"
-            )
-        )
-        .orderBy("q_id")
-    )
-
-
-_ANN_RECALL_SQL = f"""
-SELECT b.q_id,
-       CAST(SUM(CASE WHEN p.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-         / 10.0 AS recall_at_10
-FROM ( {_ANN_SQL} ) b
-LEFT JOIN ( {_PQ_ANN_SQL} ) p
-  ON p.q_id = b.q_id AND p.vec_id = b.vec_id
-GROUP BY b.q_id ORDER BY b.q_id
-"""
-
-
-def pq_rerank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-stage retrieval (llmdata/similarity.py pq_rerank_topk): ADC
-    shortlist (k'=25) over seed-codebook PQ codes, exact cosine re-rank
-    to top-10 on the shortlist's raw vectors only. The oracle replays
-    both stages: the PQ CTE chain with the wider rank cut, then the
-    exact cosine restricted to shortlist candidates."""
-    from hail_spark.llmdata import similarity as sim
-
-    e = _t(spark, sf_dir, "embeddings").df
-    q = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    cbs = sim.pq_train(e, m=8, ncodes=16, n_iter=0)
-    out = sim.pq_rerank_topk(
-        sim.pq_encode(e, cbs), cbs, e, q, k=10, shortlist=25
-    )
-    return out.select(
-        "q_id", "rank", "vec_id", F.round("cosine", 6).alias("cosine")
-    ).orderBy("q_id", "rank")
-
-
-_PQ_RERANK_SQL = f"""
-WITH short AS (
-  SELECT q_id, vec_id FROM ( {_PQ_ANN_SQL.replace("rank <= 10", "rank <= 25")} )),
-q2 AS (SELECT vec_id q_id, embedding q_vec FROM embeddings WHERE vec_id < 5),
-exact AS (
-  SELECT s.q_id, s.vec_id,
-         list_aggregate(list_transform(range(1, 65),
-             i -> e.embedding[i]::DOUBLE * q2.q_vec[i]::DOUBLE), 'sum')
-         / (sqrt(list_aggregate(list_transform(range(1, 65),
-             i -> e.embedding[i]::DOUBLE * e.embedding[i]::DOUBLE), 'sum'))
-          * sqrt(list_aggregate(list_transform(range(1, 65),
-             i -> q2.q_vec[i]::DOUBLE * q2.q_vec[i]::DOUBLE), 'sum'))) AS cos
-  FROM short s
-  JOIN embeddings e ON e.vec_id = s.vec_id
-  JOIN q2 ON q2.q_id = s.q_id),
-rr AS (SELECT q_id, vec_id, cos,
-  row_number() OVER (PARTITION BY q_id ORDER BY round(cos, 9) DESC, vec_id) AS rank
-  FROM exact)
-SELECT q_id, CAST(rank AS INT) AS rank, vec_id, round(cos, 6) AS cosine
-FROM rr WHERE rank <= 10 ORDER BY q_id, rank
-"""
-
-
 def token_budget_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Budgeted subset selection (llmdata/sampling.py
     select_to_token_budget): keep the highest-quality docs whose
@@ -8484,45 +7740,6 @@ SELECT doc_id, q, n_tok,
        COALESCE(SUM(n_tok) OVER (ORDER BY -q, doc_id
          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) < 20000 AS keep
 FROM d ORDER BY doc_id
-"""
-
-
-def pool_embeddings_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chunk-to-document embedding pooling (llmdata/similarity.py
-    pool_embeddings): mean-pool synthetic chunk groups (vec_id % 50)
-    to one centroid per group — posexplode + (group, coord) hash-agg +
-    ordered rebuild, never an array-blob collect buffer. Values
-    rounded to 6 dp (summation-order tolerance). Output is posexploded
-    to one (grp, coord, value) row per coordinate: the driver harness
-    canonicalizer sorts raw output columns with pandas and cannot hash
-    list cells, so array outputs must leave the query as scalars
-    (r05 verdict item 1)."""
-    from hail_spark.llmdata.similarity import pool_embeddings
-
-    e = _t(spark, sf_dir, "embeddings").df.select(
-        (F.col("vec_id") % 50).alias("grp"), "embedding"
-    )
-    out = pool_embeddings(e, "grp", mode="mean")
-    return (
-        out.select("grp", "n_chunks", F.posexplode("embedding").alias("i", "x"))
-        .select(
-            "grp",
-            (F.col("i") + 1).cast("long").alias("i"),
-            F.round("x", 6).alias("v"),
-            "n_chunks",
-        )
-        .orderBy("grp", "i")
-    )
-
-
-_POOL_EMB_SQL = """
-WITH ex AS (
-  SELECT vec_id % 50 AS grp, i, embedding[i]::DOUBLE AS x
-  FROM embeddings, LATERAL unnest(range(1, len(embedding)+1)) AS t(i)),
-per AS (SELECT grp, i, AVG(x) AS v, COUNT(*) AS n FROM ex GROUP BY grp, i)
-SELECT grp, CAST(i AS BIGINT) AS i, round(v, 6) AS v,
-       CAST(n AS BIGINT) AS n_chunks
-FROM per ORDER BY grp, i
 """
 
 
@@ -8594,46 +7811,6 @@ FROM r WHERE group_rank <= 10 ORDER BY doc_id
 """
 
 
-def hard_negatives_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hard-negative mining (llmdata/similarity.py mine_hard_negatives)
-    for contrastive retrieval training: top-5 most-similar non-positive
-    corpus vectors per query (positive = the query vector itself here).
-    One corpus scan + broadcast anti-join + per-query window; the
-    oracle replays scoring, exclusion and ranking."""
-    from hail_spark.llmdata.similarity import mine_hard_negatives
-
-    e = _t(spark, sf_dir, "embeddings").df
-    q = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    pos = q.select("q_id", F.col("q_id").alias("pos_id"))
-    out = mine_hard_negatives(e, q, pos, k=5)
-    return out.select(
-        "q_id", "neg_rank", "neg_id", F.round("cosine", 6).alias("cosine")
-    ).orderBy("q_id", "neg_rank")
-
-
-_HARD_NEG_SQL = """
-WITH q AS (SELECT vec_id q_id, embedding q_vec FROM embeddings WHERE vec_id < 5),
-scored AS (
-  SELECT q.q_id, e.vec_id,
-         list_aggregate(list_transform(range(1, 65),
-             i -> e.embedding[i]::DOUBLE * q.q_vec[i]::DOUBLE), 'sum')
-         / (sqrt(list_aggregate(list_transform(range(1, 65),
-             i -> e.embedding[i]::DOUBLE * e.embedding[i]::DOUBLE), 'sum'))
-          * sqrt(list_aggregate(list_transform(range(1, 65),
-             i -> q.q_vec[i]::DOUBLE * q.q_vec[i]::DOUBLE), 'sum'))) AS cos
-  FROM embeddings e, q
-  WHERE e.vec_id <> q.q_id),
-ranked AS (SELECT q_id, vec_id, cos,
-  row_number() OVER (PARTITION BY q_id ORDER BY round(cos, 9) DESC, vec_id) AS rk
-  FROM scored)
-SELECT q_id, CAST(rk AS INT) AS neg_rank, vec_id AS neg_id,
-       round(cos, 6) AS cosine
-FROM ranked WHERE rk <= 5 ORDER BY q_id, neg_rank
-"""
-
-
 def weighted_mix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mixture resampling with replacement (llmdata/sampling.py
     weighted_mix): per-source epoch weights 2.5 / 1.0 / 0.4 / drop; the
@@ -8675,76 +7852,6 @@ SELECT source,
        CAST(COUNT(*) AS BIGINT) AS n_docs,
        CAST(SUM((n * (n - 1)) // 2) AS BIGINT) AS sum_copy_idx
 FROM n WHERE n > 0 GROUP BY source ORDER BY source
-"""
-
-
-def ivfpq_ann_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF+PQ composed index (llmdata/similarity.py ivfpq_build /
-    ivfpq_topk — FAISS IVFADC layout): nlist=16 coarse cells, m=8
-    residual subspaces, 16 codes, probe 4. Seed codebooks (n_iter=0)
-    keep the full pipeline — coarse assignment, residual computation,
-    PQ encoding, per-(query, cell) LUTs, ADC ranking — SQL-replayable."""
-    from hail_spark.llmdata import similarity as sim
-
-    e = _t(spark, sf_dir, "embeddings").df
-    q = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    codes_df, cents, cbs = sim.ivfpq_build(e, nlist=16, m=8, ncodes=16, n_iter=0)
-    out = sim.ivfpq_topk(codes_df, cents, cbs, q, k=10, nprobe=4)
-    return out.select(
-        "q_id", "rank", "vec_id", F.round("adist", 6).alias("adist")
-    ).orderBy("q_id", "rank")
-
-
-_IVFPQ_SQL = f"""
-WITH cents AS (
-  SELECT (row_number() OVER (ORDER BY h)) - 1 AS cell, c_vec
-  FROM (SELECT md5(CAST(vec_id AS VARCHAR)) AS h, embedding AS c_vec
-        FROM embeddings ORDER BY h LIMIT 16)),
-q AS (SELECT vec_id AS q_id, embedding AS q_vec FROM embeddings WHERE vec_id < 5),
-assigned AS (
-  SELECT vec_id, embedding, cell FROM (
-    SELECT e.vec_id, e.embedding, c.cell,
-           row_number() OVER (PARTITION BY e.vec_id
-               ORDER BY {_cos_sql('e.embedding', 'c.c_vec')} DESC, c.cell) rk
-    FROM embeddings e CROSS JOIN cents c) WHERE rk = 1),
-res AS (
-  SELECT a.vec_id, a.cell,
-         list_transform(range(1, 65), i -> a.embedding[i]::DOUBLE - c.c_vec[i]::DOUBLE) AS r
-  FROM assigned a JOIN cents c USING (cell)),
-pqseeds AS (
-  SELECT (row_number() OVER (ORDER BY h)) - 1 AS code, r AS s_vec
-  FROM (SELECT md5(CAST(vec_id AS VARCHAR)) AS h, r FROM res ORDER BY h LIMIT 16)),
-subs AS (SELECT unnest(range(0, 8)) AS s),
-codes AS (
-  SELECT vec_id, cell, s, code FROM (
-    SELECT r.vec_id, r.cell, sub.s, sd.code,
-      row_number() OVER (PARTITION BY r.vec_id, sub.s ORDER BY round(
-        list_aggregate(list_transform(range(1, 9),
-          j -> (r.r[sub.s*8+j] - round(sd.s_vec[sub.s*8+j], 6))
-             * (r.r[sub.s*8+j] - round(sd.s_vec[sub.s*8+j], 6))), 'sum'), 9), sd.code) rk
-    FROM res r CROSS JOIN subs sub CROSS JOIN pqseeds sd) WHERE rk = 1),
-probes AS (
-  SELECT q_id, q_vec, cell FROM (
-    SELECT q.q_id, q.q_vec, c.cell,
-           row_number() OVER (PARTITION BY q.q_id
-               ORDER BY {_cos_sql('q.q_vec', 'c.c_vec')} DESC, c.cell) rk
-    FROM q CROSS JOIN cents c) WHERE rk <= 4),
-lut AS (
-  SELECT p.q_id, p.cell, sub.s, sd.code,
-    list_aggregate(list_transform(range(1, 9),
-      j -> ((p.q_vec[sub.s*8+j]::DOUBLE - c.c_vec[sub.s*8+j]::DOUBLE) - round(sd.s_vec[sub.s*8+j], 6))
-         * ((p.q_vec[sub.s*8+j]::DOUBLE - c.c_vec[sub.s*8+j]::DOUBLE) - round(sd.s_vec[sub.s*8+j], 6))), 'sum') AS d
-  FROM probes p JOIN cents c USING (cell) CROSS JOIN subs sub CROSS JOIN pqseeds sd),
-scored AS (
-  SELECT l.q_id, k.vec_id, SUM(l.d) AS adist
-  FROM codes k JOIN lut l ON l.cell = k.cell AND l.s = k.s AND l.code = k.code
-  GROUP BY l.q_id, k.vec_id),
-ranked AS (SELECT q_id, vec_id, adist,
-  row_number() OVER (PARTITION BY q_id ORDER BY round(adist, 9), vec_id) AS rank FROM scored)
-SELECT q_id, CAST(rank AS INT) AS rank, vec_id, round(adist, 6) AS adist
-FROM ranked WHERE rank <= 10 ORDER BY q_id, rank
 """
 
 
@@ -9482,120 +8589,6 @@ FROM l
 """
 
 
-def bm25_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 sparse retrieval (llmdata/similarity.py bm25_topk): query
-    term lists are the first 5 distinct tokens (document order) of docs
-    0-2, so the whole pipeline — postings, df, length norm, Robertson
-    idf, tf saturation, ranking — replays in SQL."""
-    from hail_spark.llmdata import similarity as sim
-    from hail_spark.llmdata.dedup import tokens
-
-    from pyspark.sql import Window
-
-    d = _t(spark, sf_dir, "documents").df
-    probe = (
-        d.filter(F.col("doc_id") < 3)
-        .select(
-            "doc_id",
-            F.posexplode(tokens(F.lower(F.col("text")))).alias("pos", "term"),
-        )
-        .groupBy("doc_id", "term")
-        .agg(F.min("pos").alias("p"))
-    )
-    w = Window.partitionBy("doc_id").orderBy("p", "term")
-    qdf = (
-        probe.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 5)
-        .groupBy("doc_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("p", "term"))),
-                lambda s: s["term"],
-            ).alias("terms")
-        )
-        .select(F.col("doc_id").alias("q_id"), "terms")
-    )
-    out = sim.bm25_topk(d, qdf, k=10)
-    return out.select(
-        "q_id", "rank", "doc_id", F.round("score", 6).alias("score")
-    ).orderBy("q_id", "rank")
-
-
-_BM25_SQL = r"""
-WITH tok AS (
-  SELECT doc_id, unnest(ws) AS term, unnest(range(1, len(ws)+1)) AS pos
-  FROM (SELECT doc_id,
-               list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                           x -> x <> '') AS ws
-        FROM documents)),
-tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok GROUP BY doc_id, term),
-dl AS (SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY doc_id),
-st AS (SELECT COUNT(*) AS n, AVG(dl) AS avgdl FROM dl),
-dfq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
-qterms AS (
-  SELECT q_id, term FROM (
-    SELECT doc_id AS q_id, term,
-           row_number() OVER (PARTITION BY doc_id ORDER BY MIN(pos), term) AS rk
-    FROM tok WHERE doc_id < 3 GROUP BY doc_id, term) WHERE rk <= 5),
-scored AS (
-  SELECT q.q_id, t.doc_id,
-         SUM(LN(((SELECT n FROM st) - d.df + 0.5) / (d.df + 0.5) + 1.0)
-             * (t.tf * 2.2)
-             / (t.tf + 1.2 * (0.25 + 0.75 * l.dl / (SELECT avgdl FROM st)))
-         ) AS score
-  FROM tf t
-  JOIN qterms q USING (term)
-  JOIN dfq d USING (term)
-  JOIN dl l ON l.doc_id = t.doc_id
-  GROUP BY q.q_id, t.doc_id),
-ranked AS (SELECT q_id, doc_id, score,
-                  row_number() OVER (PARTITION BY q_id
-                      ORDER BY round(score, 9) DESC, doc_id) AS rank
-           FROM scored)
-SELECT q_id, CAST(rank AS INT) AS rank, doc_id, round(score, 6) AS score
-FROM ranked WHERE rank <= 10 ORDER BY q_id, rank
-"""
-
-
-def rrf_hybrid_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hybrid retrieval via reciprocal-rank fusion (llmdata/similarity
-    rrf_fuse): exact-cosine top-10 fused with PQ-ADC top-10 for the
-    same probes — the standard exact+compressed re-rank combiner. The
-    oracle wraps the two already-verified ranking oracles as CTEs and
-    replays the fusion."""
-    from hail_spark.llmdata import similarity as sim
-
-    e = _t(spark, sf_dir, "embeddings").df
-    q = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    dense = sim.brute_force_topk(e, q, k=10).select("q_id", "vec_id", "rank")
-    cbs = sim.pq_train(e, m=8, ncodes=16, n_iter=0)
-    pq = sim.pq_topk(sim.pq_encode(e, cbs), cbs, q, k=10).select(
-        "q_id", "vec_id", "rank"
-    )
-    fused = sim.rrf_fuse([dense, pq], k=10)
-    return fused.select(
-        "q_id", "rank", "vec_id", F.round("rrf_score", 9).alias("rrf_score")
-    ).orderBy("q_id", "rank")
-
-
-_RRF_SQL = f"""
-WITH a AS ({_ANN_SQL}),
-b AS ({_PQ_ANN_SQL}),
-u AS (SELECT q_id, vec_id, 1.0/(60.0+rank) AS s FROM a
-      UNION ALL
-      SELECT q_id, vec_id, 1.0/(60.0+rank) AS s FROM b),
-f AS (SELECT q_id, vec_id, SUM(s) AS rrf_score FROM u GROUP BY q_id, vec_id),
-r AS (SELECT q_id, vec_id, rrf_score,
-             row_number() OVER (PARTITION BY q_id
-                 ORDER BY round(rrf_score, 9) DESC, vec_id) AS rank
-      FROM f)
-SELECT q_id, CAST(rank AS INT) AS rank, vec_id, round(rrf_score, 9) AS rrf_score
-FROM r WHERE rank <= 10 ORDER BY q_id, rank
-"""
-
-
 def _micros(col_name: str):
     """TIMESTAMP_NTZ -> epoch microseconds, timezone-free (mirrors
     DuckDB's epoch_us on the same parquet column)."""
@@ -9746,44 +8739,6 @@ SELECT t AS token, COUNT(*) AS cnt
 FROM (SELECT unnest(string_split(text, ' ')) AS t FROM documents)
 GROUP BY t HAVING COUNT(*) >= 200
 ORDER BY token
-"""
-
-
-def bloom_decontam_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-screened decontamination (llmdata/decontam.py
-    bloom_decontaminate): same contract as decontam_overlap but the
-    benchmark membership test is a ~1 B/gram Bloom broadcast (map-only
-    screen) + an exact verify join over candidates only — the shape
-    for eval unions too big to broadcast as a hash relation. Output is
-    EXACT (screen over-selects only), so the oracle is the exact
-    decontamination SQL restricted to flagged rows."""
-    from hail_spark.llmdata.decontam import bloom_decontaminate
-
-    d = _t(spark, sf_dir, "documents").df
-    bench = d.filter(F.col("doc_id") % 13 == 0)
-    out = bloom_decontaminate(d, bench, n=8, min_hits=1, n_bits=1 << 20, k=4)
-    return out.select("doc_id", "n_grams", "n_hits").orderBy("doc_id")
-
-
-_BLOOM_DECONTAM_SQL = r"""
-WITH tok AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(
-           trim(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g')), '\s+'),
-           w -> w != '') AS toks
-  FROM documents),
-grams AS (
-  SELECT doc_id, array_to_string(list_slice(toks, i, i + 7), ' ') AS g
-  FROM tok, UNNEST(range(1, len(toks) - 8 + 2)) AS t(i)
-  WHERE len(toks) >= 8),
-bench AS (SELECT DISTINCT g FROM grams WHERE doc_id % 13 = 0),
-base AS (SELECT doc_id, len(toks) - 7 AS n_grams FROM tok WHERE len(toks) >= 8)
-SELECT d.doc_id, CAST(b.n_grams AS BIGINT) AS n_grams,
-       CAST(COUNT(*) AS BIGINT) AS n_hits
-FROM grams d JOIN bench USING (g) JOIN base b USING (doc_id)
-GROUP BY d.doc_id, b.n_grams
-HAVING COUNT(*) >= 1
-ORDER BY d.doc_id
 """
 
 
@@ -10858,202 +9813,6 @@ ORDER BY user_id, w_start
 """
 
 
-# memory-sink names must be fresh per call (bench runs a query 3×)
-_STREAM_CONF_SEQ = [0]
-
-
-class _stream_state_parts:
-    """Run a streaming replay with a SMALL state-partition count
-    (default 4, ``$SPARK_GRAFT_STREAM_STATE_PARTS``): every stateful
-    operator keeps one state store per shuffle partition and commits
-    EVERY store each micro-batch, so at gate scale the per-partition
-    commit overhead dominates (the r08 stream_stream_join lesson:
-    23 → 4.3 s). The conf is picked up at ``.start()`` and restored on
-    exit; a cluster run sizes it to key cardinality via the env var
-    instead (r10: applied to every replay, not just the ss-join)."""
-
-    def __init__(self, spark):
-        self._spark = spark
-
-    def __enter__(self):
-        self._old = self._spark.conf.get("spark.sql.shuffle.partitions")
-        self._spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTS", "4"),
-        )
-        return self
-
-    def __exit__(self, *exc):
-        self._spark.conf.set("spark.sql.shuffle.partitions", self._old)
-        return False
-
-
-def stream_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch/stream no-drift conformance (streaming/events.py): the
-    REAL Structured Streaming pipeline — file source in several
-    incremental triggers → watermarked tumbling-window counts → memory
-    sink — run to completion with trigger(availableNow=True); the FINAL
-    sink table must equal the batch tumbling-window SQL over the same
-    rows. This machine-checks the claim that batch and stream share
-    semantics (the stream op is the same Column tree), which pytest
-    previously asserted only against a Spark batch job, never against
-    an independent engine. approx_users (a sketch column) is excluded;
-    ts is re-encoded ns→µs for the stream source (Spark's reader
-    rejects TIMESTAMP(NANOS)) which cannot move an hour bucket."""
-    import shutil
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from hail_spark.streaming.events import (
-        read_events_stream,
-        stream_windowed_counts,
-    )
-
-    tag = sf_dir.rstrip("/").rsplit("sf", 1)[-1].replace(".", "_")
-    stage = _reg_staging(f"/tmp/hail_spark_stream_conf_{tag}_{os.getpid()}")
-    shutil.rmtree(stage, ignore_errors=True)
-    os.makedirs(stage)
-    t = pq.read_table(f"{sf_dir}/events.parquet")
-    ts_us = t.column("ts").cast(pa.timestamp("us"), safe=False)
-    t = t.set_column(t.schema.get_field_index("ts"), "ts", ts_us)
-    n = max(1, t.num_rows // 5)
-    for i, lo in enumerate(range(0, t.num_rows, n)):
-        pq.write_table(t.slice(lo, n), f"{stage}/part-{i}.parquet")
-
-    _STREAM_CONF_SEQ[0] += 1
-    sink = f"stream_conf_{os.getpid()}_{_STREAM_CONF_SEQ[0]}"
-    stream = read_events_stream(spark, stage, max_files_per_trigger=2)
-    counts = stream_windowed_counts(stream, window="1 hour", watermark="2 hours")
-    with _stream_state_parts(spark):
-        q = (
-            counts.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    # session tz is UTC (hail_spark/session.py), so the stream's LTZ
-    # window_start equals the parquet NTZ instant numerically
-    epoch = F.lit("1970-01-01 00:00:00").cast("timestamp")
-    return (
-        spark.table(sink)
-        .select(
-            F.timestamp_diff("MICROSECOND", epoch, F.col("window_start")).alias(
-                "w_start"
-            ),
-            "event_type",
-            "n_events",
-            F.round("sum_value", 4).alias("sum_value"),
-        )
-        .orderBy("w_start", "event_type")
-    )
-
-
-_STREAM_REPLAY_SQL = """
-SELECT CAST(epoch_us(date_trunc('hour', ts)) AS BIGINT) AS w_start,
-       event_type, COUNT(*) AS n_events,
-       round(SUM(value), 4) AS sum_value
-FROM events GROUP BY 1, 2 ORDER BY w_start, event_type
-"""
-
-
-def stream_stream_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream interval join replay conformance
-    (streaming/events.py stream_stream_interval_join): clicks and
-    purchases are staged as two INDEPENDENT file streams (several
-    incremental triggers each), joined on user_id with purchase.ts in
-    [click.ts, click.ts + 30 min] — both sides watermarked so the join
-    state is bounded — into an append memory sink; the sink's per-hour
-    pair aggregate must equal the batch self-join SQL over the same
-    rows. This is the canonical two-stream stateful operator
-    (click->purchase attribution) that stream_static_join_replay's
-    one-stream shape cannot exercise."""
-    import shutil
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    import pyarrow.compute as pc
-
-    from hail_spark.streaming.events import (
-        read_events_stream,
-        stream_stream_interval_join,
-    )
-
-    tag = sf_dir.rstrip("/").rsplit("sf", 1)[-1].replace(".", "_")
-    stage = _reg_staging(f"/tmp/hail_spark_ssj_{tag}_{os.getpid()}")
-    shutil.rmtree(stage, ignore_errors=True)
-    t = pq.read_table(f"{sf_dir}/events.parquet")
-    ts_us = t.column("ts").cast(pa.timestamp("us"), safe=False)
-    t = t.set_column(t.schema.get_field_index("ts"), "ts", ts_us)
-    for side in ("clicks", "purchases"):
-        sub = t.filter(
-            pc.equal(t.column("event_type"), side[:-1])
-        )  # 'click' / 'purchase'
-        os.makedirs(f"{stage}/{side}")
-        n = max(1, sub.num_rows // 2)
-        for i, lo in enumerate(range(0, sub.num_rows, n)):
-            pq.write_table(sub.slice(lo, n), f"{stage}/{side}/part-{i}.parquet")
-
-    _STREAM_CONF_SEQ[0] += 1
-    sink = f"stream_ssj_{os.getpid()}_{_STREAM_CONF_SEQ[0]}"
-    clicks = read_events_stream(spark, f"{stage}/clicks", max_files_per_trigger=1)
-    purchases = read_events_stream(
-        spark, f"{stage}/purchases", max_files_per_trigger=1
-    )
-    joined = stream_stream_interval_join(
-        clicks, purchases, horizon="30 minutes", watermark="2 hours"
-    ).select(
-        F.col("l.event_id").alias("click_id"),
-        F.col("l.ts").alias("click_ts"),
-        F.col("r.value").alias("purchase_value"),
-    )
-    # stream-stream joins keep FOUR state stores per shuffle partition
-    # and every micro-batch commits each of them — at gate scale the
-    # per-partition commit overhead dominates, so the state partition
-    # count is dropped for the duration of this query (a cluster run
-    # sizes it to the key cardinality instead); picked up at .start()
-    with _stream_state_parts(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    epoch = F.lit("1970-01-01 00:00:00").cast("timestamp")
-    return (
-        spark.table(sink)
-        .groupBy(
-            F.timestamp_diff(
-                "MICROSECOND", epoch, F.date_trunc("hour", F.col("click_ts"))
-            ).alias("w_start")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_pairs"),
-            F.countDistinct("click_id").alias("n_clicks"),
-            F.round(F.sum("purchase_value"), 4).alias("purchase_value"),
-        )
-        .orderBy("w_start")
-    )
-
-
-_STREAM_SS_JOIN_SQL = """
-WITH c AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
-p AS (SELECT user_id, ts, value FROM events WHERE event_type = 'purchase')
-SELECT CAST(epoch_us(date_trunc('hour', c.ts)) AS BIGINT) AS w_start,
-       COUNT(*) AS n_pairs,
-       CAST(COUNT(DISTINCT c.event_id) AS BIGINT) AS n_clicks,
-       round(SUM(p.value), 4) AS purchase_value
-FROM c JOIN p ON p.user_id = c.user_id
-             AND p.ts >= c.ts
-             AND p.ts <= c.ts + INTERVAL 30 MINUTE
-GROUP BY 1 ORDER BY w_start
-"""
-
-
 def hopping_window_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hopping (sliding) event-time windows — ``F.window(ts, '2 hours',
     '30 minutes')``: every event lands in exactly 4 overlapping
@@ -11088,68 +9847,6 @@ x AS (SELECT ((tsu // 1800000000) - i) * 1800000000 AS w_start,
 SELECT CAST(w_start AS BIGINT) AS w_start, event_type,
        COUNT(*) AS n_events, round(SUM(value), 4) AS sum_value
 FROM x GROUP BY 1, 2 ORDER BY w_start, event_type
-"""
-
-
-def quantize_emb_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-vector symmetric int8 quantization (llmdata/similarity.py
-    quantize_embeddings_int8): scale = max|x|/127, half-up codes
-    clamped to [-127,127] — the 4× embedding-lake compression. Output
-    is per-vector scalar stats (code sum/min/max + dequantization
-    RMSE) so the array never leaves the query; the oracle replays the
-    identical floor(x/s + 0.5) arithmetic."""
-    from hail_spark.llmdata.similarity import quantize_embeddings_int8
-
-    e = _t(spark, sf_dir, "embeddings").df
-    qd = quantize_embeddings_int8(e)
-    per = qd.select(
-        "vec_id",
-        "scale",
-        F.explode(F.arrays_zip("embedding", "q")).alias("z"),
-    ).select(
-        "vec_id",
-        "scale",
-        F.col("z.q").alias("qv"),
-        (F.col("z.embedding") - F.col("z.q") * F.col("scale")).alias("err"),
-    )
-    return (
-        per.groupBy("vec_id", "scale")
-        .agg(
-            F.sum(F.col("qv").cast("long")).alias("q_sum"),
-            F.min(F.col("qv").cast("int")).alias("q_min"),
-            F.max(F.col("qv").cast("int")).alias("q_max"),
-            F.round(
-                F.sqrt(F.sum(F.col("err") * F.col("err")) / F.count(F.lit(1))), 6
-            ).alias("rmse"),
-        )
-        .select(
-            "vec_id",
-            F.round("scale", 9).alias("scale"),
-            "q_sum",
-            "q_min",
-            "q_max",
-            "rmse",
-        )
-        .orderBy("vec_id")
-    )
-
-
-_QUANTIZE_EMB_SQL = """
-WITH s AS (
-  SELECT vec_id,
-         list_max(list_transform(embedding, v -> abs(CAST(v AS DOUBLE)))) / 127.0
-           AS scale,
-         embedding
-  FROM embeddings),
-per AS (
-  SELECT vec_id, scale, x,
-         greatest(-127, least(127, floor(x / scale + 0.5))) AS q
-  FROM s, UNNEST(embedding) AS t(x))
-SELECT vec_id, round(scale, 9) AS scale,
-       CAST(SUM(q) AS BIGINT) AS q_sum,
-       CAST(MIN(q) AS INT) AS q_min, CAST(MAX(q) AS INT) AS q_max,
-       round(sqrt(SUM((x - q * scale) * (x - q * scale)) / COUNT(*)), 6) AS rmse
-FROM per GROUP BY vec_id, scale ORDER BY vec_id
 """
 
 
@@ -11460,55 +10157,6 @@ FROM d4 ORDER BY node
 )
 
 
-def sparse_cosine_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lexical near-neighbor search (llmdata/similarity.py
-    sparse_cosine_topk): TF-IDF cosine top-5 per document via the
-    posting-list self-join with the max_df stop-word cap (terms in
-    more than 100 docs are dropped from the join numerator, norms stay
-    full — the conservative cap discipline). The oracle replays
-    tokenize/tf/idf/norm/join/rank; cosine is rounded BEFORE ranking
-    on both sides so rank order is engine-independent."""
-    from hail_spark.llmdata.similarity import sparse_cosine_topk
-
-    d = _t(spark, sf_dir, "documents").df
-    out = sparse_cosine_topk(d, k=5, max_df=100)
-    return out.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("rank").cast("int").alias("rank"),
-        F.col("other_id").cast("long").alias("other_id"),
-        "cosine",
-    ).orderBy("doc_id", "rank")
-
-
-_SPARSE_COSINE_SQL = """
-WITH tok AS (
-  SELECT doc_id, unnest(list_filter(
-           regexp_split_to_array(trim(lower(text)), '\\s+'), x -> x <> ''))
-         AS term
-  FROM documents),
-tf AS MATERIALIZED (SELECT doc_id, term, COUNT(*) AS tf FROM tok GROUP BY 1, 2),
-nd AS (SELECT CAST(COUNT(DISTINCT doc_id) AS DOUBLE) AS n FROM tf),
-dfq AS (SELECT term, COUNT(*) AS dfc FROM tf GROUP BY 1),
-w AS MATERIALIZED (
-  SELECT tf.doc_id, tf.term, dfq.dfc, tf.tf * ln(nd.n / dfq.dfc) AS wt
-  FROM tf JOIN dfq USING (term) CROSS JOIN nd),
-nrm AS (SELECT doc_id, sqrt(SUM(wt * wt)) AS nn FROM w GROUP BY 1),
-p AS (SELECT doc_id, term, wt FROM w WHERE dfc <= 100),
-pr AS (SELECT a.doc_id AS ia, b.doc_id AS ib, SUM(a.wt * b.wt) AS dot
-       FROM p a JOIN p b ON a.term = b.term AND a.doc_id < b.doc_id
-       GROUP BY 1, 2),
-cs AS (SELECT ia, ib, round(dot / (x.nn * y.nn), 6) AS c
-       FROM pr JOIN nrm x ON x.doc_id = pr.ia JOIN nrm y ON y.doc_id = pr.ib),
-m AS (SELECT ia AS d, ib AS o, c FROM cs
-      UNION ALL SELECT ib, ia, c FROM cs),
-r AS (SELECT d, o, c, row_number() OVER (PARTITION BY d ORDER BY c DESC, o) AS rn
-      FROM m)
-SELECT CAST(d AS BIGINT) AS doc_id, CAST(rn AS INT) AS rank,
-       CAST(o AS BIGINT) AS other_id, c AS cosine
-FROM r WHERE rn <= 5 ORDER BY doc_id, rank
-"""
-
-
 def basket_rules_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket association rules (operators/relational.py
     association_rules): baskets are orders, items are part groups
@@ -11604,64 +10252,6 @@ SELECT CAST(d AS VARCHAR) AS d, CAST(n AS BIGINT) AS n,
        round(cusum_pos, 6) AS cusum_pos, round(cusum_neg, 6) AS cusum_neg,
        (cusum_pos > 60.0 OR cusum_neg > 60.0) AS is_change
 FROM s ORDER BY d
-"""
-
-
-def knn_label_eval_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """kNN label-agreement embedding-quality gate (llmdata/similarity.py
-    knn_label_eval): every 40th vector queries the full corpus, its 5
-    nearest cosine neighbors (self excluded) majority-vote a label
-    (ties -> smallest), scored against the query's own label, rolled up
-    per true label. The oracle replays the cosine ranking, the vote,
-    and the rollup in SQL."""
-    from hail_spark.llmdata.similarity import knn_label_eval
-
-    e = _t(spark, sf_dir, "embeddings").df
-    q = e.filter(F.col("vec_id") % 40 == 0).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_vec"),
-        F.col("label").alias("q_label"),
-    )
-    out = knn_label_eval(e, q, k=5)
-    return out.select(
-        F.col("label").cast("string").alias("label"),
-        F.col("n_queries").cast("long").alias("n_queries"),
-        F.col("n_correct").cast("long").alias("n_correct"),
-        "accuracy",
-    ).orderBy("label")
-
-
-_KNN_LABEL_EVAL_SQL = """
-WITH q AS (SELECT vec_id AS q_id, embedding AS q_vec, label AS q_label
-           FROM embeddings WHERE vec_id % 40 = 0),
-scored AS (
-  SELECT q.q_id, e.vec_id, e.label AS nl,
-         list_aggregate(list_transform(range(1, 65),
-             i -> e.embedding[i]::DOUBLE * q.q_vec[i]::DOUBLE), 'sum')
-         / (sqrt(list_aggregate(list_transform(range(1, 65),
-             i -> e.embedding[i]::DOUBLE * e.embedding[i]::DOUBLE), 'sum'))
-          * sqrt(list_aggregate(list_transform(range(1, 65),
-             i -> q.q_vec[i]::DOUBLE * q.q_vec[i]::DOUBLE), 'sum'))) AS cos
-  FROM embeddings e, q WHERE e.vec_id <> q.q_id),
-ranked AS (SELECT q_id, nl,
-                  row_number() OVER (PARTITION BY q_id
-                                     ORDER BY cos DESC, vec_id) AS rk
-           FROM scored),
-votes AS (SELECT q_id, nl, COUNT(*) AS n FROM ranked WHERE rk <= 5
-          GROUP BY 1, 2),
-pred AS (SELECT q_id, nl AS pred FROM (
-           SELECT q_id, nl,
-                  row_number() OVER (PARTITION BY q_id
-                                     ORDER BY n DESC, nl) AS vr
-           FROM votes) WHERE vr = 1)
-SELECT CAST(q.q_label AS VARCHAR) AS label,
-       COUNT(*) AS n_queries,
-       CAST(SUM(CASE WHEN pred.pred = q.q_label THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_correct,
-       round(SUM(CASE WHEN pred.pred = q.q_label THEN 1 ELSE 0 END)
-             / CAST(COUNT(*) AS DOUBLE), 6) AS accuracy
-FROM pred JOIN q ON q.q_id = pred.q_id
-GROUP BY q.q_label ORDER BY label
 """
 
 
@@ -11867,7 +10457,6 @@ FROM agg WHERE node < 1000000 ORDER BY node
 """
 
 
-
 _KCORE_STEP = """
 d{i} AS (SELECT node, COUNT(*) AS dg FROM (
     SELECT lo AS node FROM e{p} UNION ALL SELECT hi FROM e{p}) GROUP BY node),
@@ -12006,10 +10595,6 @@ SELECT CAST(s AS BIGINT) AS sample, COUNT(*) AS n,
 FROM rk JOIN m ON m.r = rk.r
 GROUP BY s ORDER BY sample
 """
-
-
-
-
 
 
 def resample_events_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12241,75 +10826,6 @@ GROUP BY tok ORDER BY tok
 """
 
 
-def binarize_emb_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary embedding codes (llmdata/similarity.py
-    binarize_embeddings): sign bits packed 60-per-bigint (sign-safe
-    shifts, exactly replayable with `1::BIGINT << j` in the oracle) —
-    the 32× compression tier. Output posexploded to (vec_id, word
-    index, packed word) scalar rows."""
-    from hail_spark.llmdata.similarity import binarize_embeddings
-
-    e = _t(spark, sf_dir, "embeddings").df
-    b = binarize_embeddings(e)
-    return (
-        b.select("vec_id", F.posexplode("bits").alias("w", "word"))
-        .select("vec_id", F.col("w").cast("long").alias("w"), "word")
-        .orderBy("vec_id", "w")
-    )
-
-
-_BINARIZE_EMB_SQL = """
-WITH per AS (
-  SELECT vec_id, (i - 1) // 60 AS w,
-         CASE WHEN embedding[i] >= 0
-              THEN (CAST(1 AS BIGINT) << CAST((i - 1) % 60 AS INT))
-              ELSE CAST(0 AS BIGINT) END AS bit
-  FROM embeddings, LATERAL unnest(range(1, len(embedding) + 1)) AS t(i))
-SELECT vec_id, w, CAST(SUM(bit) AS BIGINT) AS word
-FROM per GROUP BY vec_id, w ORDER BY vec_id, w
-"""
-
-
-def hamming_ann_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hamming-distance ANN over binary codes (llmdata/similarity.py
-    hamming_topk): top-10 nearest corpus vectors per query (first 10
-    vectors) by popcount(xor) over the packed words — JVM bit_count,
-    no floats touched after binarization. Deterministic
-    (distance, id) tie-break on both engines."""
-    from hail_spark.llmdata.similarity import (
-        binarize_embeddings,
-        hamming_topk,
-    )
-
-    e = _t(spark, sf_dir, "embeddings").df
-    b = binarize_embeddings(e).select("vec_id", "bits")
-    qs = b.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"), "bits"
-    )
-    return hamming_topk(b, qs, k=10).orderBy("q_id", "rank")
-
-
-_HAMMING_ANN_SQL = """
-WITH per AS (
-  SELECT vec_id, (i - 1) // 60 AS w,
-         CASE WHEN embedding[i] >= 0
-              THEN (CAST(1 AS BIGINT) << CAST((i - 1) % 60 AS INT))
-              ELSE CAST(0 AS BIGINT) END AS bit
-  FROM embeddings, LATERAL unnest(range(1, len(embedding) + 1)) AS t(i)),
-words AS (SELECT vec_id, w, CAST(SUM(bit) AS BIGINT) AS word
-          FROM per GROUP BY vec_id, w),
-dist AS (SELECT q.vec_id AS q_id, c.vec_id AS vec_id,
-                CAST(SUM(bit_count(xor(q.word, c.word))) AS BIGINT) AS hamming
-         FROM words q JOIN words c ON q.w = c.w
-         WHERE q.vec_id < 10 GROUP BY 1, 2),
-r AS (SELECT *, row_number() OVER (PARTITION BY q_id
-                                   ORDER BY hamming, vec_id) AS rank
-      FROM dist)
-SELECT q_id, CAST(rank AS INT) AS rank, vec_id, hamming
-FROM r WHERE rank <= 10 ORDER BY q_id, rank
-"""
-
-
 def temperature_mix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-scaled source mixing (llmdata/sampling.py
     temperature_weights ∘ weighted_mix — the mT5/XLM-R unigram-LM
@@ -12405,50 +10921,6 @@ j AS (
 SELECT doc_id, COUNT(*) AS n_tokens, CAST(SUM(oov) AS BIGINT) AS n_oov,
        round(CAST(SUM(oov) AS DOUBLE) / COUNT(*), 9) AS oov_rate
 FROM j GROUP BY doc_id ORDER BY doc_id
-"""
-
-
-def stream_dedup_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming-dedup conformance (streaming/events.py
-    stream_exact_dedup): the real dropDuplicatesWithinWatermark
-    pipeline replayed to completion over the static documents table in
-    several incremental file triggers; the surviving CONTENT-HASH SET
-    must equal batch DISTINCT md5(text) — which copy of a duplicate
-    survives is arrival-order-dependent by design, but the kept hash
-    set (and its size: exactly one survivor per distinct text) is
-    deterministic and oracle-checkable."""
-    import shutil
-
-    from hail_spark.streaming.events import (
-        read_documents_stream,
-        stream_exact_dedup,
-    )
-
-    tag = sf_dir.rstrip("/").rsplit("sf", 1)[-1].replace(".", "_")
-    stage = _reg_staging(f"/tmp/hail_spark_sdedup_{tag}_{os.getpid()}")
-    shutil.rmtree(stage, ignore_errors=True)
-    d = _t(spark, sf_dir, "documents").df
-    d.repartition(5).write.parquet(stage)
-
-    _STREAM_CONF_SEQ[0] += 1
-    sink = f"sdedup_{os.getpid()}_{_STREAM_CONF_SEQ[0]}"
-    stream = read_documents_stream(spark, stage, max_files_per_trigger=2)
-    kept = stream_exact_dedup(stream)
-    with _stream_state_parts(spark):
-        q = (
-            kept.select(F.md5("text").alias("text_md5"))
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink).select("text_md5").orderBy("text_md5")
-
-
-_STREAM_DEDUP_SQL = """
-SELECT DISTINCT md5(text) AS text_md5 FROM documents ORDER BY text_md5
 """
 
 
@@ -12748,71 +11220,6 @@ SELECT vec_id,
   CAST(len(flatten([x, x])) AS INT) AS flat2,
   CAST(3 AS INT) AS rep3
 FROM b ORDER BY vec_id
-"""
-
-
-def stream_static_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-static join conformance: the events STREAM joined to the
-    static customer dimension (user_id mapped into the custkey space)
-    with a per-nation aggregate, run to completion with availableNow —
-    the enrich-then-aggregate shape every streaming ingest pipeline
-    uses. The static side is re-read per micro-batch by Structured
-    Streaming (fresh dimension each trigger); the final sink table must
-    equal the batch join SQL."""
-    import shutil
-
-    from hail_spark.streaming.events import read_events_stream
-
-    tag = sf_dir.rstrip("/").rsplit("sf", 1)[-1].replace(".", "_")
-    stage = _reg_staging(f"/tmp/hail_spark_stream_sj_{tag}_{os.getpid()}")
-    shutil.rmtree(stage, ignore_errors=True)
-    os.makedirs(stage)
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    t = pq.read_table(f"{sf_dir}/events.parquet")
-    ts_us = t.column("ts").cast(pa.timestamp("us"), safe=False)
-    t = t.set_column(t.schema.get_field_index("ts"), "ts", ts_us)
-    n = max(1, t.num_rows // 4)
-    for i, lo in enumerate(range(0, t.num_rows, n)):
-        pq.write_table(t.slice(lo, n), f"{stage}/part-{i}.parquet")
-
-    c = _t(spark, sf_dir, "customer").df.select(
-        "c_custkey", "c_nationkey"
-    )
-    n_cust = c.count()
-    stream = read_events_stream(spark, stage, max_files_per_trigger=2)
-    joined = stream.withColumn(
-        "c_custkey", F.col("user_id") % F.lit(n_cust)
-    ).join(c, "c_custkey")
-    agg = joined.groupBy("c_nationkey").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.round(
-            F.sum(F.col("value").cast("decimal(38,6)")).cast("double"), 4
-        ).alias("v_sum"),
-    )
-    _STREAM_CONF_SEQ[0] += 1
-    sink = f"stream_sj_{os.getpid()}_{_STREAM_CONF_SEQ[0]}"
-    with _stream_state_parts(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink).orderBy("c_nationkey")
-
-
-_STREAM_STATIC_JOIN_SQL = """
-WITH nc AS (SELECT COUNT(*) AS n FROM customer)
-SELECT c_nationkey, COUNT(*) AS n_events,
-       round(CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE), 4) AS v_sum
-FROM events e
-JOIN nc ON TRUE
-JOIN customer c ON c.c_custkey = e.user_id % nc.n
-GROUP BY c_nationkey ORDER BY c_nationkey
 """
 
 
@@ -14375,107 +12782,6 @@ GROUP BY j.feature ORDER BY j.feature
 """
 
 
-def stream_sessionize_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom STATEFUL streaming operator conformance (streaming/
-    events.py sessionize_stream — applyInPandasWithState with
-    per-user running session state): replay the event files in
-    incremental triggers with availableNow; since no processing-time
-    timeout can fire inside a single fast replay, each user's LAST
-    update row is the full-history accumulation, which must equal the
-    batch per-user aggregate — checked against an independent engine.
-    This upgrades the stateful-operator claim from pytest-vs-Spark to
-    the oracle gate. Output: per-user n_events / total / span micros."""
-    import shutil
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from hail_spark.streaming.events import (
-        read_events_stream,
-        sessionize_stream,
-    )
-
-    tag = sf_dir.rstrip("/").rsplit("sf", 1)[-1].replace(".", "_")
-    stage = _reg_staging(f"/tmp/hail_spark_sess_conf_{tag}_{os.getpid()}")
-    shutil.rmtree(stage, ignore_errors=True)
-    os.makedirs(stage)
-    t = pq.read_table(f"{sf_dir}/events.parquet")
-    ts_us = t.column("ts").cast(pa.timestamp("us"), safe=False)
-    t = t.set_column(t.schema.get_field_index("ts"), "ts", ts_us)
-    n = max(1, t.num_rows // 4)
-    for i, lo in enumerate(range(0, t.num_rows, n)):
-        pq.write_table(t.slice(lo, n), f"{stage}/part-{i}.parquet")
-
-    _STREAM_CONF_SEQ[0] += 1
-    sink = f"sess_conf_{os.getpid()}_{_STREAM_CONF_SEQ[0]}"
-    stream = read_events_stream(spark, stage, max_files_per_trigger=2)
-    sessions = sessionize_stream(stream)
-    # a stateful query with ProcessingTimeTimeout keeps scheduling
-    # batches to service pending timeouts even under availableNow, so
-    # awaitTermination() would never return — instead poll until every
-    # source row is accounted for in the sink's per-user maxima (the
-    # data batches drain in seconds), then stop. Extra timeout-closure
-    # rows emitted meanwhile only duplicate final state and are
-    # absorbed by the max/max_by aggregation below.
-    import time as _time
-
-    with _stream_state_parts(spark):
-        q = (
-            sessions.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        total_rows = t.num_rows
-        deadline = _time.time() + 300
-        while _time.time() < deadline:
-            # 0.5 s poll: the data batches drain in a few seconds and the
-            # 2 s granularity added up to ~2 s of dead wait after the last
-            # row landed (the drained check itself is a ~0.1 s memory-table
-            # agg, so tighter polling costs little)
-            if q.awaitTermination(0.5):
-                break
-            drained = (
-                spark.table(sink)
-                .groupBy("user_id")
-                .agg(F.max("n_events").alias("__n"))
-                .agg(F.sum("__n"))
-                .head()[0]
-            )
-            if drained == total_rows:
-                break
-        q.stop()
-    epoch = F.lit("1970-01-01 00:00:00").cast("timestamp")
-    # update mode appends every per-trigger update; the final state per
-    # user is the row with the largest n_events (state only grows)
-    return (
-        spark.table(sink)
-        .groupBy("user_id")
-        .agg(
-            F.max("n_events").alias("n_events"),
-            F.round(F.max_by("total_value", "n_events"), 4).alias("total_value"),
-            F.timestamp_diff(
-                "MICROSECOND", epoch, F.min("session_start")
-            ).alias("start_us"),
-            F.timestamp_diff(
-                "MICROSECOND", epoch, F.max("session_end")
-            ).alias("end_us"),
-        )
-        .orderBy("user_id")
-    )
-
-
-_STREAM_SESSIONIZE_SQL = """
-SELECT user_id,
-       CAST(COUNT(*) AS BIGINT) AS n_events,
-       round(SUM(COALESCE(value, 0.0)), 4) AS total_value,
-       CAST(epoch_us(MIN(ts)) AS BIGINT) AS start_us,
-       CAST(epoch_us(MAX(ts)) AS BIGINT) AS end_us
-FROM events GROUP BY user_id ORDER BY user_id
-"""
-
-
 def psi_drift_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution drift by Population Stability Index (operators/
     validate.py psi_report): o_totalprice of pre-1995 orders as the
@@ -14989,70 +13295,6 @@ FROM s GROUP BY lang, split ORDER BY lang, split
 """
 
 
-def tdigest_kll_xcheck_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quantile-sketch cross-check (operators/tdigest.py TDigest vs
-    operators/kll.py KLLSketch): both mergeable sketches run over the
-    same 128 exact decimal bucket sums (o_orderkey % 128 — fixed
-    cardinality at every SF), in their EXACT regimes (t-digest
-    singleton centroids at compression 256 > 128; KLL k=512 never
-    compacts 128 values), guarded loudly. The t-digest quantile is
-    the linear order-statistic rule (its documented centroid-midpoint
-    interpolation), KLL's is the discrete first-cum->=qn rule — the
-    oracle replays BOTH from window order statistics, pinning the two
-    sketches' differing quantile conventions engine-exactly."""
-    from hail_spark.operators.kll import kll_sketch
-    from hail_spark.operators.tdigest import tdigest_sketch
-
-    o = _t(spark, sf_dir, "orders").df
-    b = o.groupBy((F.col("o_orderkey") % 128).alias("g")).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(15,2)"))
-        .cast("double")
-        .alias("v")
-    )
-    td = tdigest_sketch(b, "v", compression=256)
-    kl = kll_sketch(b, "v", k=512)
-    if not td.is_exact():
-        raise AssertionError(
-            "tdigest_kll_xcheck: t-digest left the singleton exact regime "
-            f"(n={td.n}, compression={td.compression}) — the order-statistic "
-            "oracle no longer applies; raise compression"
-        )
-    if len(kl.levels) != 1:
-        raise AssertionError(
-            "tdigest_kll_xcheck: KLL compacted (exact regime left) — "
-            "raise k"
-        )
-    rows = []
-    for q in (0.1, 0.25, 0.5, 0.75, 0.9, 0.99):
-        tq = td.quantile(q)
-        kq = kl.quantile(q)
-        rows.append(
-            (q, round(tq, 6), round(kq, 6), round(abs(tq - kq), 6))
-        )
-    return spark.createDataFrame(
-        rows, "q double, td_q double, kll_q double, abs_diff double"
-    )
-
-
-_TDIGEST_KLL_SQL = """
-WITH b AS (
-  SELECT o_orderkey % 128 AS g,
-         CAST(SUM(CAST(o_totalprice AS DECIMAL(15,2))) AS DOUBLE) AS v
-  FROM orders GROUP BY 1),
-s AS (SELECT v, row_number() OVER (ORDER BY v) AS rn FROM b),
-qs(q0) AS (VALUES (0.1), (0.25), (0.5), (0.75), (0.9), (0.99)),
-t AS (SELECT CAST(q0 AS DOUBLE) AS q, CAST(q0 AS DOUBLE) * 127 AS t FROM qs),
-td AS (SELECT q, lo.v + (t - FLOOR(t)) * (hi.v - lo.v) AS td_q
-       FROM t JOIN s lo ON lo.rn = CAST(FLOOR(t) AS INT) + 1
-              JOIN s hi ON hi.rn = CAST(FLOOR(t) AS INT) + 2),
-kll AS (SELECT q, s.v AS kll_q
-        FROM t JOIN s ON s.rn = CAST(CEIL(q * 128) AS INT))
-SELECT td.q, round(td_q, 6) AS td_q, round(kll_q, 6) AS kll_q,
-       round(ABS(td_q - kll_q), 6) AS abs_diff
-FROM td JOIN kll USING (q) ORDER BY q
-"""
-
-
 def rfm_segments_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM customer segmentation (operators/relational.py
     rfm_segments): recency/frequency/monetary quartiles over orders,
@@ -15449,36 +13691,6 @@ WHERE CAST(n_common AS DOUBLE) / sz.sz >= 0.6
 ORDER BY id_a, id_b
 """
 )
-
-
-def stopword_overflow_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The posting-cap overflow REPORT as a first-class query
-    (llmdata/similarity.py sparse_cosine_overflow): which terms would
-    a max_df=100 cap drop from the sparse-cosine posting join, and
-    how many docs share each — the drop-and-stay-conservative caps
-    (r08/r09 discipline) are only trustworthy if the user can see
-    what they exclude, so the report itself is oracle-checked. At
-    this corpus the cap is ACTIVE (stop words exceed 100 docs), so
-    the row set is non-trivial at every SF."""
-    from hail_spark.llmdata.similarity import sparse_cosine_overflow
-
-    d = _t(spark, sf_dir, "documents").df
-    out = sparse_cosine_overflow(d, max_df=100)
-    return out.select(
-        "term", F.col("n_docs").cast("long").alias("n_docs")
-    ).orderBy("term")
-
-
-_STOPWORD_OVERFLOW_SQL = r"""
-WITH tok AS (
-  SELECT doc_id, unnest(list_filter(
-           regexp_split_to_array(trim(lower(text)), '\s+'), x -> x <> ''))
-         AS term
-  FROM documents),
-tf AS (SELECT DISTINCT doc_id, term FROM tok)
-SELECT term, CAST(COUNT(*) AS BIGINT) AS n_docs
-FROM tf GROUP BY term HAVING COUNT(*) > 100 ORDER BY term
-"""
 
 
 def dow_seasonality_q(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -50,45 +50,6 @@ def main():
     _li.groupBy("l_orderkey").count().join(
         _o.select("o_orderkey"), _li.l_orderkey == _o.o_orderkey
     ).orderBy("count").limit(10).write.mode("overwrite").format("noop").save()
-    # warm the STREAMING machinery the same way (micro-batch engine,
-    # offset/commit logs, state store provider, memory sink): the first
-    # streaming query of a session otherwise absorbs all of that inside
-    # its timed region — measured 7-59 s for the first replay of a fresh
-    # session vs 2-5 s once warm. One tiny file-source stateful query,
-    # run to completion untimed, exactly like the batch warmup above.
-    try:
-        import shutil
-        import tempfile
-
-        _wdir = tempfile.mkdtemp(prefix="bench_stream_warm_")
-        try:
-            from pyspark.sql import functions as _F
-
-            spark.range(200).select(
-                _F.col("id"),
-                _F.timestamp_seconds(_F.col("id") * 60).alias("ts"),
-            ).repartition(2).write.mode("overwrite").parquet(_wdir + "/src")
-            _ws = (
-                spark.readStream.schema("id bigint, ts timestamp")
-                .option("maxFilesPerTrigger", 1)
-                .parquet(_wdir + "/src")
-                .withWatermark("ts", "10 minutes")
-                .groupBy(_F.window("ts", "1 hour"))
-                .count()
-            )
-            _wq = (
-                _ws.writeStream.format("memory")
-                .queryName("bench_stream_warm")
-                .outputMode("complete")
-                .option("checkpointLocation", _wdir + "/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            _wq.awaitTermination()
-        finally:
-            shutil.rmtree(_wdir, ignore_errors=True)
-    except Exception as e:  # noqa: BLE001 - warmup must never fail the bench
-        print(f"# stream warmup skipped: {e}", file=sys.stderr)
     iters = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_ITERS", "3")))
     only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
     only_set = set(only.split(",")) if only else None

@@ -65,19 +65,17 @@ QUERIES = [
     # round-4 additions: broadcast-Lloyd kmeans + bounded intra-cluster
     # self-join, and the gram posting-list df join
     "semantic_dedup_kmeans", "duplicated_gram_stats",
-    # corpus line dedup (3 hash shuffles incl. document reassembly) and
-    # the PQ/IVFPQ ADC scans (map-only encode + bounded top-k window)
-    "line_dedup_docs", "pq_ann_topk", "ivfpq_ann_topk",
+    # corpus line dedup (3 hash shuffles incl. document reassembly)
+    "line_dedup_docs",
     # span-removal rebuild (posting-list + coverage anti-join), the
     # incremental band-index probe, and the chunk explode
     "span_removal_exactsubstr", "incremental_dedup_batch",
     "chunk_documents_windows",
     # round-5 additions: the as-of union-merge (one key shuffle + per-key
     # sort), gap sessionization (windows + partition-reusing groupBy),
-    # Misra-Gries heavy hitters (candidate screen vs the token long
-    # tail), and the bloom decontamination screen+verify
+    # and Misra-Gries heavy hitters (candidate screen vs the token long
+    # tail)
     "asof_join_events", "sessionize_events", "frequent_tokens_exact",
-    "bloom_decontam_flagged",
     # bucketed write+join (the write IS the cost being amortized), the
     # CDC full-outer merge, and the salted-skew join
     "bucketed_join_agg", "merge_upsert_snapshot", "salted_join_skewed",
@@ -96,14 +94,10 @@ QUERIES = [
     "dsir_importance_select", "kmv_theta_sketch", "span_corruption_pairs",
     "attribution_first_last", "label_propagation_communities",
     "triangle_count_suppliers", "bigram_logprob_docs",
-    # round-8 additions: the multimodal dedup triple (Arrow decode +
-    # banded/posting-list joins over per-doc fixtures) and the unigram
-    # Viterbi encode projection
-    "image_near_dup_assets", "audio_near_dup_assets",
-    "video_near_dup_assets", "unigram_encode_docs",
-    # round-8 iterative/graph/posting-join additions
-    "sssp_purchase_graph", "kcore_purchase_graph", "doc_cosine_topk",
-    "basket_rules_parts", "stream_stream_join_replay",
+    # round-8 additions: the unigram Viterbi encode projection and the
+    # iterative/graph/posting-join queries
+    "unigram_encode_docs",
+    "sssp_purchase_graph", "kcore_purchase_graph", "basket_rules_parts",
     # round-9 additions: the community-quality joins, the wedge +
     # anti-join link predictor, the shingle containment posting join,
     # and the 3-window SCD2 build. (harmonic_centrality_graph /

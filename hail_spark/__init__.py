@@ -96,8 +96,6 @@ _LAZY = {
     "graph": ("hail_spark.operators.graph", None),
     "validate": ("hail_spark.operators.validate", None),
     "layout": ("hail_spark.io.layout", None),
-    "streaming": ("hail_spark.streaming", None),
-    "multimodal": ("hail_spark.llmdata.multimodal", None),
     "abtest": ("hail_spark.operators.abtest", None),
     "incremental": ("hail_spark.operators.incremental", None),
     "denoise": ("hail_spark.llmdata.denoise", None),

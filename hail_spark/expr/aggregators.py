@@ -253,8 +253,8 @@ def approx_cdf(expr, k: int = 100, *, accuracy: int = 10000) -> Column:
     ``approx_cdf(expr, k=100)``): the reference's KLL sketch returns
     ``values`` (length m) with ``ranks`` one LONGER (length m+1) —
     ``ranks[i]`` ≈ #elements < values[i], ``ranks[i+1]`` ≈ #elements
-    <= values[i], ranks[0] == 0 and ranks[-1] == n (same shape as
-    operators/kll.py ``cdf()``). This reconstructs that contract from
+    <= values[i], ranks[0] == 0 and ranks[-1] == n, and ``n`` is the
+    count of non-null inputs. This reconstructs that contract from
     Spark's GK percentile_approx at k evenly spaced quantiles
     (i/k, i = 0..k-1) plus one count — within GK's error bounds rather
     than KLL's, but the same struct shape and CDF-monotonicity

@@ -23,8 +23,7 @@ from pyspark.sql import functions as F
 def zorder_interleave(cols: list[Column], bits: int = 16) -> Column:
     """Morton-interleave pre-gridded NON-NEGATIVE ints (< 2^bits):
     bit j of column c lands at position j*m + c. bits*m must stay
-    ≤ 60 so the result never touches the sign bit (same sign-safe
-    discipline as llmdata.similarity.binarize_embeddings)."""
+    ≤ 60 so the result never touches the sign bit."""
     m = len(cols)
     if not m:
         raise ValueError("zorder_interleave: need at least one column")

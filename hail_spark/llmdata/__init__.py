@@ -1,1 +1,1 @@
-from . import decontam, dedup, multimodal, sampling, scrub, similarity, textstats, tokenizer  # noqa: F401
+from . import dedup, sampling, scrub, textstats, tokenizer  # noqa: F401

@@ -1092,7 +1092,7 @@ def duplicated_gram_stats(
     with a min!=max id test (two simple agg buffers instead of a
     countDistinct), and the flag joins back on the gram int — explode
     -> two hash shuffles bounded by corpus gram count, the posting-list
-    pattern shared with decontaminate()/winnowing_overlap_pairs().
+    pattern shared with winnowing_overlap_pairs().
     Suffix-array ExactSubstr finds arbitrary-length repeats; the
     fixed-n gram form is the shuffle-friendly approximation (any
     repeat >= n tokens is caught).

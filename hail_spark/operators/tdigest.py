@@ -1,8 +1,8 @@
 """t-digest quantile sketch (Dunning & Ertl 2019, merging-digest
-family) — the second mergeable quantile summary next to KLL
-(operators/kll.py) and GK ``percentile_approx``.
+family) — a mergeable quantile summary next to GK
+``percentile_approx``.
 
-Why a third quantile sketch: KLL/GK bound RANK error (quantiles of
+Why another quantile sketch: KLL/GK bound RANK error (quantiles of
 uniform accuracy everywhere), the t-digest bounds error RELATIVE to
 ``q(1-q)`` — tight tails (p99.9 latency, contamination thresholds) at
 the same memory. This implementation uses the uniform weight-bound

@@ -126,12 +126,9 @@ def run_gate(spark, sf_dir: str, only=None, workers: int | None = None) -> dict[
     ``workers`` > 1 checks queries CONCURRENTLY on a small driver thread
     pool (guide §2.6 — actions are independent jobs, so one query's
     straggler tail back-fills with the next query's stages; measured
-    ~2.5x on the full 330-query gate). Streaming replays stay serial:
-    they toggle session-global conf around .start() and share the sink
-    sequence counter. Default from $SPARK_GRAFT_GATE_WORKERS (1 = the
-    old serial behavior). Each worker gets its own DuckDB cursor; the
-    iterative ops' AQE-off checkpoint windows may overlap other
-    threads' planning, which changes plans, never results.
+    ~2.5x on the full 330-query gate). Default from
+    $SPARK_GRAFT_GATE_WORKERS (1 = the old serial behavior). Each worker
+    gets its own DuckDB cursor.
     """
     if workers is None:
         workers = int(os.environ.get("SPARK_GRAFT_GATE_WORKERS", "1"))
@@ -139,7 +136,6 @@ def run_gate(spark, sf_dir: str, only=None, workers: int | None = None) -> dict[
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     qs = entry_mod.queries()
-    os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf_dir
     oracles = entry_mod.oracle_sql()
     names = [n for n in qs if not only or n in only]
     results: dict[str, str] = {}
@@ -147,8 +143,6 @@ def run_gate(spark, sf_dir: str, only=None, workers: int | None = None) -> dict[
         for name in names:
             results[name] = _check_one(spark, con, sf_dir, name, qs[name], oracles)
         return results
-    par = [n for n in names if not n.startswith("stream_")]
-    ser = [n for n in names if n.startswith("stream_")]
     from concurrent.futures import ThreadPoolExecutor
 
     def work(name):
@@ -159,10 +153,8 @@ def run_gate(spark, sf_dir: str, only=None, workers: int | None = None) -> dict[
             cur.close()
 
     with ThreadPoolExecutor(max_workers=workers) as pool:
-        for name, res in pool.map(work, par):
+        for name, res in pool.map(work, names):
             results[name] = res
-    for name in ser:
-        results[name] = _check_one(spark, con, sf_dir, name, qs[name], oracles)
     return results
 
 

@@ -130,49 +130,6 @@ def test_moments_range_guard_raises(spark):
     assert got == [0.0, 1.0]
 
 
-def test_quantize_embeddings_int8_roundtrip(spark):
-    """Symmetric int8 quantization: codes bounded, zero vector safe,
-    dequantization error <= scale/2 per coordinate."""
-    from hail_spark.llmdata.similarity import quantize_embeddings_int8
-
-    rows = [
-        (1, [1.0, -2.0, 0.5, 127.0]),
-        (2, [0.0, 0.0, 0.0, 0.0]),   # zero vector
-        (3, [-0.003, 0.001, 0.002, -0.001]),
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = {r["vec_id"]: r for r in quantize_embeddings_int8(df).collect()}
-    assert out[2]["scale"] == 0.0 and out[2]["q"] == [0, 0, 0, 0]
-    for vid in (1, 3):
-        s, q, x = out[vid]["scale"], out[vid]["q"], dict(rows)[vid]
-        assert all(-127 <= c <= 127 for c in q)
-        assert all(abs(xi - ci * s) <= s / 2 + 1e-12 for xi, ci in zip(x, q))
-    # max-magnitude coordinate maps to ±127 exactly
-    assert out[1]["q"][3] == 127
-
-
-def test_binarize_and_hamming(spark):
-    """Sign-bit packing: known vector -> known words; hamming distance
-    between a vector and its sign-flip = dimension count."""
-    from hail_spark.llmdata.similarity import binarize_embeddings, hamming_topk
-
-    rows = [
-        (1, [1.0] * 61),                 # 61 dims -> 2 words
-        (2, [-1.0] * 61),
-        (3, [1.0] * 60 + [-1.0]),
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    b = {r["vec_id"]: r["bits"] for r in binarize_embeddings(df).collect()}
-    assert b[1] == [(1 << 60) - 1, 1]     # all 60 bits + 1 bit in word 2
-    assert b[2] == [0, 0]
-    assert b[3] == [(1 << 60) - 1, 0]
-    bits = binarize_embeddings(df).select("vec_id", "bits")
-    qs = bits.filter("vec_id = 1").selectExpr("vec_id AS q_id", "bits")
-    got = {(r["vec_id"]): r["hamming"]
-           for r in hamming_topk(bits, qs, k=3).collect()}
-    assert got == {1: 0, 3: 1, 2: 61}
-
-
 def test_temperature_weights_expected_size(spark):
     """alpha=1 -> all weights 1 (no change); alpha=0 -> uniform over
     sources; expected output size equals input size for any alpha."""

@@ -1,11 +1,10 @@
-"""NDArray struct ops (differential vs numpy) + multimodal plumbing."""
+"""NDArray struct ops (differential vs numpy)."""
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from hail_spark.expr import ndarray as nd
-from hail_spark.llmdata import multimodal as mm
 
 
 @pytest.fixture(scope="module")
@@ -100,52 +99,6 @@ def test_singular_matrix_returns_null(spark):
     assert df.select(nd.inv("m").alias("i")).first()["i"] is None
 
 
-# ------------------------------- multimodal ------------------------------ #
-@pytest.fixture(scope="module")
-def assets(spark):
-    rows = [
-        {"asset_id": i, "content": bytes([i % 251]) * (100 + i * 37), "source": f"s{i%2}"}
-        for i in range(8)
-    ]
-    rows.append({"asset_id": 99, "content": b"", "source": "bad"})
-    return mm.make_asset_table(spark, rows, "image")
-
-
-def test_image_metadata_and_embed(assets):
-    meta = {r["asset_id"]: r for r in mm.image_metadata(assets).collect()}
-    assert meta[0]["width"] == 8 and meta[0]["channels"] == 3
-    assert meta[99]["width"] is None  # empty content → null row, no crash
-    emb = {r["asset_id"]: r["embedding"] for r in mm.image_embed(assets.filter(F.col("asset_id") != 99)).collect()}
-    assert len(emb[1]) == 16
-    # determinism: same bytes → same embedding
-    assert emb[1] == mm.image_embed(assets.filter(F.col("asset_id") == 1)).first()["embedding"]
-
-
-def test_audio_and_video(assets):
-    good = assets.filter(F.col("asset_id") != 99)
-    au = mm.audio_features(good).collect()
-    assert all(r["rms"] > 0 for r in au)
-    assert {r["asset_id"] for r in au} == set(range(8))
-    frames = mm.video_frame_sample(good, every_n=2).collect()
-    assert all(r["frame_index"] % 2 == 0 for r in frames)
-    a0 = [r for r in frames if r["asset_id"] == 0]
-    assert len(a0) == 1  # 100 bytes → 1 frame at index 0
-    a7 = [r for r in frames if r["asset_id"] == 7]
-    assert len(a7) == (100 + 7 * 37) // 64 // 2 + 1
-
-
-def test_roundtrip_storage(assets, tmp_path):
-    p = str(tmp_path / "assets")
-    mm.write_assets(assets, p)
-    back = mm.read_assets(assets.sparkSession, p)
-    assert back.count() == 9
-    assert back.schema["content"].dataType.typeName() == "binary"
-    # metadata-only query on the stored table does not touch content
-    plan = back.select("asset_id", "meta_source").queryExecution if False else None
-    cnt = back.filter(F.col("meta_source") == "s0").count()
-    assert cnt == 4
-
-
 def test_vstack_hstack(spark):
     from hail_spark.expr import ndarray as nd
 
@@ -222,27 +175,6 @@ def test_blockmatrix_svd(spark):
     np.testing.assert_allclose(s_only, s, atol=1e-12)
 
 
-def test_image_resize(spark):
-    import numpy as np
-
-    from hail_spark.llmdata import multimodal as mm
-
-    rows = [
-        {"asset_id": i, "content": bytes([i] * 32), "meta": "{}"} for i in range(1, 4)
-    ]
-    df = mm.make_asset_table(spark, rows, "image")
-    out = {r["asset_id"]: r for r in mm.image_resize(df, 4, 6).collect()}
-    assert len(out) == 3
-    for aid, r in out.items():
-        assert r["width"] == 4 and r["height"] == 6
-        arr = mm._decode_bmp(bytes(r["content"]))  # output is a real BMP now
-        # resize of the deterministic stub: spot-check nearest-neighbor math
-        src = mm._decode_image_stub(bytes([aid] * 32))
-        ys = (np.arange(6) * 8 // 6).clip(0, 7)
-        xs = (np.arange(4) * 8 // 4).clip(0, 7)
-        np.testing.assert_array_equal(arr, src[ys][:, xs])
-
-
 def test_nd_tail_eye_diagonal_maximum_minimum(spark):
     rng = np.random.default_rng(11)
     A = rng.normal(size=(3, 5))
@@ -269,58 +201,3 @@ def test_nd_tail_eye_diagonal_maximum_minimum(spark):
     np.testing.assert_allclose(row["mn"], np.minimum(A, B).flatten())
 
 
-def test_bmp_wav_real_codecs(spark):
-    import numpy as np
-
-    from hail_spark.llmdata import multimodal as mm
-
-    # BMP round trip, including non-multiple-of-4 row widths (padding)
-    rng = np.random.default_rng(7)
-    for w, h in [(5, 3), (8, 8), (1, 1), (6, 2)]:
-        img = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-        np.testing.assert_array_equal(mm._decode_bmp(mm._encode_bmp(img)), img)
-
-    # WAV round trip (16-bit quantization grid)
-    wave = (rng.integers(-32768, 32768, size=777) / 32768.0).astype(np.float32)
-    dec, sr = mm._decode_wav(mm._encode_wav(wave, 22050))
-    assert sr == 22050 and len(dec) == 777
-    np.testing.assert_allclose(dec, wave, atol=1.0 / 32767)
-
-    # dispatchers: real formats route to real decoders, others to stubs
-    arr, fmt = mm._decode_image(mm._encode_bmp(np.zeros((2, 2, 3), np.uint8)))
-    assert fmt == "bmp" and arr.shape == (2, 2, 3)
-    assert mm._decode_image(b"\xff\xd8 not-actually-jpeg")[1] == "stub"
-    w2, sr2, fmt2 = mm._decode_audio(mm._encode_wav(wave))
-    assert fmt2 == "wav" and sr2 == 16000
-    assert mm._decode_audio(b"mp3-ish bytes")[2] == "stub"
-
-    # end-to-end through the Spark operators on REAL assets
-    imgs = [
-        {"asset_id": i, "content": mm._encode_bmp(
-            rng.integers(0, 256, size=(4 + i, 6, 3), dtype=np.uint8)
-        ), "source": "cam"}
-        for i in range(3)
-    ]
-    adf = mm.make_asset_table(spark, imgs, "image")
-    meta = {r["asset_id"]: r for r in mm.image_metadata(adf).collect()}
-    for i in range(3):
-        assert meta[i]["format"] == "bmp"
-        assert (meta[i]["width"], meta[i]["height"]) == (6, 4 + i)
-    resized = {r["asset_id"]: r for r in mm.image_resize(adf, 3, 2).collect()}
-    for i in range(3):
-        out = mm._decode_bmp(bytes(resized[i]["content"]))
-        assert out.shape == (2, 3, 3)
-
-    wavs = [
-        {"asset_id": 10 + i, "content": mm._encode_wav(
-            (rng.integers(-32768, 32768, size=300 + i) / 32768.0).astype(np.float32),
-            8000,
-        ), "source": "mic"}
-        for i in range(2)
-    ]
-    wdf = mm.make_asset_table(spark, wavs, "audio")
-    au = {r["asset_id"]: r for r in mm.audio_features(wdf).collect()}
-    for i in range(2):
-        r = au[10 + i]
-        assert r["format"] == "wav" and r["sample_rate"] == 8000
-        assert r["n_samples"] == 300 + i and r["rms"] > 0

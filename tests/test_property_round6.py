@@ -43,34 +43,6 @@ def test_fuzzy_join_never_misses_pairs(spark, words, d):
 
 @settings(max_examples=8, deadline=None,
           suppress_health_check=list(HealthCheck))
-@given(st.lists(st.lists(
-    st.floats(min_value=-100, max_value=100, allow_nan=False,
-              allow_infinity=False, width=32),
-    min_size=1, max_size=130), min_size=1, max_size=6))
-def test_binarize_matches_python(spark, vecs):
-    """Packed sign-bit words equal a pure-Python packer for arbitrary
-    lengths (incl. >2 words) and values (incl. ±0.0: >= 0 rule)."""
-    from hail_spark.llmdata.similarity import binarize_embeddings
-
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
-        "vec_id long, embedding array<double>",
-    )
-    got = {r["vec_id"]: r["bits"]
-           for r in binarize_embeddings(df).collect()}
-    for i, v in enumerate(vecs):
-        want = []
-        for w in range((len(v) + 59) // 60):
-            word = 0
-            for j, x in enumerate(v[w * 60:(w + 1) * 60]):
-                if x >= 0:
-                    word |= 1 << j
-            want.append(word)
-        assert got[i] == want, (i, v)
-
-
-@settings(max_examples=8, deadline=None,
-          suppress_health_check=list(HealthCheck))
 @given(st.lists(st.tuples(st.integers(0, 3), st.integers(-50, 50)),
                 min_size=1, max_size=30),
        st.integers(min_value=1, max_value=7))

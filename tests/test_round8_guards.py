@@ -1,119 +1,9 @@
-"""Round-8 guards: posting-list caps on constant content, the hamming
-packing-contract validation, the fixed-width \\x01 corruption guard,
-pagerank block hygiene, and the real-codec plug-in seams."""
+"""Round-8 guards: the fixed-width \\x01 corruption guard, pagerank
+block hygiene, unigram distributed-EM parity and the query_table
+key-range manifest."""
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
-
-
-# --------------------------------------------------------------------- #
-# posting caps: constant content must complete BOUNDED with the drop
-# reported, instead of generating m^2 pair rows
-# --------------------------------------------------------------------- #
-def test_video_star_content_capped(spark):
-    from hail_spark.llmdata.multimodal import (
-        video_near_dup,
-        video_posting_overflow,
-    )
-
-    # 10k assets, each = one SHARED "black" frame + one unique frame.
-    # Uncapped, the shared frame alone generates ~5*10^7 pair rows;
-    # capped it is dropped and the join sees only singleton postings.
-    n = 10_000
-    black = bytes(64)
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ids, blobs = [], []
-            for i in pdf["id"]:
-                uniq = int(i).to_bytes(8, "big") * 8
-                ids.append(int(i))
-                blobs.append(black + uniq)
-            yield pd.DataFrame({"asset_id": ids, "content": blobs})
-
-    assets = (
-        spark.range(n)
-        .repartition(8)
-        .mapInPandas(gen, schema="asset_id bigint, content binary")
-    )
-    pairs = video_near_dup(
-        assets, min_jaccard=0.1, every_n=1, max_postings_per_hash=100
-    )
-    assert pairs.count() == 0  # completes fast; nothing survives the cap
-    report = video_posting_overflow(assets, 100, every_n=1).collect()
-    assert len(report) == 1 and report[0]["n_assets"] == n
-
-
-def test_video_cap_keeps_full_jaccard_denominator(spark):
-    from hail_spark.llmdata.multimodal import video_near_dup
-
-    def mk(vals):
-        return b"".join(bytes([v]) * 64 for v in vals)
-
-    # assets 1/2 share frames {1,2,3}; frame 9 is shared by ALL assets
-    # (over a cap of 3) and must be dropped from pair generation while
-    # still counting in each asset's set size (denominator = 4, not 3)
-    rows = [
-        (1, mk([1, 2, 3, 9])),
-        (2, mk([1, 2, 3, 9])),
-        (3, mk([4, 5, 6, 9])),
-        (4, mk([7, 8, 10, 9])),
-    ]
-    df = spark.createDataFrame(rows, "asset_id long, content binary")
-    out = video_near_dup(df, min_jaccard=0.2, every_n=1, max_postings_per_hash=3)
-    got = {(r["id_a"], r["id_b"]): (r["n_shared"], r["jaccard"]) for r in out.collect()}
-    # only (1,2) pairs up: 3 shared (frame 9 capped out), denominators 4+4-3
-    assert set(got) == {(1, 2)}
-    n_shared, jac = got[(1, 2)]
-    assert n_shared == 3 and abs(jac - 3 / 5) < 1e-12
-
-
-def test_hamming_star_content_capped(spark):
-    from hail_spark.llmdata.similarity import (
-        hamming_band_overflow,
-        hamming_near_dup_pairs,
-    )
-
-    n = 5_000
-    codes = spark.range(n).select(
-        F.col("id").alias("vec_id"), F.array(F.lit(0), F.lit(0)).alias("bits")
-    )
-    pairs = hamming_near_dup_pairs(
-        codes, n_bits=64, max_hamming=3, max_postings_per_band=50
-    )
-    assert pairs.count() == 0
-    rep = hamming_band_overflow(
-        codes, n_bits=64, max_hamming=3, max_postings_per_band=50
-    ).collect()
-    assert len(rep) == 4 and all(r["n_codes"] == n for r in rep)  # 4 bands
-
-
-def test_hamming_cap_preserves_normal_pairs(spark):
-    from hail_spark.llmdata.similarity import hamming_near_dup_pairs
-
-    df = spark.createDataFrame(
-        [(1, [0, 0]), (2, [0, 0]), (3, [7, 0])], "vec_id long, bits array<long>"
-    )
-    got = sorted(
-        map(
-            tuple,
-            hamming_near_dup_pairs(
-                df, n_bits=64, max_hamming=3, max_postings_per_band=10
-            ).collect(),
-        )
-    )
-    assert got == [(1, 2, 0), (1, 3, 3), (2, 3, 3)]
-
-
-def test_hamming_packing_contract_raises(spark):
-    from hail_spark.llmdata.similarity import hamming_near_dup_pairs
-
-    bad = spark.createDataFrame([(7, [0])], "vec_id long, bits array<long>")
-    with pytest.raises(Exception, match="packing contract"):
-        hamming_near_dup_pairs(bad, n_bits=64, max_hamming=2).collect()
 
 
 # --------------------------------------------------------------------- #
@@ -177,62 +67,6 @@ def test_pagerank_releases_checkpoint_blocks(spark):
     # only the returned (checkpointed) rank table may remain — statics
     # and superseded per-iteration checkpoints are released eagerly
     assert after <= before + 1
-
-
-# --------------------------------------------------------------------- #
-# real-codec plug-in seams (skip when the optional libs are absent;
-# present = the SAME Spark pipeline decodes real JPEG/PNG/FLAC bytes)
-# --------------------------------------------------------------------- #
-def _has(mod):
-    try:
-        __import__(mod)
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(not _has("PIL"), reason="PIL not installed")
-def test_image_dhash_takes_real_png_codec(spark):
-    from io import BytesIO
-
-    from PIL import Image
-
-    from hail_spark.llmdata.multimodal import encode_bmp, image_dhash
-
-    rng = np.random.default_rng(5)
-    arr = rng.integers(0, 255, size=(16, 16, 3), dtype=np.uint8)
-    buf = BytesIO()
-    Image.fromarray(arr).save(buf, format="PNG")
-    png, bmp = buf.getvalue(), encode_bmp(arr)
-    df = spark.createDataFrame(
-        [(1, png), (2, bmp)], "asset_id long, content binary"
-    )
-    hashes = {r["asset_id"]: r["dhash"] for r in image_dhash(df).collect()}
-    # PNG is lossless: both containers hold the same pixels, so the
-    # full Spark decode->dHash pipeline must agree across codecs
-    assert hashes[1] == hashes[2]
-
-
-@pytest.mark.skipif(not _has("soundfile"), reason="soundfile not installed")
-def test_audio_fingerprint_takes_real_flac_codec(spark):
-    from io import BytesIO
-
-    import soundfile as sf
-
-    from hail_spark.llmdata.multimodal import audio_fingerprint, encode_wav_pcm16
-
-    rng = np.random.default_rng(9)
-    wave = (rng.standard_normal(16000) * 0.2).astype(np.float32)
-    # quantize to int16 grid so FLAC (lossless) and PCM16 WAV agree
-    wave = np.round(wave * 32767) / 32767.0
-    buf = BytesIO()
-    sf.write(buf, wave, 16000, format="FLAC")
-    df = spark.createDataFrame(
-        [(1, buf.getvalue()), (2, encode_wav_pcm16(wave, 16000))],
-        "asset_id long, content binary",
-    )
-    fps = {r["asset_id"]: tuple(r["afp"]) for r in audio_fingerprint(df).collect()}
-    assert fps[1] == fps[2]
 
 
 # --------------------------------------------------------------------- #
@@ -355,38 +189,3 @@ def test_query_table_manifest_prunes_file_opens(spark, tmp_path):
         assert spy2.call_count > 1  # fallback listed+opened everything
 
 
-def test_hamming_overflow_report_validates_packing(spark):
-    """The overflow report shares the packing validation with the pair
-    join: a mis-packed input raises in BOTH, never 'clean report +
-    crashing dedup'."""
-    from hail_spark.llmdata.similarity import hamming_band_overflow
-
-    bad = spark.createDataFrame([(7, [0])], "vec_id long, bits array<long>")
-    with pytest.raises(Exception, match="packing contract"):
-        hamming_band_overflow(bad, n_bits=64, max_hamming=2).collect()
-
-
-def test_audio_decode_stays_loud_on_unsupported_wav(spark):
-    """A recognized RIFF/WAVE our PCM16 decoder rejects must raise (not
-    silently fingerprint a stub) when no optional codec rescues it."""
-    import struct
-
-    from hail_spark.llmdata.multimodal import audio_fingerprint
-
-    # 24-bit PCM WAV header (bits=24) with a tiny data chunk
-    fmt = struct.pack("<HHIIHH", 1, 1, 16000, 48000, 3, 24)
-    body = b"WAVE" + b"fmt " + len(fmt).to_bytes(4, "little") + fmt
-    body += b"data" + (6).to_bytes(4, "little") + b"\x00" * 6
-    wav24 = b"RIFF" + len(body).to_bytes(4, "little") + body
-    df = spark.createDataFrame([(1, wav24)], "asset_id long, content binary")
-    try:
-        import soundfile  # noqa: F401
-
-        has_sf = True
-    except ImportError:
-        has_sf = False
-    if has_sf:
-        assert audio_fingerprint(df).count() == 1  # codec rescued it
-    else:
-        with pytest.raises(Exception, match="16-bit PCM"):
-            audio_fingerprint(df).collect()

@@ -62,69 +62,6 @@ def test_sssp_multi_source_and_negative_reject(spark):
         sssp(neg, srcs, n_iter=3)
 
 
-def test_sparse_cosine_topk_known_corpus(spark):
-    from hail_spark.llmdata.similarity import sparse_cosine_topk
-
-    docs = spark.createDataFrame(
-        [
-            (1, "apple banana cherry"),
-            (2, "apple banana fig"),
-            (3, "apple zebra yak"),
-            (4, "quark gluon boson"),
-        ],
-        "doc_id long, text string",
-    )
-    out = sparse_cosine_topk(docs, k=2)
-    got = {
-        (r["doc_id"], r["rank"]): (r["other_id"], r["cosine"])
-        for r in out.collect()
-    }
-    # docs 1/2 share {apple, banana} — each other's top neighbor
-    assert got[(1, 1)][0] == 2 and got[(2, 1)][0] == 1
-    # doc 4 shares no term with anyone: absent entirely
-    assert not any(d == 4 for d, _ in got)
-
-    # replay doc1-doc2 cosine by hand: idf = ln(4/df)
-    idf = {"apple": math.log(4 / 3), "banana": math.log(4 / 2),
-           "cherry": math.log(4 / 1), "fig": math.log(4 / 1),
-           "zebra": math.log(4 / 1), "yak": math.log(4 / 1)}
-    v1 = {"apple": idf["apple"], "banana": idf["banana"], "cherry": idf["cherry"]}
-    v2 = {"apple": idf["apple"], "banana": idf["banana"], "fig": idf["fig"]}
-    dot = sum(v1[t] * v2[t] for t in v1 if t in v2)
-    n1 = math.sqrt(sum(x * x for x in v1.values()))
-    n2 = math.sqrt(sum(x * x for x in v2.values()))
-    assert got[(1, 1)][1] == pytest.approx(dot / (n1 * n2), abs=1e-6)
-
-
-def test_sparse_cosine_max_df_cap_conservative(spark):
-    from hail_spark.llmdata.similarity import sparse_cosine_topk
-
-    # 'the' appears in all 4 docs; cap max_df=2 drops it from the join
-    # but NOT from the norms, so capped cosine <= uncapped cosine
-    docs = spark.createDataFrame(
-        [
-            (1, "the apple pie"),
-            (2, "the apple tart"),
-            (3, "the zebra"),
-            (4, "the yak"),
-        ],
-        "doc_id long, text string",
-    )
-    full = {
-        (r["doc_id"], r["other_id"]): r["cosine"]
-        for r in sparse_cosine_topk(docs, k=3).collect()
-    }
-    capped = {
-        (r["doc_id"], r["other_id"]): r["cosine"]
-        for r in sparse_cosine_topk(docs, k=3, max_df=2).collect()
-    }
-    # idf('the') = ln(4/4) = 0, so the cap changes nothing here beyond
-    # dropping zero-weight postings — pairs must agree
-    assert capped[(1, 2)] == pytest.approx(full[(1, 2)], abs=1e-9)
-    for k, v in capped.items():
-        assert v <= full[k] + 1e-9
-
-
 def test_association_rules_known_baskets(spark):
     from hail_spark.operators.relational import association_rules
 
@@ -271,30 +208,6 @@ def test_quantile_normalize_forces_identical_distributions(spark):
     # monotone: the largest raw value maps to the largest rank mean
     top_b = max(out, key=lambda r: (r["s"] == "b", r["v"]))
     assert top_b["normalized"] == expect[-1]
-
-
-def test_knn_label_eval_known_space(spark):
-    from hail_spark.llmdata.similarity import knn_label_eval
-
-    # two well-separated clusters: "a" around +x axis, "b" around +y
-    rows = []
-    for i in range(6):
-        rows.append((i, [10.0, float(i % 3)], "a"))
-        rows.append((100 + i, [float(i % 3), 10.0], "b"))
-    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>, label string")
-    q = corpus.selectExpr("vec_id as q_id", "embedding as q_vec", "label as q_label")
-    out = {r["label"]: (r["n_queries"], r["n_correct"], r["accuracy"])
-           for r in knn_label_eval(corpus, q, k=3).collect()}
-    assert out == {"a": (6, 6, 1.0), "b": (6, 6, 1.0)}
-
-    # flip one query's true label: its neighbors still vote the
-    # cluster's label, so that label's accuracy drops
-    q2 = q.withColumn(
-        "q_label", F.when(F.col("q_id") == 0, "b").otherwise(F.col("q_label"))
-    )
-    out2 = {r["label"]: (r["n_queries"], r["n_correct"])
-            for r in knn_label_eval(corpus, q2, k=3).collect()}
-    assert out2["b"] == (7, 6) and out2["a"] == (5, 5)
 
 
 def test_neighborhood_function_exact_small_graph(spark):

@@ -45,34 +45,6 @@ def test_association_rules_default_cap_bounds_star_basket(spark):
 
 
 # --------------------------------------------------------------------- #
-# sparse_cosine_topk: stop-word cap ON by default, overflow reported
-# --------------------------------------------------------------------- #
-def test_sparse_cosine_default_cap_and_overflow(spark):
-    from hail_spark.llmdata.similarity import (
-        sparse_cosine_overflow,
-        sparse_cosine_topk,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, f"the unique{i} alpha") for i in range(30)]
-        + [(100, "alpha beta"), (101, "alpha beta")],
-        "doc_id long, text string",
-    )
-    # with max_df=5 the 'the'/'alpha' stop words leave the join; docs
-    # 100/101 still pair via 'beta' (df=2)
-    out = sparse_cosine_topk(docs, k=2, max_df=5).collect()
-    top = {
-        r["doc_id"]: r["other_id"] for r in out if r["rank"] == 1
-    }
-    assert top.get(100) == 101 and top.get(101) == 100
-    ov = sparse_cosine_overflow(docs, max_df=5).collect()
-    assert {r["term"] for r in ov} == {"the", "alpha"}
-    assert all(r["n_docs"] > 5 for r in ov)
-    # default cap (10k) is inert on a tiny corpus
-    assert sparse_cosine_overflow(docs).count() == 0
-
-
-# --------------------------------------------------------------------- #
 # import_fixed_width fast path: full-extent guard
 # --------------------------------------------------------------------- #
 def test_fixed_width_fast_path_trailing_sentinel_raises(spark, tmp_path):
@@ -222,159 +194,3 @@ def test_harmonic_centrality_matches_exact_bfs(spark):
         assert math.isclose(got[v][2], want[v][2], rel_tol=1e-9), v
 
 
-# --------------------------------------------------------------------- #
-# pure-stdlib PNG codec: decodable in-container with NO PIL
-# --------------------------------------------------------------------- #
-def test_png_roundtrip_and_variants():
-    import numpy as np
-
-    from hail_spark.llmdata.multimodal import (
-        _decode_png,
-        _encode_png,
-        _png_chunk,
-        _PNG_SIG,
-    )
-
-    rng = np.random.default_rng(21)
-    arr = rng.integers(0, 256, size=(13, 7, 3), dtype=np.uint8)
-    assert (_decode_png(_encode_png(arr)) == arr).all()
-
-    import struct as s
-    import zlib
-
-    def make(w, h, ctype, nch, raw_rows, plte=None):
-        ihdr = s.pack(">IIBBBBB", w, h, 8, ctype, 0, 0, 0)
-        png = _PNG_SIG + _png_chunk(b"IHDR", ihdr)
-        if plte is not None:
-            png += _png_chunk(b"PLTE", plte)
-        png += _png_chunk(b"IDAT", zlib.compress(raw_rows))
-        return png + _png_chunk(b"IEND", b"")
-
-    # grayscale replicates to 3 channels
-    g = rng.integers(0, 256, size=(5, 4), dtype=np.uint8)
-    raw = b"".join(b"\x00" + g[y].tobytes() for y in range(5))
-    got = _decode_png(make(4, 5, 0, 1, raw))
-    assert (got == np.repeat(g[..., None], 3, axis=2)).all()
-
-    # palette lookup
-    pal = bytes(range(30))  # 10 RGB entries
-    idx = np.array([[0, 3], [9, 1]], dtype=np.uint8)
-    raw = b"".join(b"\x00" + idx[y].tobytes() for y in range(2))
-    got = _decode_png(make(2, 2, 3, 1, raw, plte=pal))
-    want = np.frombuffer(pal, np.uint8).reshape(10, 3)[idx]
-    assert (got == want).all()
-
-    # RGBA drops alpha
-    rgba = rng.integers(0, 256, size=(3, 3, 4), dtype=np.uint8)
-    raw = b"".join(b"\x00" + rgba[y].tobytes() for y in range(3))
-    got = _decode_png(make(3, 3, 6, 4, raw))
-    assert (got == rgba[..., :3]).all()
-
-
-def test_png_unfilters_all_filter_types():
-    import struct as s
-    import zlib
-
-    import numpy as np
-
-    from hail_spark.llmdata.multimodal import (
-        _decode_png,
-        _png_chunk,
-        _PNG_SIG,
-    )
-
-    rng = np.random.default_rng(8)
-    img = rng.integers(0, 256, size=(5, 6, 3), dtype=np.uint8)
-    h, w = img.shape[:2]
-    nch, stride = 3, w * 3
-    scan = img.reshape(h, stride).astype(np.int32)
-
-    def paeth(a, b, c):
-        p = a + b - c
-        pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-        return a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-
-    # forward-filter each row with types [0, 1, 2, 3, 4] per PNG §9
-    ftypes = [0, 1, 2, 3, 4]
-    out = bytearray()
-    prev = np.zeros(stride, np.int32)
-    for y in range(h):
-        t = ftypes[y]
-        cur = scan[y]
-        row = np.zeros(stride, np.int32)
-        for x in range(stride):
-            a = cur[x - nch] if x >= nch else 0
-            b = prev[x]
-            c = prev[x - nch] if x >= nch else 0
-            pred = {
-                0: 0,
-                1: a,
-                2: b,
-                3: (a + b) >> 1,
-                4: paeth(a, b, c),
-            }[t]
-            row[x] = (cur[x] - pred) & 0xFF
-        out += bytes([t]) + bytes(row.astype(np.uint8))
-        prev = cur
-    ihdr = s.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-    png = (
-        _PNG_SIG
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", zlib.compress(bytes(out)))
-        + _png_chunk(b"IEND", b"")
-    )
-    assert (_decode_png(png) == img).all()
-
-
-def test_png_unsupported_variants_stay_loud():
-    import struct as s
-    import zlib
-
-    import numpy as np
-
-    from hail_spark.llmdata.multimodal import (
-        _decode_image,
-        _png_chunk,
-        _PNG_SIG,
-    )
-
-    # interlaced flag set: recognized container, undecodable without
-    # PIL -> the dispatcher must RAISE, not stub (poisoned hashes)
-    ihdr = s.pack(">IIBBBBB", 2, 2, 8, 2, 0, 0, 1)
-    png = (
-        _PNG_SIG
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", zlib.compress(bytes(2 * (1 + 6))))
-        + _png_chunk(b"IEND", b"")
-    )
-    try:
-        import PIL  # noqa: F401
-
-        have_pil = True
-    except ImportError:
-        have_pil = False
-    if not have_pil:
-        with pytest.raises(ValueError, match="interlaced|8-bit"):
-            _decode_image(png)
-
-
-def test_image_dhash_png_without_pil(spark):
-    import numpy as np
-
-    from hail_spark.llmdata.multimodal import (
-        _encode_png,
-        encode_bmp,
-        image_dhash,
-    )
-
-    rng = np.random.default_rng(5)
-    arr = rng.integers(0, 255, size=(16, 16, 3), dtype=np.uint8)
-    png, bmp = _encode_png(arr), encode_bmp(arr)
-    df = spark.createDataFrame(
-        [(1, png), (2, bmp)], "asset_id long, content binary"
-    )
-    hashes = {r["asset_id"]: r["dhash"] for r in image_dhash(df).collect()}
-    # PNG is lossless: both containers hold the same pixels, so the
-    # full decode->dHash pipeline agrees across codecs — and this runs
-    # with NO PIL in the container (stdlib zlib path)
-    assert hashes[1] == hashes[2]

@@ -133,6 +133,8 @@ def test_top_level_parity_exports():
 
     for n in hs.__all__:
         assert getattr(hs, n) is not None
+    for n in hs._LAZY:
+        assert getattr(hs, n) is not None, n
     assert hs.version() == hs.__version__
     assert "hail" in hs.citation()
     assert hs.get_reference("GRCh37").contigs[0] == "1"

@@ -83,38 +83,6 @@ def test_signals_on_documents_table(spark, sf_dir):
         assert r["swr"] >= 0.0
 
 
-def test_decontaminate_known_overlap(spark):
-    """llmdata/decontam.py: docs sharing an n-gram with the benchmark
-    flag as contaminated; short docs have zero grams and stay clean."""
-    from pyspark.sql import functions as F
-
-    from hail_spark.llmdata.decontam import benchmark_grams, decontaminate
-
-    docs = spark.createDataFrame(
-        [
-            {"doc_id": 1, "text": "the quick brown fox jumps over the lazy dog tonight"},
-            {"doc_id": 2, "text": "completely different words appear in this training document here"},
-            {"doc_id": 3, "text": "short doc"},
-            # normalization: case/punctuation differences still match
-            {"doc_id": 4, "text": "The QUICK, brown fox JUMPS over the lazy dog again and again"},
-        ]
-    )
-    bench = spark.createDataFrame(
-        [{"text": "quick brown fox jumps over the lazy dog benchmark question"}]
-    )
-    out = {r["doc_id"]: r for r in decontaminate(docs, bench, n=5).collect()}
-    assert out[1]["contaminated"] and out[1]["n_hits"] >= 1
-    assert out[4]["contaminated"]  # normalization catches it
-    assert not out[2]["contaminated"] and out[2]["n_hits"] == 0
-    assert not out[3]["contaminated"] and out[3]["n_grams"] == 0
-    # gram accounting: doc 1 has 10 tokens -> 6 5-grams
-    assert out[1]["n_grams"] == 6
-    assert benchmark_grams(bench, n=5).count() == 6
-    # plan: the contaminating join must be a broadcast (no corpus shuffle)
-    plan = decontaminate(docs, bench, n=5)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
-
-
 def test_pii_redaction_and_counts(spark):
     from pyspark.sql import functions as F
 
@@ -265,81 +233,3 @@ def test_compression_ratio(spark):
     assert out[3]["ratio"] is None and out[4]["ratio"] is None
 
 
-class TestBloomDecontam:
-    def test_bloom_equals_exact_even_with_fp_heavy_filter(self, spark, sf_dir):
-        from hail_spark.llmdata.decontam import bloom_decontaminate, decontaminate
-
-        d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        bench = d.filter("doc_id % 13 = 0")
-        exact = {
-            r["doc_id"]: (r["n_grams"], r["n_hits"])
-            for r in decontaminate(d, bench, n=8, min_hits=2)
-            .filter("contaminated")
-            .collect()
-        }
-        # deliberately undersized filter (1<<10 bits, k=2): lots of
-        # false positives — the verify join must still be exact
-        got = {
-            r["doc_id"]: (r["n_grams"], r["n_hits"])
-            for r in bloom_decontaminate(
-                d, bench, n=8, min_hits=2, n_bits=1 << 10, k=2
-            ).collect()
-        }
-        assert got == exact and len(got) > 0
-
-    def test_bloom_build_membership(self, spark):
-        import numpy as np
-
-        from hail_spark.llmdata.decontam import _bloom_positions, bloom_build
-
-        grams = spark.createDataFrame(
-            [(h,) for h in [-5, 0, 7, 2**62, -(2**62)]], "gram long"
-        )
-        bits = np.frombuffer(bloom_build(grams, n_bits=1 << 12, k=4), dtype=np.uint8)
-        pos = _bloom_positions([-5, 0, 7, 2**62, -(2**62)], 1 << 12, 4)
-        ok = bits[pos >> 3] & (np.uint8(1) << (pos & 7).astype(np.uint8))
-        assert (ok != 0).all()  # no false negatives, ever
-
-    def test_bloom_build_or_reduce_stays_in_cluster(self, spark):
-        """The per-partition filter partials must be OR-reduced cluster-
-        side (r05 verdict item 3): the merge helper ends at exactly ONE
-        partition — the driver collects a single buffer no matter how
-        many partitions built partials — and the many-partition build
-        equals the 1-partition build bit-for-bit."""
-        import numpy as np
-
-        from hail_spark.llmdata.decontam import _or_merge_rounds, bloom_build
-
-        grams64 = spark.createDataFrame(
-            [(h * 2654435761,) for h in range(5000)], "gram long"
-        ).repartition(64)
-        one = bloom_build(grams64.coalesce(1), n_bits=1 << 14, k=4)
-        many = bloom_build(grams64, n_bits=1 << 14, k=4)
-        assert one == many
-
-        # structural guarantee: the merged RDD has one partition and one
-        # row, i.e. driver traffic is 1 buffer (not partitions buffers)
-        bufs = spark.sparkContext.parallelize(
-            [bytes([i, 0, 0, 0]) for i in range(1, 65)], 64
-        )
-        merged = _or_merge_rounds(bufs, fanin=4)
-        assert merged.getNumPartitions() == 1
-        rows = merged.collect()
-        assert len(rows) == 1
-        assert rows[0] == bytes([np.bitwise_or.reduce(range(1, 65)), 0, 0, 0])
-
-    def test_bloom_build_empty_input(self, spark):
-        from hail_spark.llmdata.decontam import bloom_build
-
-        grams = spark.createDataFrame([], "gram long")
-        out = bloom_build(grams, n_bits=1 << 10, k=2)
-        assert out == bytes(1 << 7)  # all-zero filter, right length
-
-    def test_bloom_build_pow2_validation(self, spark):
-        import pytest as _pytest
-
-        from hail_spark.llmdata.decontam import bloom_build
-
-        grams = spark.createDataFrame([(1,)], "gram long")
-        with _pytest.raises(ValueError):
-            bloom_build(grams, n_bits=1000)
