@@ -30,17 +30,13 @@ from pyspark.sql import functions as F
 
 from ..matrixtable import ENTRIES, MatrixTable
 from ..vds import VariantDataset
-from .vcf import _TRYCAST, _entry_struct
+from .vcf import _TRYCAST, _entry_struct, _header_lines
 
 NON_REF = "<NON_REF>"
 
 
 def _read_sample_name(spark: SparkSession, path: str, scan_lines: int = 5000) -> str:
-    head = [
-        r["value"]
-        for r in spark.read.text(path).limit(scan_lines).collect()
-        if r["value"].startswith("#")
-    ]
+    head = _header_lines(spark.read.text(path), scan_lines)
     if not head or not head[-1].startswith("#CHROM"):
         raise ValueError(f"no #CHROM header in {path}")
     fields = head[-1].split("\t")

@@ -41,7 +41,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..matrixtable import ENTRIES, MatrixTable
@@ -99,6 +99,17 @@ def _entry_struct(fmt: Column, vals: Column) -> Column:
     )
 
 
+def _header_lines(text: DataFrame, scan_lines: int) -> list[str]:
+    """The '#' lines among the first ``scan_lines`` lines of a VCF read
+    as text. Executors null out the data lines before the limit, so no
+    sample column is collected to the driver. A multi-file glob can
+    place a data file's partition ahead of the header's, so '#' lines
+    are kept wherever they fall in the window."""
+    is_head = F.when(F.col("value").startswith("#"), F.col("value"))
+    rows = text.select(is_head).limit(scan_lines).collect()
+    return [r[0] for r in rows if r[0] is not None]
+
+
 def import_vcf(
     spark: SparkSession,
     path: str,
@@ -106,8 +117,7 @@ def import_vcf(
     header_scan_lines: int = 10000,
 ) -> MatrixTable:
     text = spark.read.text(path)
-    # header lives at the head of the (first) file: one small-partition read
-    head = [r["value"] for r in text.limit(header_scan_lines).collect() if r["value"].startswith("#")]
+    head = _header_lines(text, header_scan_lines)
     if not head or not head[-1].startswith("#CHROM"):
         raise ValueError("no #CHROM header line found in leading lines of " + path)
     chrom_line = head[-1].split("\t")

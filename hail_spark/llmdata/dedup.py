@@ -270,8 +270,8 @@ def ngram_jaccard_pairs(
     more than ``PPJOIN_DF_CUTOFF`` documents the PPJoin path is used —
     the posting-list join's cost is Σ df², so a single stopword shingle
     shared by millions of docs makes it quadratic on a Zipfian web
-    corpus (the 50 s → 399 s sf1 swing in BENCH_SCALE.jsonl was exactly
-    this head).
+    corpus (a 50 s → 399 s swing on an ~sf1 corpus was exactly this
+    head).
 
     ``prefix_filter=False``: posting-list self-join — intersections
     counted directly by the pair-grouped equi-join (no per-candidate

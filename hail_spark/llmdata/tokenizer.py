@@ -76,8 +76,8 @@ def _merge_pass(syms: list, left: str, right: str) -> list:
 
 def _fixpoint_replace(s: str, old: str, new: str) -> str:
     """String-form merge by leftmost non-overlapping replace to
-    fixpoint — the mirror of the SQL oracle's nested ``replace``
-    (``__spark_entry__._nested_replace_sql``). NOT used by the engine:
+    fixpoint — the mirror of a SQL replay built from nested
+    ``replace`` calls. NOT used by the engine:
     for a self-pair merge (left == right) on an odd run of >= 5
     identical symbols the space-consuming string scan groups pairs
     differently from the canonical symbol pass ('ccccc' -> cc|c|cc

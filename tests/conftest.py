@@ -12,8 +12,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 # going local[32] → local[8] at sf0.001. Every distributed code path
 # still runs distributed (8 tasks instead of 32); tests that need a
 # specific partition count create it explicitly. Override with
-# SPARK_GRAFT_TEST_CPUS; bench.py is untouched (it reads
-# SPARK_GRAFT_CPUS from the driver).
+# SPARK_GRAFT_TEST_CPUS.
 os.environ["SPARK_GRAFT_CPUS"] = os.environ.get("SPARK_GRAFT_TEST_CPUS", "8")
 # One JVM serves the whole suite, and tests leave cached blocks behind.
 # Under a 16g heap it grew with them until the kernel killed the JVM on

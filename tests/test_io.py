@@ -17,6 +17,7 @@ from hail_spark.io import (
     import_table,
     import_vcf,
 )
+from hail_spark.io.vcf import _header_lines
 
 VCF = textwrap.dedent(
     """\
@@ -227,6 +228,34 @@ def test_import_vcf_short_data_line_fails(spark, tmp_path):
     mt = import_vcf(spark, str(p))
     with pytest.raises(Exception, match="INVALID_ARRAY_INDEX"):
         mt._df.collect()
+
+
+def test_vcf_header_scan_returns_only_header_lines(spark, tmp_path):
+    """The header scan collects the '#' lines up to #CHROM; the long
+    data lines inside its window do not come back."""
+    samples = [f"S{i}" for i in range(500)]
+    data = [f"1\t{i}\t.\tA\tT\t.\t.\t.\tGT:DP\t" + "\t".join(["0/1:5"] * 500) for i in range(1, 6)]
+    header = _vcf_text(samples, []).splitlines()
+    p = tmp_path / "wide.vcf"
+    p.write_text(_vcf_text(samples, data))
+    head = _header_lines(spark.read.text(str(p)), 10000)
+    assert head == header
+    assert head[-1].startswith("#CHROM")
+    assert import_vcf(spark, str(p)).count_cols() == 500
+    # export_vcf-style part files: Spark reads the larger data file
+    # ahead of the header file
+    d = tmp_path / "parts"
+    d.mkdir()
+    (d / "part-0").write_text("\n".join(header) + "\n")
+    (d / "part-1").write_text("\n".join(data) + "\n")
+    assert _header_lines(spark.read.text(str(d / "part-*")), 10000) == header
+
+
+def test_import_vcf_without_chrom_line_fails(spark, tmp_path):
+    p = tmp_path / "headless.vcf"
+    p.write_text("##fileformat=VCFv4.2\n1\t10\t.\tA\tC\t.\t.\t.\n")
+    with pytest.raises(ValueError, match="no #CHROM header line found"):
+        import_vcf(spark, str(p))
 
 
 # key column from an even integer v (each key on two rows), and the

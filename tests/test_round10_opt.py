@@ -9,16 +9,10 @@
    exchanges (the whole point of the r10 graph rework; a Spark upgrade
    that silently reverts to UnknownPartitioning should fail HERE, not
    as a perf regression two rounds later).
-3. lambda_gc spread gate: _input_bytes on a parquet file/dir is sane.
 """
-
-import os
-import sys
 
 import pytest
 from pyspark.sql import functions as F
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _rfm_input(spark, n=500):
@@ -79,16 +73,3 @@ def test_lc_pinned_captures_partitioning(spark):
     # exactly the aggregation exchange — neither join side re-shuffles
     assert plan.count("Exchange") == 1, plan
 
-
-def test_input_bytes(tmp_path):
-    from __spark_entry__ import _input_bytes
-
-    f = tmp_path / "x.parquet"
-    f.write_bytes(b"z" * 1024)
-    assert _input_bytes(str(f)) == 1024
-    d = tmp_path / "dir.parquet"
-    d.mkdir()
-    (d / "part-0").write_bytes(b"z" * 10)
-    (d / "part-1").write_bytes(b"z" * 5)
-    assert _input_bytes(str(d)) == 15
-    assert _input_bytes(str(tmp_path / "missing")) == 0
