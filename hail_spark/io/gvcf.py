@@ -28,9 +28,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..expr.sql import sql_expr
 from ..matrixtable import ENTRIES, MatrixTable
 from ..vds import VariantDataset
-from .vcf import _TRYCAST, _entry_struct, _header_lines
+from .vcf import _ENTRY, _TRYCAST, _header_lines
 
 NON_REF = "<NON_REF>"
 
@@ -52,13 +53,18 @@ def _parse_gvcf_lines(body: DataFrame) -> DataFrame:
     # would otherwise re-split the line per reference
     body = body.select(F.col("__sidx"), F.split(F.col("value"), "\t").alias("__c"))
     c = F.col("__c")
+    # the FORMAT key list and the sample's values, for _ENTRY's template
+    body = body.select(
+        "__sidx", "__c",
+        F.split(F.element_at(c, 9), ":").alias("__fmt"),
+        F.split(F.element_at(c, 10), ":").alias("__vals"),
+    )
     info_map = F.str_to_map(F.element_at(c, 8), F.lit(";"), F.lit("="))
-    fmt = F.split(F.element_at(c, 9), ":")
     alts_all = F.when(
         F.element_at(c, 5) == ".", F.array().cast("array<string>")
     ).otherwise(F.split(F.element_at(c, 5), ","))
     alts = F.array_remove(alts_all, NON_REF)
-    entry = _entry_struct(fmt, F.split(F.element_at(c, 10), ":"))
+    entry = sql_expr(_ENTRY, fmt="__fmt", vals="__vals")
     return body.select(
         F.element_at(c, 1).alias("contig"),
         F.element_at(c, 2).cast("int").alias("pos"),

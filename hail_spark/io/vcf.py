@@ -8,9 +8,17 @@ Spark-first design: the body is ``spark.read.text`` (distributed
 line splits for free) and the entire line parse is Catalyst
 expressions — ``split``/``str_to_map``/``try_cast``/``transform`` —
 with zero Python in the hot path. The header is read once from the
-head of the first file (driver-side ``limit`` over the text source,
-one small partition read — the same eager header pass the reference
-does in LoadVCF).
+head of the first file by name (driver-side ``limit`` over the text
+source, one small partition read — the same eager header pass the
+reference does in LoadVCF), so export_vcf's header part leads a glob
+of its part files whatever their sizes.
+
+The fixed part of the parse, the entries and the ``locus``,
+``alleles``, ``rsid``, ``qual`` and ``filters`` row fields, is written
+as SQL templates that ``expr.sql.sql_expr`` turns into one Column each,
+one Py4J round trip apiece instead of one per Column call. The INFO
+keys come from the file's header, so the ``info`` struct stays in the
+Column API and no text of the file reaches the SQL.
 
 The sample columns are parsed by ONE higher-order ``transform`` over
 the sample indices, the way LoadVCF loops over its samples, so the
@@ -44,6 +52,7 @@ import re
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..expr.sql import sql_expr
 from ..matrixtable import ENTRIES, MatrixTable
 
 _INFO_RE = re.compile(r"##INFO=<ID=([^,]+),Number=([^,]+),Type=([^,]+)")
@@ -69,44 +78,72 @@ def _info_field(m: Column, key: str, number: str, vcf_type: str) -> Column:
     ).alias(key)
 
 
-def _entry_struct(fmt: Column, vals: Column) -> Column:
-    """Parse one sample's field values (its column already split on
-    ``:``) against the per-row FORMAT key list. Samples may legally
-    truncate trailing fields, so every access is position-guarded."""
+def _format_field(key: str) -> str:
+    """SQL text of one sample's FORMAT field ``key``: ``{vals}`` holds
+    the sample's values (its column split on ``:``) and ``{fmt}`` the
+    row's FORMAT key list. ``get`` is 0-based and NULL out of bounds,
+    which covers both a key absent from FORMAT (position 0, index -1)
+    and legally truncated trailing sample fields."""
+    return f"nullif(get({{vals}}, CAST(array_position({{fmt}}, '{key}') - 1 AS INT)), '.')"
 
-    def field(key: str) -> Column:
-        # F.get is 0-based and NULL on out-of-bounds — covers both "key
-        # absent from FORMAT" (pos 0 → index -1) and legally truncated
-        # trailing sample fields
-        pos = F.array_position(fmt, key)
-        return F.nullif(F.get(vals, (pos - 1).cast("int")), F.lit("."))
 
-    gt_raw = field("GT")
-    gta = F.transform(F.split(gt_raw, r"[/|]"), lambda a: _TRYCAST(F.nullif(a, F.lit(".")), "int"))
-    gta = F.when(F.forall(gta, lambda a: a.isNotNull()), gta)  # any '.' ⇒ call missing
-    n_alt = F.aggregate(gta, F.lit(0), lambda acc, a: acc + F.when(a > 0, 1).otherwise(0))
-    int_arr = lambda key: F.transform(  # noqa: E731
-        F.split(field(key), ","), lambda x: _TRYCAST(F.nullif(x, F.lit(".")), "int")
-    )
-    return F.struct(
-        n_alt.alias("GT"),
-        gta.alias("GTA"),
-        F.when(gt_raw.isNotNull(), gt_raw.contains("|")).alias("phased"),
-        int_arr("AD").alias("AD"),
-        _TRYCAST(field("DP"), "int").alias("DP"),
-        _TRYCAST(field("GQ"), "int").alias("GQ"),
-        int_arr("PL").alias("PL"),
-    )
+def _int_list(key: str) -> str:
+    return f"transform(split({_format_field(key)}, ','), x -> try_cast(nullif(x, '.') AS INT))"
+
+
+# the allele indices of GT; any '.' makes the whole call missing
+_GTA_ANY = f"transform(split({_format_field('GT')}, '[/|]'), a -> try_cast(nullif(a, '.') AS INT))"
+_GTA = f"CASE WHEN forall({_GTA_ANY}, a -> a IS NOT NULL) THEN {_GTA_ANY} END"
+# One sample's entry struct (SQL template for ``sql_expr``). Samples may
+# legally truncate trailing fields, so every field access is
+# position-guarded.
+_ENTRY = f"""struct(
+  aggregate({_GTA}, 0, (acc, a) -> acc + CASE WHEN a > 0 THEN 1 ELSE 0 END) AS GT,
+  {_GTA} AS GTA,
+  CASE WHEN {_format_field('GT')} IS NOT NULL THEN contains({_format_field('GT')}, '|') END AS phased,
+  {_int_list('AD')} AS AD,
+  try_cast({_format_field('DP')} AS INT) AS DP,
+  try_cast({_format_field('GQ')} AS INT) AS GQ,
+  {_int_list('PL')} AS PL
+)"""
+# Every sample's entry struct, from the 1-based column numbers 10 to
+# {last} of the tab-split line {c}: ONE higher-order transform over the
+# sample indices, the way LoadVCF loops over its samples. element_at
+# (not get) keeps a data line with fewer sample columns than the header
+# an error rather than silently missing entries.
+_ENTRIES = (
+    "transform(transform(sequence(10, {last}), i -> split(element_at({c}, i), ':')), {vals} -> "
+    + _ENTRY
+    + ") AS {entries}"
+)
+# Spark's sequence(10, 9) counts DOWN, so zero samples need an explicit
+# empty array.
+_NO_SAMPLE_ENTRIES = _ENTRIES.replace("sequence(10, {last})", "CAST(array() AS ARRAY<INT>)")
+# the fixed row fields, from the tab-split line {c}
+_ROW_FIELDS = (
+    "struct(element_at({c}, 1) AS contig, CAST(element_at({c}, 2) AS INT) AS position) AS locus",
+    "concat(array(element_at({c}, 4)), CASE WHEN element_at({c}, 5) = '.'"
+    " THEN CAST(array() AS ARRAY<STRING>) ELSE split(element_at({c}, 5), ',') END) AS alleles",
+    "nullif(element_at({c}, 3), '.') AS rsid",
+    "try_cast(nullif(element_at({c}, 6), '.') AS DOUBLE) AS qual",
+    "CASE WHEN element_at({c}, 7) = '.' THEN CAST(NULL AS ARRAY<STRING>)"
+    " WHEN element_at({c}, 7) = 'PASS' THEN CAST(array() AS ARRAY<STRING>)"
+    " ELSE split(element_at({c}, 7), ';') END AS filters",
+)
 
 
 def _header_lines(text: DataFrame, scan_lines: int) -> list[str]:
-    """The '#' lines among the first ``scan_lines`` lines of a VCF read
-    as text. Executors null out the data lines before the limit, so no
-    sample column is collected to the driver. A multi-file glob can
-    place a data file's partition ahead of the header's, so '#' lines
-    are kept wherever they fall in the window."""
+    """The '#' lines among the first ``scan_lines`` lines of the first
+    file, by name, of a VCF read as text, as LoadVCF reads the header of
+    the first file. Spark packs the files of a glob into splits by size,
+    largest first, so export_vcf's small header part would not lead the
+    scan of the whole glob. Executors null out the data lines before the
+    limit, so no sample column is collected to the driver."""
+    files = sorted(text.inputFiles())
+    if not files:
+        return []
     is_head = F.when(F.col("value").startswith("#"), F.col("value"))
-    rows = text.select(is_head).limit(scan_lines).collect()
+    rows = text.sparkSession.read.text(files[0]).select(is_head).limit(scan_lines).collect()
     return [r[0] for r in rows if r[0] is not None]
 
 
@@ -136,40 +173,18 @@ def import_vcf(
     body = body.select(F.col("__c"), F.split(F.get(F.col("__c"), 8), ":").alias("__fmt"))
     c = F.col("__c")
     info_map = F.str_to_map(F.element_at(c, 8), F.lit(";"), F.lit("="))
-    fmt = F.col("__fmt")
-    # 1-based column numbers of the samples. Spark's sequence(10, 9)
-    # counts DOWN, so zero samples need an explicit empty array.
-    # element_at (not get) keeps a data line with fewer sample columns
-    # than the header an error rather than silently missing entries
-    sample_idx = (
-        F.sequence(F.lit(10), F.lit(9 + len(samples)))
-        if samples
-        else F.array().cast("array<int>")
+    entries = sql_expr(
+        _ENTRIES if samples else _NO_SAMPLE_ENTRIES,
+        c="__c", fmt="__fmt", vals="v", last=9 + len(samples), entries=ENTRIES,
     )
-    sample_vals = F.transform(sample_idx, lambda i: F.split(F.element_at(c, i), ":"))
     row_cols = [
-        F.struct(
-            F.element_at(c, 1).alias("contig"),
-            F.element_at(c, 2).cast("int").alias("position"),
-        ).alias("locus"),
-        F.concat(
-            F.array(F.element_at(c, 4)),
-            F.when(F.element_at(c, 5) == ".", F.array().cast("array<string>")).otherwise(
-                F.split(F.element_at(c, 5), ",")
-            ),
-        ).alias("alleles"),
-        F.nullif(F.element_at(c, 3), F.lit(".")).alias("rsid"),
-        _TRYCAST(F.nullif(F.element_at(c, 6), F.lit(".")), "double").alias("qual"),
-        F.when(F.element_at(c, 7) == ".", F.lit(None).cast("array<string>"))
-        .when(F.element_at(c, 7) == "PASS", F.array().cast("array<string>"))
-        .otherwise(F.split(F.element_at(c, 7), ";"))
-        .alias("filters"),
+        *(sql_expr(f, c="__c") for f in _ROW_FIELDS),
         F.struct(
             *[_info_field(info_map, k, num, typ) for k, num, typ in info_decls]
         ).alias("info")
         if info_decls
         else F.lit(None).cast("string").alias("info"),
-        F.transform(sample_vals, lambda v: _entry_struct(fmt, v)).alias(ENTRIES),
+        entries,
     ]
     rows = body.select(*row_cols)
     if min_partitions and rows.rdd.getNumPartitions() < min_partitions:

@@ -1,14 +1,22 @@
 """QC method library — compositions over MatrixTable ops.
 
 Parity target: hail/python/hail/methods/qc.py (sample_qc :59,
-variant_qc :219, compute_charr :1822). variant_qc is a row-wise entry
-aggregation (array HOFs, one pass, no shuffle). sample_qc and
-compute_charr aggregate per column, as Hail's AggArrayPerElement does:
-the JVM projects each row's entries to primitive per-sample arrays, one
-map-only ``mapInArrow`` pass folds them into per-sample numpy vectors
-per partition, the partials are merged (on the executors first when
-there are many), and the driver returns the result as a local DataFrame
-(no per-entry rows; only partials are ever shuffled).
+variant_qc :219, compute_charr :1822).
+
+Every fixed per-row expression here is a SQL template (string constants
+below) that ``expr.sql.sql_expr`` turns into one Column with one Py4J
+round trip, the way Hail's Python layer ships a whole expression to the
+JVM as one string; built a Column call at a time, each expression would
+cost one round trip per call, hundreds per method.
+
+variant_qc is a row-wise entry aggregation (array HOFs, one pass, no
+shuffle). sample_qc and compute_charr aggregate per column, as Hail's
+AggArrayPerElement does: the JVM projects each row's entries to
+primitive per-sample arrays, one map-only ``mapInArrow`` pass folds them
+into per-sample numpy vectors per partition, the partials are merged (on
+the executors first when there are many), and the driver returns the
+result as a local DataFrame (no per-entry rows; only partials are ever
+shuffled).
 
 Genotype calls use the int encoding of SURVEY.md §2.9 (biallelic:
 0 = hom-ref, 1 = het, 2 = hom-var, NULL = missing).
@@ -25,19 +33,71 @@ import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..expr.sql import sql_expr
 from ..matrixtable import ENTRIES, MatrixTable
 from .local import local_frame
 
 
-def _defined(arr: Column, f) -> Column:
-    return F.filter(arr, lambda e: e.isNotNull() & f(e).isNotNull())
+# SQL templates for ``sql_expr`` (hail_spark/expr/sql.py). ``{entries}``
+# is the entries array, ``{gt}`` the call field: alt-allele dosage
+# (0, 1, 2) or NULL for a missing call.
+_CALLED = "filter(transform({entries}, e -> e.{gt}), g -> g IS NOT NULL)"
+# Alt-allele count over the called GTs. The bigint accumulator takes int32
+# and int64 GT alike: aggregate requires the merge result to keep the
+# zero value's type exactly.
+_ALT_SUM = f"aggregate({_CALLED}, CAST(0 AS BIGINT), (a, g) -> a + g)"
+_N_CALLED = f"size({_CALLED})"
+_N_TOTAL = "size(transform({entries}, e -> e.{gt}))"
+_AN = f"CAST({_N_CALLED} * 2 AS INT)"
+_AC = f"CAST({_ALT_SUM} AS INT)"
 
 
-def _gt_sum(gts: Column) -> Column:
-    """Alt-allele count over an array of called GTs. The bigint
-    accumulator takes int32 and int64 GT alike: aggregate requires the
-    merge result to keep the zero value's type exactly."""
-    return F.aggregate(gts, F.lit(0).cast("bigint"), lambda a, g: a + g)
+def _n_calls(pred: str) -> str:
+    return f"size(filter({_CALLED}, g -> {pred}))"
+
+
+# variant_qc's struct up to het_freq; dp_stats/gq_stats follow and ")"
+# closes it. homozygote_count is per allele (ref qc.py:219): index 0 =
+# hom-ref, 1 = hom-var for the biallelic encoding.
+_VARIANT_QC_COUNTS = f"""struct(
+  CAST({_N_CALLED} AS DOUBLE) / {_N_TOTAL} AS call_rate,
+  CAST({_N_CALLED} AS INT) AS n_called,
+  CAST({_N_TOTAL} - {_N_CALLED} AS INT) AS n_not_called,
+  CAST(size(filter({{entries}}, e -> e IS NULL)) AS BIGINT) AS n_filtered,
+  CAST({_n_calls("g = 1")} AS INT) AS n_het,
+  CAST({_n_calls("g = 0")} AS INT) AS n_hom_ref,
+  CAST({_n_calls("g = 2")} AS INT) AS n_hom_var,
+  CAST({_n_calls("g > 0")} AS INT) AS n_non_ref,
+  array(CAST({_n_calls("g = 0")} AS INT), CAST({_n_calls("g = 2")} AS INT)) AS homozygote_count,
+  {_AN} AS AN,
+  array({_AN} - {_AC}, {_AC}) AS AC,
+  array(
+    CASE WHEN {_AN} > 0 THEN ({_AN} - {_AC}) / {_AN} END,
+    CASE WHEN {_AN} > 0 THEN {_AC} / {_AN} END
+  ) AS AF,
+  CASE WHEN {_N_CALLED} > 0 THEN {_n_calls("g = 1")} / {_N_CALLED} END AS het_freq"""
+
+
+def _field_stats(field: str) -> str:
+    """dp_stats / gq_stats: mean, population stdev (E[x^2] - mean^2, one
+    pass each, no mean inside a lambda), min and max of the defined
+    values of an entry field."""
+    vals = f"filter(transform({{entries}}, e -> CAST(e.{field} AS DOUBLE)), v -> v IS NOT NULL)"
+    n, s1 = f"size({vals})", f"aggregate({vals}, 0.0D, (a, v) -> a + v)"
+    s2 = f"aggregate({vals}, 0.0D, (a, v) -> a + v * v)"
+    var = f"greatest({s2} / {n} - ({s1} / {n}) * ({s1} / {n}), 0.0D)"
+    return f""",
+  struct(
+    CASE WHEN {n} > 0 THEN {s1} / {n} END AS mean,
+    sqrt(CASE WHEN {n} > 0 THEN {var} END) AS stdev,
+    array_min({vals}) AS min,
+    array_max({vals}) AS max
+  ) AS {field.lower()}_stats"""
+
+
+_VARIANT_QC_STATS = {f: _field_stats(f) for f in ("DP", "GQ")}
+# the count struct with the HWE finalizer's three fields appended
+_WITH_HWE = "struct({qc}.*, {hwe}.*)"
 
 
 def variant_qc(mt: MatrixTable, gt_field: str = "GT", name: str = "variant_qc", hwe: bool = True) -> MatrixTable:
@@ -45,69 +105,14 @@ def variant_qc(mt: MatrixTable, gt_field: str = "GT", name: str = "variant_qc", 
     n_(not_)called, n_filtered, n_het/hom_ref/hom_var/non_ref,
     AC/AF/AN, dp_stats/gq_stats when DP/GQ entries exist, and the
     exact mid-p HWE trio (het_freq_hwe, p_value_hwe,
-    p_value_excess_het). Count pass is one entries-array HOF projection
-    (codegen, no shuffle); the HWE finalizer is an Arrow-batched UDF
-    over the three counts (map-only). ``hwe=False`` skips it."""
-
-    def stats(entries: Column) -> dict[str, Column]:
-        gts = F.transform(entries, lambda e: e[gt_field])
-        called = F.filter(gts, lambda g: g.isNotNull())
-        n_called = F.size(called)
-        n_total = F.size(gts)
-        n_het = F.size(F.filter(called, lambda g: g == 1))
-        n_hom_ref = F.size(F.filter(called, lambda g: g == 0))
-        n_hom_var = F.size(F.filter(called, lambda g: g == 2))
-        an = (n_called * 2).cast("int")
-        ac1 = _gt_sum(called).cast("int")
-        n_filtered = F.size(F.filter(entries, lambda e: e.isNull()))
-        n_non_ref = F.size(F.filter(called, lambda g: g > 0))
-        fields = [
-            (n_called.cast("double") / n_total).alias("call_rate"),
-            n_called.cast("int").alias("n_called"),
-            (n_total - n_called).cast("int").alias("n_not_called"),
-            n_filtered.cast("bigint").alias("n_filtered"),
-            n_het.cast("int").alias("n_het"),
-            n_hom_ref.cast("int").alias("n_hom_ref"),
-            n_hom_var.cast("int").alias("n_hom_var"),
-            n_non_ref.cast("int").alias("n_non_ref"),
-            # per-allele hom counts (ref qc.py:219 homozygote_count):
-            # index 0 = hom-ref, 1 = hom-var for the biallelic encoding
-            F.array(n_hom_ref.cast("int"), n_hom_var.cast("int")).alias(
-                "homozygote_count"
-            ),
-            an.alias("AN"),
-            F.array((an - ac1), ac1).alias("AC"),
-            F.array(
-                F.when(an > 0, (an - ac1) / an),
-                F.when(an > 0, ac1 / an),
-            ).alias("AF"),
-            F.when(n_called > 0, n_het / n_called).alias("het_freq"),
-        ]
-        entry_names = {f.name for f in mt._df.schema[ENTRIES].dataType.elementType.fields}
-        for fld, out_name in (("DP", "dp_stats"), ("GQ", "gq_stats")):
-            if fld in entry_names:
-                vals = F.filter(
-                    F.transform(entries, lambda e: e[fld].cast("double")),
-                    lambda v: v.isNotNull(),
-                )
-                nn = F.size(vals)
-                s1 = F.aggregate(vals, F.lit(0.0), lambda a, v: a + v)
-                s2 = F.aggregate(vals, F.lit(0.0), lambda a, v: a + v * v)
-                mean = F.when(nn > 0, s1 / nn)
-                # population variance via E[x^2] - mean^2 (one pass each,
-                # no mean-inside-lambda re-evaluation)
-                var = F.when(nn > 0, F.greatest(s2 / nn - (s1 / nn) * (s1 / nn), F.lit(0.0)))
-                fields.append(
-                    F.struct(
-                        mean.alias("mean"),
-                        F.sqrt(var).alias("stdev"),
-                        F.array_min(vals).alias("min"),
-                        F.array_max(vals).alias("max"),
-                    ).alias(out_name)
-                )
-        return {name: F.struct(*fields)}
-
-    out = mt.annotate_rows_agg_entries(stats)
+    p_value_excess_het). The counts are one entries-array HOF
+    projection (codegen, no shuffle), built as one SQL expression; the
+    HWE finalizer is an Arrow-batched UDF over the three counts
+    (map-only), merged into the struct by a second SQL expression.
+    ``hwe=False`` skips it."""
+    stat_fields = [f for f in ("DP", "GQ") if f in _entry_names(mt)]
+    template = _VARIANT_QC_COUNTS + "".join(_VARIANT_QC_STATS[f] for f in stat_fields) + ")"
+    out = mt._with_df(mt._df.withColumn(name, sql_expr(template, entries=ENTRIES, gt=gt_field)))
     if hwe:
         # exact mid-p HWE per variant: Arrow-batched finalizer over the
         # three count fields (map-only, no shuffle)
@@ -117,8 +122,11 @@ def variant_qc(mt: MatrixTable, gt_field: str = "GT", name: str = "variant_qc", 
         def _fin(hr: pd.Series, het: pd.Series, hv: pd.Series) -> pd.DataFrame:
             from ..expr.stats import hardy_weinberg_full
 
+            # a row whose entries array is NULL has NULL counts and a NULL trio
+            none = dict.fromkeys(("het_freq_hwe", "p_value_hwe", "p_value_excess_het"))
             return pd.DataFrame(
-                [hardy_weinberg_full(int(a), int(b), int(c)) for a, b, c in zip(hr, het, hv)]
+                [none if pd.isna(a) else hardy_weinberg_full(int(a), int(b), int(c))
+                 for a, b, c in zip(hr, het, hv)]
             )
 
         _fin.__annotations__ = {
@@ -129,15 +137,9 @@ def variant_qc(mt: MatrixTable, gt_field: str = "GT", name: str = "variant_qc", 
             "struct<het_freq_hwe:double,p_value_hwe:double,p_value_excess_het:double>",
         )
         q = F.col(name)
-        hwe_struct = udf(q["n_hom_ref"], q["n_het"], q["n_hom_var"])
-        base_names = [f.name for f in out._df.schema[name].dataType.fields]
-        merged = F.struct(
-            *[q[f].alias(f) for f in base_names],
-            hwe_struct["het_freq_hwe"].alias("het_freq_hwe"),
-            hwe_struct["p_value_hwe"].alias("p_value_hwe"),
-            hwe_struct["p_value_excess_het"].alias("p_value_excess_het"),
-        )
-        out = out._with_df(out._df.withColumn(name, merged))
+        df = out._df.withColumn("__hwe", udf(q["n_hom_ref"], q["n_het"], q["n_hom_var"]))
+        merged = sql_expr(_WITH_HWE, qc=name, hwe="__hwe")
+        out = out._with_df(df.withColumn(name, merged).drop("__hwe"))
     return out
 
 
@@ -228,6 +230,33 @@ def _merge_moments(a: tuple, b: tuple) -> tuple:
     return n, s1 + s2, m1 + m2 + cross, np.minimum(lo1, lo2), np.maximum(hi1, hi2)
 
 
+# sample_qc's row projection: GT codes (-2 missing entry, -1 missing
+# call), an entry field as doubles, and the six allele-category flags of
+# _ALLELE_COUNTS for the first alt allele. The flags CASE follows
+# expr.functions.allele_type branch for branch (SNP, MNP, Insertion,
+# Deletion, Star, Unknown, Complex); only a SNP can be a transition or a
+# transversion.
+_GT_CODES = (
+    "transform({entries}, x -> CASE WHEN x IS NULL THEN -2 ELSE coalesce(CAST(x.{gt} AS INT), -1) END)"
+    " AS gt"
+)
+_AS_DOUBLES = "transform({entries}, x -> CAST(x.{field} AS DOUBLE)) AS {field}"
+_REF, _ALT = "element_at({alleles}, 1)", "element_at({alleles}, 2)"
+_TRANSITION = f"concat({_REF}, {_ALT}) IN ('AG', 'GA', 'CT', 'TC')"
+_ALLELE_FLAGS = f"""CASE
+  WHEN length({_REF}) = 1 AND length({_ALT}) = 1 AND {_REF} != {_ALT}
+    THEN array(true, false, false, {_TRANSITION}, NOT {_TRANSITION}, false)
+  WHEN length({_REF}) > 1 AND length({_REF}) = length({_ALT}) AND {_REF} != {_ALT}
+    THEN array(false, false, false, false, false, false)
+  WHEN length({_REF}) < length({_ALT}) AND startswith({_ALT}, {_REF})
+    THEN array(false, true, false, false, false, false)
+  WHEN length({_REF}) > length({_ALT}) AND startswith({_REF}, {_ALT})
+    THEN array(false, false, true, false, false, false)
+  WHEN {_ALT} = '*' THEN array(false, false, false, false, false, true)
+  WHEN {_REF} = {_ALT} THEN array(false, false, false, false, false, false)
+  ELSE array(false, false, false, false, false, false)
+END AS flags"""
+
 _CALL_COUNTS = (
     "n_total", "n_called", "n_filtered", "n_het", "n_hom_ref", "n_hom_var", "n_non_ref",
     "n_singleton",
@@ -259,29 +288,13 @@ def sample_qc(mt: MatrixTable, gt_field: str = "GT"):
     when ``sample_qc`` is called. Rows with NULL entries are skipped;
     without any row every statistic is NULL; an entries array whose
     length is not the column count raises."""
-    from ..expr import functions as hf
-
     n = len(mt._cols)
     stat_fields = [f for f in ("DP", "GQ") if f in _entry_names(mt)]
     has_alleles = "alleles" in mt._df.columns
-    e = F.col(ENTRIES)
-    proj = [
-        F.transform(
-            e,
-            lambda x: F.when(x.isNull(), F.lit(-2)).otherwise(
-                F.coalesce(x[gt_field].cast("int"), F.lit(-1))
-            ),
-        ).alias("gt")
-    ]
-    proj += [F.transform(e, lambda x: x[f].cast("double")).alias(f) for f in stat_fields]
+    proj = [sql_expr(_GT_CODES, entries=ENTRIES, gt=gt_field)]
+    proj += [sql_expr(_AS_DOUBLES, entries=ENTRIES, field=f) for f in stat_fields]
     if has_alleles:
-        ref, alt = F.element_at("alleles", 1), F.element_at("alleles", 2)
-        atype = hf.allele_type(ref, alt)
-        flags = (
-            atype == "SNP", atype == "Insertion", atype == "Deletion",
-            hf.is_transition(ref, alt), hf.is_transversion(ref, alt), atype == "Star",
-        )
-        proj.append(F.array(*[F.coalesce(c, F.lit(False)) for c in flags]).alias("flags"))
+        proj.append(sql_expr(_ALLELE_FLAGS, alleles="alleles"))
     n_stats = len(stat_fields)
 
     def step(b):
@@ -374,6 +387,31 @@ def summarize_variants(mt) -> dict:
     }
 
 
+# compute_charr's row projection: the in-sample ref allele frequency
+# (1 - AC / AN over the called GTs), the window it must fall in, and each
+# entry's ref-read fraction AD[0] / (AD[0] + AD[1]), NULL unless the
+# entry is a kept hom-var call.
+_REF_AF = f"CASE WHEN size({_CALLED}) * 2 > 0 THEN 1.0D - CAST({_ALT_SUM} AS DOUBLE) / (size({_CALLED}) * 2) END"
+_AF_WINDOW = "raf > {min_af} AND raf < {max_af}"
+
+
+def _ref_fraction(dp: str) -> str:
+    """The ref-read fraction template for entries whose depth is ``dp``
+    (the DP field, or NULL without one); AD's sum stands in for a NULL
+    depth. The parentheses keep the AND tree left-nested, as the Column
+    API built it; Spark's SQL parser balances a flat AND chain."""
+    ad0, ad1 = "element_at(e.{ad}, 1)", "element_at(e.{ad}, 2)"
+    depth = f"coalesce({dp}, {ad0} + {ad1})"
+    return f"""transform({{entries}}, e -> CASE
+  WHEN ((e.{{gt}} = 2 AND e.GQ >= {{min_gq}}) AND ({depth} >= {{min_dp}} AND {depth} <= {{max_dp}}))
+    AND e.{{ad}} IS NOT NULL
+  THEN CAST({ad0} AS DOUBLE) / (CAST({ad0} AS DOUBLE) + CAST({ad1} AS DOUBLE))
+END) AS frac"""
+
+
+_REF_FRACTION = {True: _ref_fraction("e.DP"), False: _ref_fraction("CAST(NULL AS INT)")}
+
+
 def compute_charr(
     mt: MatrixTable,
     min_af: float = 0.05,
@@ -404,34 +442,21 @@ def compute_charr(
     count them per sample (two numbers per sample and partial, merged
     like sample_qc's). A sample with no kept entry gets NULL.
     """
-    ents = F.col(ENTRIES)
     if ref_af_field:
         ref_af = F.col(ref_af_field)
     else:
-        gts = F.filter(F.transform(ents, lambda e: e[gt_field]), lambda g: g.isNotNull())
-        an = 2 * F.size(gts)
-        ref_af = F.when(
-            an > 0,
-            1.0 - _gt_sum(gts).cast("double") / an,
-        )
-    has_dp = "DP" in _entry_names(mt)
-
-    def ref_fraction(e):
-        ad = e[ad_field]
-        dp = F.coalesce(e["DP"] if has_dp else F.lit(None).cast("int"),
-                        F.element_at(ad, 1) + F.element_at(ad, 2))
-        kept = (e[gt_field] == 2) & (e["GQ"] >= min_gq) & dp.between(min_dp, max_dp) & ad.isNotNull()
-        ad0 = F.element_at(ad, 1).cast("double")
-        ad1 = F.element_at(ad, 2).cast("double")
-        return F.when(kept, ad0 / (ad0 + ad1))
-
+        ref_af = sql_expr(_REF_AF, entries=ENTRIES, gt=gt_field)
+    fraction = sql_expr(
+        _REF_FRACTION["DP" in _entry_names(mt)], entries=ENTRIES, gt=gt_field, ad=ad_field,
+        min_gq=min_gq, min_dp=min_dp, max_dp=max_dp,
+    )
     df = mt._df
     if "alleles" in df.columns:
         df = df.where(F.size("alleles") == 2)
     rows = (
-        df.select(ents.alias(ENTRIES), ref_af.alias("raf"))
-        .where((F.col("raf") > min_af) & (F.col("raf") < max_af))
-        .select(F.transform(ENTRIES, ref_fraction).alias("frac"), "raf")
+        df.select(ENTRIES, ref_af.alias("raf"))
+        .where(sql_expr(_AF_WINDOW, min_af=min_af, max_af=max_af))
+        .select(fraction, "raf")
     )
     n = len(mt._cols)
 

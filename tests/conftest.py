@@ -1,7 +1,11 @@
+import contextlib
 import os
 import sys
+import threading
+import types
 
 import pytest
+from py4j.clientserver import ClientServerConnection
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -39,3 +43,23 @@ def sf_dir():
 
 def load(spark, sf_dir, name):
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+@contextlib.contextmanager
+def py4j_round_trips():
+    """Count the Py4J commands the main thread sends to the JVM inside
+    the block: each is one round trip. PySpark's pinned-thread mode
+    sends them all through ``ClientServerConnection.send_command``."""
+    trips = types.SimpleNamespace(count=0)
+    send = ClientServerConnection.send_command
+
+    def counted(self, command):
+        if threading.current_thread() is threading.main_thread():
+            trips.count += 1
+        return send(self, command)
+
+    ClientServerConnection.send_command = counted
+    try:
+        yield trips
+    finally:
+        ClientServerConnection.send_command = send

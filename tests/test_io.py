@@ -6,6 +6,7 @@ import datetime
 import textwrap
 
 import pytest
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from hail_spark.io import (
@@ -18,6 +19,7 @@ from hail_spark.io import (
     import_vcf,
 )
 from hail_spark.io.vcf import _header_lines
+from hail_spark.matrixtable import ENTRIES
 
 VCF = textwrap.dedent(
     """\
@@ -593,3 +595,68 @@ def test_jsonl_round_trip_preserves_values(spark, tmp_path):
     # inference path (no schema) also resolves the columns
     inferred = import_jsonl(spark, path).df
     assert set(inferred.columns) == {"doc_id", "text", "lang"}
+
+
+def test_import_vcf_parses_calls_and_missing_values(spark, tmp_path):
+    """Every row and entry field of a small VCF against literal values:
+    phased, half-missing and multi-allelic calls, a '.' depth, and AD/PL
+    lists with a '.' element."""
+    p = tmp_path / "calls.vcf"
+    p.write_text(
+        _vcf_text(
+            ["A", "B", "C"],
+            [
+                "1\t10\trs7\tA\tC,G\t12.5\tq10;lowqual\t.\tGT:AD:DP:GQ:PL\t0|1:3,.,4:.:20:0,.,9\t0/.:5,5,0:10:.:.\t1/2:0,2,3:5:7:9,8,7,6,5,4",
+                "2\t20\t.\tTT\t.\t.\tPASS\t.\tGT:DP\t./.:4\t.\t0/0:.",
+            ],
+        )
+    )
+    mt = import_vcf(spark, str(p))
+    rows = sorted(mt._df.collect(), key=lambda r: r["locus"]["position"])
+    entry = lambda gt, gta, phased, ad, dp, gq, pl: {  # noqa: E731
+        "GT": gt, "GTA": gta, "phased": phased, "AD": ad, "DP": dp, "GQ": gq, "PL": pl
+    }
+    got = [{**r.asDict(), ENTRIES: [e.asDict() for e in r[ENTRIES]]} for r in rows]
+    assert got == [
+        {
+            "locus": Row(contig="1", position=10), "alleles": ["A", "C", "G"], "rsid": "rs7",
+            "qual": 12.5, "filters": ["q10", "lowqual"], "info": None,
+            ENTRIES: [
+                entry(1, [0, 1], True, [3, None, 4], None, 20, [0, None, 9]),
+                entry(None, None, False, [5, 5, 0], 10, None, None),
+                entry(2, [1, 2], False, [0, 2, 3], 5, 7, [9, 8, 7, 6, 5, 4]),
+            ],
+        },
+        {
+            "locus": Row(contig="2", position=20), "alleles": ["TT"], "rsid": None,
+            "qual": None, "filters": [], "info": None,
+            ENTRIES: [
+                entry(None, None, False, None, 4, None, None),
+                entry(None, None, None, None, None, None, None),
+                entry(0, [0, 0], False, None, None, None, None),
+            ],
+        },
+    ]
+
+
+def test_import_vcf_reads_multi_part_export(spark, tmp_path):
+    """export_vcf writes its header as a small part file of its own; a
+    data part of more than ``header_scan_lines`` lines must not hide it
+    from import_vcf, which reads the header from the first file by
+    name."""
+    n = 12_000
+    p = tmp_path / "big.vcf"
+    gts = ["0/0", "0/1", "1/1", "./."]
+    p.write_text(
+        _vcf_text(["A", "B"], [f"1\t{i + 1}\t.\tA\tG\t.\t.\t.\tGT\t{gts[i % 4]}\t{gts[i % 3]}" for i in range(n)])
+    )
+    mt = import_vcf(spark, str(p))
+    out = str(tmp_path / "out.vcf")
+    export_vcf(mt, out)
+    again = import_vcf(spark, f"{out}/part-*")
+    assert again.count() == (n, 2)
+    assert [c["s"] for c in again._cols] == ["A", "B"]
+    calls = lambda m: sorted(  # noqa: E731
+        m._df.select(F.col("locus.position"), F.col(f"{ENTRIES}.GT")).collect()
+    )
+    assert calls(again) == calls(mt)
