@@ -8,8 +8,11 @@
 #                   HEAD each run from their own `git archive` checkout for
 #                   BENCHMARK.json's run_seconds, the side that runs first
 #                   alternating by seed; prints each pair's wall_s, HEAD's
-#                   win count, each side's median and quartiles, and the
-#                   parent's IQR.
+#                   win count, each side's median and quartiles, the
+#                   parent's IQR, and each end-to-end metric of
+#                   BENCHMARK.json as the change's median relative to the
+#                   parent's, next to its bound, marked when it is worse
+#                   by more than the bound.
 
 PY ?= python
 PARENT ?= HEAD~1
@@ -38,7 +41,7 @@ perfbench-ab:
 	      --seed $$s --seconds $$secs --trace 0 2>/dev/null | tail -n 1)" | tee -a "$$d/ab.txt"; \
 	  done; t=$$first; first=$$second; second=$$t; \
 	done; \
-	python3 -c "$$AB_SUMMARY" "$$d/ab.txt"
+	python3 -c "$$AB_SUMMARY" "$$d/ab.txt" "$$d/change/BENCHMARK.json"
 
 define AB_SUMMARY
 import json, sys
@@ -65,5 +68,13 @@ for i, side in ((1, "parent"), (2, "change")):
     for m in sorted({m for t in pairs for m in t[i]["metrics"]}):
         print(f"  {m} median {np.median([val(t[i], m) for t in pairs]):.6g}")
 print(f"median difference {med['parent'] - med['change']:.3f} s; compare it with the parent's IQR")
+print("end-to-end metrics, change median against parent median:")
+for m in json.load(open(sys.argv[2]))["end_to_end"]:
+    p, c = (np.median([val(t[i], m["name"]) for t in pairs]) for i in (1, 2))
+    rel = (c - p) / p if p else float("nan")
+    worse = rel if m["better"] == "lower" else -rel
+    flag = "  WORSE BY MORE THAN THE BOUND" if worse > m["bound"] else ""
+    print(f"  {m['name']}: parent {p:.6g}, change {c:.6g}, {rel:+.1%}"
+          f" (better {m['better']}, bound {m['bound']:.0%}){flag}")
 endef
 export AB_SUMMARY

@@ -474,7 +474,7 @@ def write_matrix_table(mt, path: str):
     rows_df = src.drop(ENTRIES)
     ent_field = "the entries! [hail_spark]"
     ents_df = src.select(src[ENTRIES].alias(ent_field))
-    cols_df = spark.createDataFrame(mt._cols)
+    cols_df = mt._cols_frame()
     empty_g = ({}, T.StructType([]))  # (globals_row, globals_schema)
 
     # nested TableSpec dirs: the DATA of each component lives in that

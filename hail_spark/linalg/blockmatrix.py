@@ -539,456 +539,398 @@ class BlockMatrix:
         )
         return u, s, v
 
+    # ------------------------------------------------------------------ #
+    # class-surface completion (ref linalg/blockmatrix.py:
+    # default_block_size :704, from_entry_expr :221, random :398, fill
+    # :440, element math :933-:1185, filter :1533-:1650,
+    # sparsify_triangle :826, entries :1555, to_table_row_major :1462,
+    # export :1727-:2058, persistence :1380)
+    # ------------------------------------------------------------------ #
+    @staticmethod
+    def default_block_size() -> int:
+        """Reference default (blockmatrix.py:704): 4096 — 128 MB dense
+        blocks of float64."""
+        return 4096
 
-# ---------------------------------------------------------------------- #
-# class-surface completion (ref linalg/blockmatrix.py: default_block_size
-# :704, from_entry_expr :221, random :398, fill :440, element math
-# :933-:1185, filter :1533-:1650, sparsify_triangle :826, entries :1555,
-# to_table_row_major :1462, export :1727-:2058, persistence :1380)
-# ---------------------------------------------------------------------- #
-def _bm_default_block_size() -> int:
-    """Reference default (blockmatrix.py:704): 4096 — 128 MB dense
-    blocks of float64."""
-    return 4096
+    @property
+    def shape(self) -> tuple:
+        return (self.n_rows, self.n_cols)
 
+    @property
+    def element_type(self):
+        from pyspark.sql.types import DoubleType
 
-def _bm_shape(self) -> tuple:
-    return (self.n_rows, self.n_cols)
+        return DoubleType()
 
+    @property
+    def T(self) -> "BlockMatrix":
+        return self.transpose()
 
-def _bm_element_type(self):
-    from pyspark.sql.types import DoubleType
+    @property
+    def is_sparse(self) -> bool:
+        """True when blocks are missing from the grid (one count job)."""
+        bs = self.block_size
+        full = -(-self.n_rows // bs) * -(-self.n_cols // bs)
+        return self.df.count() < full
 
-    return DoubleType()
-
-
-def _bm_T(self) -> "BlockMatrix":
-    return self.transpose()
-
-
-def _bm_is_sparse(self) -> bool:
-    """True when blocks are missing from the grid (one count job)."""
-    bs = self.block_size
-    full = -(-self.n_rows // bs) * -(-self.n_cols // bs)
-    return self.df.count() < full
-
-
-def _bm_densify(self) -> "BlockMatrix":
-    """Materialize dropped blocks as zeros (ref densify): outer join of
-    the full grid against the present blocks; the grid frame is tiny
-    (#blocks rows, no data arrays) so the join broadcasts."""
-    spark = self.df.sparkSession
-    bs = self.block_size
-    nbr, nbc = -(-self.n_rows // bs), -(-self.n_cols // bs)
-    grid = (
-        spark.range(nbr).select(F.col("id").alias("bi"))
-        .crossJoin(spark.range(nbc).select(F.col("id").alias("bj")))
-    )
-    r_of = F.least(F.lit(bs), F.lit(self.n_rows) - F.col("bi") * bs).cast("int")
-    c_of = F.least(F.lit(bs), F.lit(self.n_cols) - F.col("bj") * bs).cast("int")
-    joined = grid.join(self.df, on=["bi", "bj"], how="left").select(
-        "bi",
-        "bj",
-        F.coalesce(F.col("r"), r_of).alias("r"),
-        F.coalesce(F.col("c"), c_of).alias("c"),
-        F.coalesce(
-            F.col("data"), F.array_repeat(F.lit(0.0), (r_of * c_of).cast("int"))
-        ).alias("data"),
-    )
-    return BlockMatrix(joined, self.n_rows, self.n_cols, bs)
-
-
-def _bm_fill(n_rows: int, n_cols: int, value: float, block_size: int = 4096) -> "BlockMatrix":
-    """Constant matrix (ref fill :440) — grid frame + array_repeat,
-    fully distributed, no driver data."""
-    from ..session import get_spark
-
-    spark = get_spark()
-    bs = block_size
-    nbr, nbc = -(-n_rows // bs), -(-n_cols // bs)
-    grid = (
-        spark.range(nbr).select(F.col("id").alias("bi"))
-        .crossJoin(spark.range(nbc).select(F.col("id").alias("bj")))
-    )
-    r_of = F.least(F.lit(bs), F.lit(n_rows) - F.col("bi") * bs).cast("int")
-    c_of = F.least(F.lit(bs), F.lit(n_cols) - F.col("bj") * bs).cast("int")
-    df = grid.select(
-        "bi", "bj", r_of.alias("r"), c_of.alias("c"),
-        F.array_repeat(F.lit(float(value)), (r_of * c_of).cast("int")).alias("data"),
-    )
-    return BlockMatrix(df, n_rows, n_cols, bs)
-
-
-def _bm_random(
-    n_rows: int, n_cols: int, block_size: int = 4096, seed: int = 0, gaussian: bool = True
-) -> "BlockMatrix":
-    """Seeded random matrix (ref random :398): element (bi,bj,k) hashes
-    to a uniform via xxhash64 → Box-Muller for gaussian — deterministic,
-    generated where the block lives, nothing shipped."""
-    bm = _bm_fill(n_rows, n_cols, 0.0, block_size)
-
-    def u(k, salt):
-        h = F.xxhash64(F.col("bi"), F.col("bj"), k, F.lit(seed), F.lit(salt))
-        return (F.pmod(h, F.lit(1 << 40)).cast("double") + 0.5) / float(1 << 40)
-
-    if gaussian:
-        gen = lambda k: F.sqrt(-2.0 * F.log(u(k, 1))) * F.cos(  # noqa: E731
-            2.0 * math.pi * u(k, 2)
+    def densify(self) -> "BlockMatrix":
+        """Materialize dropped blocks as zeros (ref densify): outer join of
+        the full grid against the present blocks; the grid frame is tiny
+        (#blocks rows, no data arrays) so the join broadcasts."""
+        spark = self.df.sparkSession
+        bs = self.block_size
+        nbr, nbc = -(-self.n_rows // bs), -(-self.n_cols // bs)
+        grid = (
+            spark.range(nbr).select(F.col("id").alias("bi"))
+            .crossJoin(spark.range(nbc).select(F.col("id").alias("bj")))
         )
-    else:
-        gen = lambda k: u(k, 1)  # noqa: E731
-    df = bm.df.withColumn(
-        "data",
-        F.transform(F.sequence(F.lit(0), F.col("r") * F.col("c") - 1), gen),
-    )
-    return BlockMatrix(df, n_rows, n_cols, block_size)
+        r_of = F.least(F.lit(bs), F.lit(self.n_rows) - F.col("bi") * bs).cast("int")
+        c_of = F.least(F.lit(bs), F.lit(self.n_cols) - F.col("bj") * bs).cast("int")
+        joined = grid.join(self.df, on=["bi", "bj"], how="left").select(
+            "bi",
+            "bj",
+            F.coalesce(F.col("r"), r_of).alias("r"),
+            F.coalesce(F.col("c"), c_of).alias("c"),
+            F.coalesce(
+                F.col("data"), F.array_repeat(F.lit(0.0), (r_of * c_of).cast("int"))
+            ).alias("data"),
+        )
+        return BlockMatrix(joined, self.n_rows, self.n_cols, bs)
 
+    @staticmethod
+    def fill(n_rows: int, n_cols: int, value: float, block_size: int = 4096) -> "BlockMatrix":
+        """Constant matrix (ref fill :440) — grid frame + array_repeat,
+        fully distributed, no driver data."""
+        from ..session import get_spark
 
-def _bm_from_entry_expr(
-    mt,
-    field: str = "GT",
-    mean_impute: bool = False,
-    center: bool = False,
-    normalize: bool = False,
-    block_size: int = 4096,
-) -> "BlockMatrix":
-    """MatrixTable entries → BlockMatrix (ref from_entry_expr :221):
-    rows indexed by the distributed add_row_index scan, one posexplode
-    to long form, then the blocked gather.  Row-wise mean_impute /
-    center / normalize are array HOFs computed before the explode —
-    the same per-variant standardization the reference applies."""
-    from ..matrixtable import ENTRIES
+        spark = get_spark()
+        bs = block_size
+        nbr, nbc = -(-n_rows // bs), -(-n_cols // bs)
+        grid = (
+            spark.range(nbr).select(F.col("id").alias("bi"))
+            .crossJoin(spark.range(nbc).select(F.col("id").alias("bj")))
+        )
+        r_of = F.least(F.lit(bs), F.lit(n_rows) - F.col("bi") * bs).cast("int")
+        c_of = F.least(F.lit(bs), F.lit(n_cols) - F.col("bj") * bs).cast("int")
+        df = grid.select(
+            "bi", "bj", r_of.alias("r"), c_of.alias("c"),
+            F.array_repeat(F.lit(float(value)), (r_of * c_of).cast("int")).alias("data"),
+        )
+        return BlockMatrix(df, n_rows, n_cols, bs)
 
-    idx = mt.add_row_index("__bm_i")
-    e = F.col(ENTRIES)
-    vals = F.transform(e, lambda x: x[field].cast("double"))
-    if mean_impute or center or normalize:
-        nn = F.filter(vals, lambda v: v.isNotNull())
-        n_def = F.size(nn)
-        mean = F.when(
-            n_def > 0,
-            F.aggregate(nn, F.lit(0.0), lambda a, v: a + v) / n_def,
-        ).otherwise(F.lit(0.0))
-        if mean_impute:
-            vals = F.transform(vals, lambda v: F.coalesce(v, mean))
-        if center:
-            vals = F.transform(vals, lambda v: v - mean)
-        if normalize:
-            norm = F.sqrt(
-                F.aggregate(
-                    F.filter(vals, lambda v: v.isNotNull()),
-                    F.lit(0.0),
-                    lambda a, v: a + v * v,
+    @staticmethod
+    def random(
+        n_rows: int, n_cols: int, block_size: int = 4096, seed: int = 0, gaussian: bool = True
+    ) -> "BlockMatrix":
+        """Seeded random matrix (ref random :398): element (bi,bj,k) hashes
+        to a uniform via xxhash64 → Box-Muller for gaussian — deterministic,
+        generated where the block lives, nothing shipped."""
+        bm = BlockMatrix.fill(n_rows, n_cols, 0.0, block_size)
+
+        def u(k, salt):
+            h = F.xxhash64(F.col("bi"), F.col("bj"), k, F.lit(seed), F.lit(salt))
+            return (F.pmod(h, F.lit(1 << 40)).cast("double") + 0.5) / float(1 << 40)
+
+        if gaussian:
+            gen = lambda k: F.sqrt(-2.0 * F.log(u(k, 1))) * F.cos(  # noqa: E731
+                2.0 * math.pi * u(k, 2)
+            )
+        else:
+            gen = lambda k: u(k, 1)  # noqa: E731
+        df = bm.df.withColumn(
+            "data",
+            F.transform(F.sequence(F.lit(0), F.col("r") * F.col("c") - 1), gen),
+        )
+        return BlockMatrix(df, n_rows, n_cols, block_size)
+
+    @staticmethod
+    def from_entry_expr(
+        mt,
+        field: str = "GT",
+        mean_impute: bool = False,
+        center: bool = False,
+        normalize: bool = False,
+        block_size: int = 4096,
+    ) -> "BlockMatrix":
+        """MatrixTable entries → BlockMatrix (ref from_entry_expr :221):
+        rows indexed by the distributed add_row_index scan, one posexplode
+        to long form, then the blocked gather.  Row-wise mean_impute /
+        center / normalize are array HOFs computed before the explode —
+        the same per-variant standardization the reference applies."""
+        from ..matrixtable import ENTRIES
+
+        idx = mt.add_row_index("__bm_i")
+        e = F.col(ENTRIES)
+        vals = F.transform(e, lambda x: x[field].cast("double"))
+        if mean_impute or center or normalize:
+            nn = F.filter(vals, lambda v: v.isNotNull())
+            n_def = F.size(nn)
+            mean = F.when(
+                n_def > 0,
+                F.aggregate(nn, F.lit(0.0), lambda a, v: a + v) / n_def,
+            ).otherwise(F.lit(0.0))
+            if mean_impute:
+                vals = F.transform(vals, lambda v: F.coalesce(v, mean))
+            if center:
+                vals = F.transform(vals, lambda v: v - mean)
+            if normalize:
+                norm = F.sqrt(
+                    F.aggregate(
+                        F.filter(vals, lambda v: v.isNotNull()),
+                        F.lit(0.0),
+                        lambda a, v: a + v * v,
+                    )
                 )
-            )
-            vals = F.transform(
-                vals, lambda v: F.when(norm > 0, v / norm).otherwise(F.lit(0.0))
-            )
-    long = idx._df.select(
-        F.col("__bm_i").alias("i"), F.posexplode(vals).alias("j", "v")
-    ).filter(F.col("v").isNotNull())
-    return BlockMatrix.from_long(
-        long, mt.count_rows(), len(mt._cols), block_size=block_size
-    )
+                vals = F.transform(
+                    vals, lambda v: F.when(norm > 0, v / norm).otherwise(F.lit(0.0))
+                )
+        long = idx._df.select(
+            F.col("__bm_i").alias("i"), F.posexplode(vals).alias("j", "v")
+        ).filter(F.col("v").isNotNull())
+        return BlockMatrix.from_long(
+            long, mt.count_rows(), len(mt._cols), block_size=block_size
+        )
 
+    @staticmethod
+    def write_from_entry_expr(mt, path: str, overwrite: bool = False, **kwargs) -> None:
+        BlockMatrix.from_entry_expr(mt, **kwargs).write(path)
 
-def _bm_write_from_entry_expr(mt, path: str, overwrite: bool = False, **kwargs) -> None:
-    _bm_from_entry_expr(mt, **kwargs).write(path)
+    def checkpoint(self, path: str) -> "BlockMatrix":
+        self.write(path)
+        return BlockMatrix.read(self.df.sparkSession, path)
 
+    def persist(self, level: str = "MEMORY_AND_DISK") -> "BlockMatrix":
+        from pyspark import StorageLevel
 
-def _bm_checkpoint(self, path: str) -> "BlockMatrix":
-    self.write(path)
-    return BlockMatrix.read(self.df.sparkSession, path)
+        self.df.persist(getattr(StorageLevel, level))
+        return self
 
+    def cache(self) -> "BlockMatrix":
+        return self.persist("MEMORY_ONLY")
 
-def _bm_persist(self, level: str = "MEMORY_AND_DISK") -> "BlockMatrix":
-    from pyspark import StorageLevel
+    def unpersist(self) -> "BlockMatrix":
+        self.df.unpersist()
+        return self
 
-    self.df.persist(getattr(StorageLevel, level))
-    return self
+    def sqrt(self):
+        return self.map(lambda x: F.sqrt(x))
 
+    def ceil(self):
+        return self.map(lambda x: F.ceil(x).cast("double"))
 
-def _bm_cache(self) -> "BlockMatrix":
-    return _bm_persist(self, "MEMORY_ONLY")
+    def floor(self):
+        return self.map(lambda x: F.floor(x).cast("double"))
 
+    def abs(self):
+        return self.map(lambda x: F.abs(x))
 
-def _bm_unpersist(self) -> "BlockMatrix":
-    self.df.unpersist()
-    return self
+    def log(self):
+        return self.map(lambda x: F.log(x))
 
+    def filter(self, rows_to_keep, cols_to_keep) -> "BlockMatrix":
+        """Subset + reindex rows and cols (ref filter :1533): the index
+        remaps ride as broadcast map literals for driver-sized lists (the
+        reference requires the lists driver-side too), applied on the long
+        form, then one blocked regather."""
+        rmap = F.create_map(*[F.lit(x) for old, new in
+                              ((int(o), i) for i, o in enumerate(rows_to_keep))
+                              for x in (old, new)])
+        cmap = F.create_map(*[F.lit(x) for old, new in
+                              ((int(o), i) for i, o in enumerate(cols_to_keep))
+                              for x in (old, new)])
+        long = self.to_long().select(
+            rmap[F.col("i")].alias("i"), cmap[F.col("j")].alias("j"), "v"
+        ).filter(F.col("i").isNotNull() & F.col("j").isNotNull())
+        return BlockMatrix.from_long(
+            long, len(rows_to_keep), len(cols_to_keep), block_size=self.block_size
+        )
 
-def _bm_sqrt(self):
-    return self.map(lambda x: F.sqrt(x))
+    def filter_rows(self, rows_to_keep) -> "BlockMatrix":
+        return self.filter(rows_to_keep, list(range(self.n_cols)))
 
+    def filter_cols(self, cols_to_keep) -> "BlockMatrix":
+        return self.filter(list(range(self.n_rows)), cols_to_keep)
 
-def _bm_ceil(self):
-    return self.map(lambda x: F.ceil(x).cast("double"))
-
-
-def _bm_floor(self):
-    return self.map(lambda x: F.floor(x).cast("double"))
-
-
-def _bm_abs(self):
-    return self.map(lambda x: F.abs(x))
-
-
-def _bm_log(self):
-    return self.map(lambda x: F.log(x))
-
-
-def _bm_filter(self, rows_to_keep, cols_to_keep) -> "BlockMatrix":
-    """Subset + reindex rows and cols (ref filter :1533): the index
-    remaps ride as broadcast map literals for driver-sized lists (the
-    reference requires the lists driver-side too), applied on the long
-    form, then one blocked regather."""
-    rmap = F.create_map(*[F.lit(x) for old, new in
-                          ((int(o), i) for i, o in enumerate(rows_to_keep))
-                          for x in (old, new)])
-    cmap = F.create_map(*[F.lit(x) for old, new in
-                          ((int(o), i) for i, o in enumerate(cols_to_keep))
-                          for x in (old, new)])
-    long = self.to_long().select(
-        rmap[F.col("i")].alias("i"), cmap[F.col("j")].alias("j"), "v"
-    ).filter(F.col("i").isNotNull() & F.col("j").isNotNull())
-    return BlockMatrix.from_long(
-        long, len(rows_to_keep), len(cols_to_keep), block_size=self.block_size
-    )
-
-
-def _bm_filter_rows(self, rows_to_keep) -> "BlockMatrix":
-    return _bm_filter(self, rows_to_keep, list(range(self.n_cols)))
-
-
-def _bm_filter_cols(self, cols_to_keep) -> "BlockMatrix":
-    return _bm_filter(self, list(range(self.n_rows)), cols_to_keep)
-
-
-def _bm_sparsify_triangle(self, lower: bool = False, blocks_only: bool = False) -> "BlockMatrix":
-    """Keep the upper (default) or lower triangle (ref
-    sparsify_triangle :826) — the +/-inf half of sparsify_band."""
-    big = max(self.n_rows, self.n_cols)
-    keep_all = lambda gi, gj: F.lit(True)  # noqa: E731
-    if lower:
+    def sparsify_triangle(self, lower: bool = False, blocks_only: bool = False) -> "BlockMatrix":
+        """Keep the upper (default) or lower triangle (ref
+        sparsify_triangle :826) — the +/-inf half of sparsify_band."""
+        big = max(self.n_rows, self.n_cols)
+        keep_all = lambda gi, gj: F.lit(True)  # noqa: E731
+        if lower:
+            if blocks_only:
+                return self._sparsify(
+                    F.col("bj") * self.block_size
+                    <= F.col("bi") * self.block_size + F.col("r") - 1,
+                    keep_all,
+                )
+            return self.sparsify_band(-big, 0)
         if blocks_only:
             return self._sparsify(
-                F.col("bj") * self.block_size
-                <= F.col("bi") * self.block_size + F.col("r") - 1,
+                F.col("bj") * self.block_size + F.col("c") - 1
+                >= F.col("bi") * self.block_size,
                 keep_all,
             )
-        return self.sparsify_band(-big, 0)
-    if blocks_only:
-        return self._sparsify(
-            F.col("bj") * self.block_size + F.col("c") - 1
-            >= F.col("bi") * self.block_size,
-            keep_all,
+        return self.sparsify_band(0, big)
+
+    def entries(self):
+        """(i, j, entry) long Table (ref entries :1555)."""
+        from ..table import Table
+
+        return Table(self.to_long().withColumnRenamed("v", "entry"), ("i", "j"))
+
+    def to_table_row_major(self, n_partitions: int | None = None):
+        """One row per matrix row with the full row as an array (ref
+        to_table_row_major :1462): block-rows join on bi, each block
+        contributes its slice at offset bj*block_size."""
+        from ..table import Table
+
+        bs = self.block_size
+        per_row = self.df.select(
+            "bi", "bj", "c",
+            F.posexplode(
+                F.transform(
+                    F.sequence(F.lit(0), F.col("r") - 1),
+                    lambda li: F.slice(F.col("data"), li * F.col("c") + 1, F.col("c")),
+                )
+            ).alias("li", "rowpart"),
+        ).select(
+            (F.col("bi") * bs + F.col("li")).alias("row_idx"),
+            F.col("bj"),
+            "rowpart",
         )
-    return self.sparsify_band(0, big)
+        gathered = per_row.groupBy("row_idx").agg(
+            F.flatten(
+                F.transform(
+                    F.array_sort(
+                        F.collect_list(F.struct(F.col("bj"), F.col("rowpart")))
+                    ),
+                    lambda s: s["rowpart"],
+                )
+            ).alias("entries")
+        )
+        if n_partitions:
+            gathered = gathered.repartition(n_partitions)
+        return Table(gathered, ("row_idx",))
 
+    def to_matrix_table_row_major(self, n_partitions: int | None = None):
+        """MatrixTable with one float64 entry field 'element' (ref
+        to_matrix_table_row_major :1410)."""
+        from ..matrixtable import ENTRIES, MatrixTable
 
-def _bm_entries(self):
-    """(i, j, entry) long Table (ref entries :1555)."""
-    from ..table import Table
+        t = self.to_table_row_major(n_partitions)
+        df = t.df.withColumn(
+            ENTRIES,
+            F.transform(F.col("entries"), lambda v: F.struct(v.alias("element"))),
+        ).drop("entries")
+        cols = [{"col_idx": j} for j in range(self.n_cols)]
+        return MatrixTable(df, ("row_idx",), cols, ("col_idx",))
 
-    return Table(self.to_long().withColumnRenamed("v", "entry"), ("i", "j"))
+    def export(self, path: str, delimiter: str = "\t", header: str | None = None) -> None:
+        """Dense TSV export (ref export :1727): row-major table, one text
+        line per row — distributed write, driver never sees the matrix."""
+        t = self.to_table_row_major()
+        lines = t.df.orderBy("row_idx").select(
+            F.array_join(
+                F.transform(F.col("entries"), lambda v: v.cast("string")), delimiter
+            ).alias("value")
+        )
+        lines.write.mode("overwrite").text(path)
+        if header is not None:
+            import os
 
+            with open(os.path.join(path, "_header.txt"), "w") as f:
+                f.write(header + "\n")
 
-def _bm_to_table_row_major(self, n_partitions: int | None = None):
-    """One row per matrix row with the full row as an array (ref
-    to_table_row_major :1462): block-rows join on bi, each block
-    contributes its slice at offset bj*block_size."""
-    from ..table import Table
+    def tofile(self, uri: str) -> None:
+        """Row-major raw float64 dump, numpy-compatible (ref tofile :2006).
+        Collects to the driver — same constraint as the reference, which
+        requires the matrix to fit in memory for fromfile round-trips."""
+        self.to_numpy().astype(np.float64).tofile(uri)
 
-    bs = self.block_size
-    per_row = self.df.select(
-        "bi", "bj", "c",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.col("r") - 1),
-                lambda li: F.slice(F.col("data"), li * F.col("c") + 1, F.col("c")),
-            )
-        ).alias("li", "rowpart"),
-    ).select(
-        (F.col("bi") * bs + F.col("li")).alias("row_idx"),
-        F.col("bj"),
-        "rowpart",
-    )
-    gathered = per_row.groupBy("row_idx").agg(
-        F.flatten(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("bj"), F.col("rowpart")))
-                ),
-                lambda s: s["rowpart"],
-            )
-        ).alias("entries")
-    )
-    if n_partitions:
-        gathered = gathered.repartition(n_partitions)
-    return Table(gathered, ("row_idx",))
+    @staticmethod
+    def fromfile(
+        uri: str, n_rows: int, n_cols: int, block_size: int = 4096
+    ) -> "BlockMatrix":
+        """Inverse of tofile (ref fromfile :336)."""
+        from ..session import get_spark
 
+        M = np.fromfile(uri, dtype=np.float64).reshape(n_rows, n_cols)
+        return BlockMatrix.from_numpy(get_spark(), M, block_size=block_size)
 
-def _bm_to_matrix_table_row_major(self, n_partitions: int | None = None):
-    """MatrixTable with one float64 entry field 'element' (ref
-    to_matrix_table_row_major :1410)."""
-    from ..matrixtable import ENTRIES, MatrixTable
+    @staticmethod
+    def from_ndarray(ndarray, block_size: int = 4096) -> "BlockMatrix":
+        """Alias of from_numpy with the reference's name (ref from_ndarray)."""
+        from ..session import get_spark
 
-    t = _bm_to_table_row_major(self, n_partitions)
-    df = t.df.withColumn(
-        ENTRIES,
-        F.transform(F.col("entries"), lambda v: F.struct(v.alias("element"))),
-    ).drop("entries")
-    cols = [{"col_idx": j} for j in range(self.n_cols)]
-    return MatrixTable(df, ("row_idx",), cols, ("col_idx",))
+        return BlockMatrix.from_numpy(get_spark(), np.asarray(ndarray), block_size)
 
+    def to_ndarray(self) -> np.ndarray:
+        return self.to_numpy()
 
-def _bm_export(self, path: str, delimiter: str = "\t", header: str | None = None) -> None:
-    """Dense TSV export (ref export :1727): row-major table, one text
-    line per row — distributed write, driver never sees the matrix."""
-    t = _bm_to_table_row_major(self)
-    lines = t.df.orderBy("row_idx").select(
-        F.array_join(
-            F.transform(F.col("entries"), lambda v: v.cast("string")), delimiter
-        ).alias("value")
-    )
-    lines.write.mode("overwrite").text(path)
-    if header is not None:
+    def export_blocks(self, path: str, binary: bool = True) -> None:
+        """One file per block under path/ (ref export_blocks :1952)."""
+        import json
         import os
 
-        with open(os.path.join(path, "_header.txt"), "w") as f:
-            f.write(header + "\n")
-
-
-def _bm_tofile(self, uri: str) -> None:
-    """Row-major raw float64 dump, numpy-compatible (ref tofile :2006).
-    Collects to the driver — same constraint as the reference, which
-    requires the matrix to fit in memory for fromfile round-trips."""
-    self.to_numpy().astype(np.float64).tofile(uri)
-
-
-def _bm_fromfile(
-    uri: str, n_rows: int, n_cols: int, block_size: int = 4096
-) -> "BlockMatrix":
-    """Inverse of tofile (ref fromfile :336)."""
-    from ..session import get_spark
-
-    M = np.fromfile(uri, dtype=np.float64).reshape(n_rows, n_cols)
-    return BlockMatrix.from_numpy(get_spark(), M, block_size=block_size)
-
-
-def _bm_from_ndarray(ndarray, block_size: int = 4096) -> "BlockMatrix":
-    """Alias of from_numpy with the reference's name (ref from_ndarray)."""
-    from ..session import get_spark
-
-    return BlockMatrix.from_numpy(get_spark(), np.asarray(ndarray), block_size)
-
-
-def _bm_to_ndarray(self) -> np.ndarray:
-    return self.to_numpy()
-
-
-def _bm_export_blocks(self, path: str, binary: bool = True) -> None:
-    """One file per block under path/ (ref export_blocks :1952)."""
-    import os
-
-    os.makedirs(path, exist_ok=True)
-    meta = {"n_rows": self.n_rows, "n_cols": self.n_cols, "block_size": self.block_size}
-    import json
-
-    with open(os.path.join(path, "metadata.json"), "w") as f:
-        json.dump(meta, f)
-    for r in self.df.collect():
-        blk = np.array(r["data"], dtype=np.float64).reshape(r["r"], r["c"])
-        name = f"block_{r['bi']}_{r['bj']}"
-        if binary:
-            blk.tofile(os.path.join(path, name + ".npy.bin"))
-        else:
-            np.savetxt(os.path.join(path, name + ".tsv"), blk, delimiter="\t")
-
-
-def _bm_export_rectangles(
-    self, path: str, rectangles: list, delimiter: str = "\t", binary: bool = False
-) -> None:
-    """One file per [i0,i1)x[j0,j1) rectangle (ref export_rectangles
-    :1826): each rectangle filters the long form distributed; only the
-    rectangle's cells are collected."""
-    import os
-
-    os.makedirs(path, exist_ok=True)
-    long = self.to_long().persist()
-    try:
-        for k, (i0, i1, j0, j1) in enumerate(rectangles):
-            sub = (
-                long.filter(
-                    (F.col("i") >= i0) & (F.col("i") < i1)
-                    & (F.col("j") >= j0) & (F.col("j") < j1)
-                )
-                .orderBy("i", "j")
-                .collect()
-            )
-            M = np.zeros((i1 - i0, j1 - j0))
-            for r in sub:
-                M[r["i"] - i0, r["j"] - j0] = r["v"]
-            name = f"rect-{k}-{i0}-{i1}-{j0}-{j1}"
+        os.makedirs(path, exist_ok=True)
+        meta = {"n_rows": self.n_rows, "n_cols": self.n_cols, "block_size": self.block_size}
+        with open(os.path.join(path, "metadata.json"), "w") as f:
+            json.dump(meta, f)
+        for r in self.df.collect():
+            blk = np.array(r["data"], dtype=np.float64).reshape(r["r"], r["c"])
+            name = f"block_{r['bi']}_{r['bj']}"
             if binary:
-                M.tofile(os.path.join(path, name))
+                blk.tofile(os.path.join(path, name + ".npy.bin"))
             else:
-                np.savetxt(os.path.join(path, name), M, delimiter=delimiter)
-    finally:
-        long.unpersist()
+                np.savetxt(os.path.join(path, name + ".tsv"), blk, delimiter="\t")
 
+    def export_rectangles(
+        self, path: str, rectangles: list, delimiter: str = "\t", binary: bool = False
+    ) -> None:
+        """One file per [i0,i1)x[j0,j1) rectangle (ref export_rectangles
+        :1826): each rectangle filters the long form distributed; only the
+        rectangle's cells are collected."""
+        import os
 
-def _bm_rectangles_to_numpy(path: str, binary: bool = False) -> dict:
-    """Read export_rectangles output back (ref rectangles_to_numpy
-    :2030): {(i0,i1,j0,j1): ndarray}."""
-    import os
+        os.makedirs(path, exist_ok=True)
+        long = self.to_long().persist()
+        try:
+            for k, (i0, i1, j0, j1) in enumerate(rectangles):
+                sub = (
+                    long.filter(
+                        (F.col("i") >= i0) & (F.col("i") < i1)
+                        & (F.col("j") >= j0) & (F.col("j") < j1)
+                    )
+                    .orderBy("i", "j")
+                    .collect()
+                )
+                M = np.zeros((i1 - i0, j1 - j0))
+                for r in sub:
+                    M[r["i"] - i0, r["j"] - j0] = r["v"]
+                name = f"rect-{k}-{i0}-{i1}-{j0}-{j1}"
+                if binary:
+                    M.tofile(os.path.join(path, name))
+                else:
+                    np.savetxt(os.path.join(path, name), M, delimiter=delimiter)
+        finally:
+            long.unpersist()
 
-    out = {}
-    for name in os.listdir(path):
-        if not name.startswith("rect-"):
-            continue
-        _, _k, i0, i1, j0, j1 = name.split("-")
-        shape = (int(i1) - int(i0), int(j1) - int(j0))
-        full = os.path.join(path, name)
-        if binary:
-            M = np.fromfile(full, dtype=np.float64).reshape(shape)
-        else:
-            M = np.loadtxt(full, delimiter="\t").reshape(shape)
-        out[(int(i0), int(i1), int(j0), int(j1))] = M
-    return out
+    @staticmethod
+    def rectangles_to_numpy(path: str, binary: bool = False) -> dict:
+        """Read export_rectangles output back (ref rectangles_to_numpy
+        :2030): {(i0,i1,j0,j1): ndarray}."""
+        import os
 
-
-BlockMatrix.default_block_size = staticmethod(_bm_default_block_size)
-BlockMatrix.shape = property(_bm_shape)
-BlockMatrix.element_type = property(_bm_element_type)
-BlockMatrix.T = property(_bm_T)
-BlockMatrix.is_sparse = property(_bm_is_sparse)
-BlockMatrix.densify = _bm_densify
-BlockMatrix.fill = staticmethod(_bm_fill)
-BlockMatrix.random = staticmethod(_bm_random)
-BlockMatrix.from_entry_expr = staticmethod(_bm_from_entry_expr)
-BlockMatrix.write_from_entry_expr = staticmethod(_bm_write_from_entry_expr)
-BlockMatrix.checkpoint = _bm_checkpoint
-BlockMatrix.persist = _bm_persist
-BlockMatrix.cache = _bm_cache
-BlockMatrix.unpersist = _bm_unpersist
-BlockMatrix.sqrt = _bm_sqrt
-BlockMatrix.ceil = _bm_ceil
-BlockMatrix.floor = _bm_floor
-BlockMatrix.abs = _bm_abs
-BlockMatrix.log = _bm_log
-BlockMatrix.filter = _bm_filter
-BlockMatrix.filter_rows = _bm_filter_rows
-BlockMatrix.filter_cols = _bm_filter_cols
-BlockMatrix.sparsify_triangle = _bm_sparsify_triangle
-BlockMatrix.entries = _bm_entries
-BlockMatrix.to_table_row_major = _bm_to_table_row_major
-BlockMatrix.to_matrix_table_row_major = _bm_to_matrix_table_row_major
-BlockMatrix.export = _bm_export
-BlockMatrix.tofile = _bm_tofile
-BlockMatrix.fromfile = staticmethod(_bm_fromfile)
-BlockMatrix.from_ndarray = staticmethod(_bm_from_ndarray)
-BlockMatrix.to_ndarray = _bm_to_ndarray
-BlockMatrix.export_blocks = _bm_export_blocks
-BlockMatrix.export_rectangles = _bm_export_rectangles
-BlockMatrix.rectangles_to_numpy = staticmethod(_bm_rectangles_to_numpy)
+        out = {}
+        for name in os.listdir(path):
+            if not name.startswith("rect-"):
+                continue
+            _, _k, i0, i1, j0, j1 = name.split("-")
+            shape = (int(i1) - int(i0), int(j1) - int(j0))
+            full = os.path.join(path, name)
+            if binary:
+                M = np.fromfile(full, dtype=np.float64).reshape(shape)
+            else:
+                M = np.loadtxt(full, delimiter="\t").reshape(shape)
+            out[(int(i0), int(i1), int(j0), int(j1))] = M
+        return out

@@ -35,7 +35,6 @@ from pyspark.sql import functions as F
 
 from ..expr.sql import sql_expr
 from ..matrixtable import ENTRIES, MatrixTable
-from .local import local_frame
 
 
 # SQL templates for ``sql_expr`` (hail_spark/expr/sql.py). ``{entries}``
@@ -235,7 +234,9 @@ def _merge_moments(a: tuple, b: tuple) -> tuple:
 # _ALLELE_COUNTS for the first alt allele. The flags CASE follows
 # expr.functions.allele_type branch for branch (SNP, MNP, Insertion,
 # Deletion, Star, Unknown, Complex); only a SNP can be a transition or a
-# transversion.
+# transversion. A site without an alt allele (``import_vcf`` gives ALT
+# '.' a one-element ``alleles``) sets no flag, as in Hail; the guard
+# comes first because element_at(alleles, 2) raises there under ANSI.
 _GT_CODES = (
     "transform({entries}, x -> CASE WHEN x IS NULL THEN -2 ELSE coalesce(CAST(x.{gt} AS INT), -1) END)"
     " AS gt"
@@ -244,6 +245,7 @@ _AS_DOUBLES = "transform({entries}, x -> CAST(x.{field} AS DOUBLE)) AS {field}"
 _REF, _ALT = "element_at({alleles}, 1)", "element_at({alleles}, 2)"
 _TRANSITION = f"concat({_REF}, {_ALT}) IN ('AG', 'GA', 'CT', 'TC')"
 _ALLELE_FLAGS = f"""CASE
+  WHEN size({{alleles}}) < 2 THEN array(false, false, false, false, false, false)
   WHEN length({_REF}) = 1 AND length({_ALT}) = 1 AND {_REF} != {_ALT}
     THEN array(true, false, false, {_TRANSITION}, NOT {_TRANSITION}, false)
   WHEN length({_REF}) > 1 AND length({_REF}) = length({_ALT}) AND {_REF} != {_ALT}
@@ -347,7 +349,7 @@ def sample_qc(mt: MatrixTable, gt_field: str = "GT"):
             out["r_ti_tv"] = ratio("n_transition", "n_transversion")
             out["r_insertion_deletion"] = ratio("n_insertion", "n_deletion")
         out["n_not_called"] = col(c["n_total"] - c["n_called"])
-    return local_frame(mt._df.sparkSession, mt._cols, pa.table(out))
+    return mt._cols_frame(before=pa.table(out))
 
 
 def hwe_expected_het_freq(af: Column) -> Column:
@@ -471,7 +473,7 @@ def compute_charr(
     )
     with np.errstate(invalid="ignore", divide="ignore"):
         charr = pa.array(total / count, mask=count == 0)
-    return local_frame(df.sparkSession, mt._cols, pa.table({"charr": charr})).select(
+    return mt._cols_frame(before=pa.table({"charr": charr})).select(
         *mt._col_key, "charr"
     )
 

@@ -31,12 +31,12 @@ from typing import Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..expr.stats import pchisqtail, pgenchisq, pnorm, pT
 from ..matrixtable import ENTRIES, MatrixTable
-from .local import local_frame
 
 
 def _col_vector(mt: MatrixTable, y) -> np.ndarray:
@@ -110,13 +110,8 @@ def _entry_matrix(pdf_entries: pd.Series, field: str, n: int) -> np.ndarray:
 def _scores_frame(mt: MatrixTable, scores: np.ndarray) -> DataFrame:
     """PCA scores as a local DataFrame: the column key fields and
     ``scores`` (sorted by name), one row per column in column order."""
-    return local_frame(
-        mt._df.sparkSession,
-        [
-            {**{kf: c[kf] for kf in mt._col_key}, "scores": scores[i].tolist()}
-            for i, c in enumerate(mt._cols)
-        ],
-    )
+    scores_col = pa.table({"scores": pa.array(scores.tolist(), pa.list_(pa.float64()))})
+    return mt._cols_frame(mt._col_key, scores_col).select(*sorted([*mt._col_key, "scores"]))
 
 
 def _mean_impute(X: np.ndarray) -> np.ndarray:

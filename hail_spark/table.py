@@ -559,6 +559,165 @@ class Table:
         finally:
             t._df.unpersist()
 
+    # ------------------------------------------------------------------ #
+    # structural sugar and class-surface completion (ref table.py:
+    # flatten :3641, expand_types :3588, describe, summarize :4566,
+    # to_matrix_table :3921, to_matrix_table_row_major :4048, cache
+    # :2113, row_value :390, index :1353, index_globals :1421,
+    # multi_way_zip_join :3702, write_many :1438)
+    # ------------------------------------------------------------------ #
+    def flatten(self) -> "Table":
+        """Flatten nested structs into dotted top-level fields (ref
+        Table.flatten, table.py:3641).  Key fields that were structs expand
+        into their components, like the reference."""
+        df = _flatten_df(self._df)
+        new_key = []
+        for k in self._key:
+            if k in df.columns:
+                new_key.append(k)
+            else:
+                new_key.extend(c for c in df.columns if c.startswith(k + "."))
+        return Table(df, tuple(new_key), self._globals)
+
+    def expand_types(self) -> "Table":
+        """Expand non-primitive types into primitives (ref
+        Table.expand_types, table.py:3588): here the engine's physical
+        types are already Spark-native, so expansion == flatten."""
+        return self.flatten()
+
+    def describe(self) -> str:
+        """Schema description string (ref Table.describe)."""
+        lines = ["-" * 40, "Global fields:"]
+        for k, v in self._globals.items():
+            lines.append(f"    '{k}': {type(v).__name__}")
+        if not self._globals:
+            lines.append("    None")
+        lines += ["-" * 40, "Row fields:"]
+        for f in self._df.schema.fields:
+            lines.append(f"    '{f.name}': {f.dataType.simpleString()}")
+        lines += ["-" * 40, f"Key: {list(self._key)}", "-" * 40]
+        out = "\n".join(lines)
+        print(out)
+        return out
+
+    def summarize(self) -> dict:
+        """Per-field summary statistics (ref Table.summarize,
+        table.py:4566): one aggregation pass — count, missing count, and
+        min/max/mean for numerics, distinct counts for strings."""
+        aggs = [F.count(F.lit(1)).alias("__n")]
+        for f in self._df.schema.fields:
+            name, dt = f.name, f.dataType.simpleString()
+            aggs.append(F.count(F.when(F.col(name).isNull(), 1)).alias(f"{name}!missing"))
+            if dt in ("int", "bigint", "smallint", "tinyint", "double", "float"):
+                aggs += [
+                    F.min(name).alias(f"{name}!min"),
+                    F.max(name).alias(f"{name}!max"),
+                    F.avg(name).alias(f"{name}!mean"),
+                ]
+            elif dt == "string":
+                aggs.append(F.approx_count_distinct(name).alias(f"{name}!distinct"))
+        row = self._df.agg(*aggs).collect()[0].asDict()
+        out: dict = {"n_rows": row.pop("__n")}
+        for k, v in row.items():
+            field, stat = k.split("!", 1)
+            out.setdefault(field, {})[stat] = v
+        return out
+
+    def to_matrix_table(
+        self, row_key, col_key, row_fields=(), col_fields=()
+    ) -> "object":
+        """Long-format table -> MatrixTable (ref Table.to_matrix_table,
+        table.py:3921): one shuffle gathering entries per row key; col
+        metadata = sorted distinct col keys (driver-resident by design)."""
+        from .matrixtable import MatrixTable
+
+        entry_fields = [
+            c
+            for c in self._df.columns
+            if c not in (*row_key, col_key, *row_fields, *col_fields)
+        ]
+        mt = MatrixTable.from_long(
+            self._df,
+            row_key=list(row_key),
+            col_key=col_key,
+            entry_fields=entry_fields,
+            col_fields=list(col_fields),
+        )
+        return mt
+
+    def to_matrix_table_row_major(
+        self, columns, entry_field_name=None, col_field_name="col"
+    ) -> "object":
+        """Row-major wide table -> MatrixTable (ref
+        Table.to_matrix_table_row_major, table.py:4048): the listed columns
+        become one entry per column — a pure projection (no shuffle), col
+        names become the column key."""
+        from .matrixtable import ENTRIES, MatrixTable
+
+        first = self._df.schema[columns[0]].dataType
+        if first.typeName() == "struct":
+            entry = F.array(*[F.col(c) for c in columns])
+        else:
+            name = entry_field_name or "x"
+            entry = F.array(*[F.struct(F.col(c).alias(name)) for c in columns])
+        keep = [c for c in self._df.columns if c not in columns]
+        df = self._df.select(*keep, entry.alias(ENTRIES))
+        cols = [{col_field_name: c} for c in columns]
+        return MatrixTable(df, self._key, cols, (col_field_name,), self._globals)
+
+    def transmute_globals(self, **vals) -> "Table":
+        """Like annotate_globals but drops re-used source globals (ref
+        Table.transmute_globals)."""
+        g = dict(self._globals)
+        g.update(vals)
+        return Table(self._df, self._key, g)
+
+    def all(self, expr: Column) -> bool:
+        """Whole-table ALL (ref Table.all)."""
+        return bool(
+            self._df.agg(
+                F.coalesce(F.every(expr), F.lit(True)).alias("x")
+            ).collect()[0]["x"]
+        )
+
+    def any(self, expr: Column) -> bool:
+        """Whole-table ANY (ref Table.any)."""
+        return bool(
+            self._df.agg(
+                F.coalesce(F.some(expr), F.lit(False)).alias("x")
+            ).collect()[0]["x"]
+        )
+
+    def cache(self) -> "Table":
+        return self.persist("MEMORY_ONLY")
+
+    @property
+    def row_value(self) -> tuple:
+        return tuple(c for c in self._df.columns if c not in self._key)
+
+    def index_globals(self) -> dict:
+        return dict(self._globals)
+
+    def index(self, keys_df: DataFrame, how: str = "left") -> DataFrame:
+        """Key lookup (ref Table.index :1353 — expression sugar for a key
+        join; here the external keys arrive as a DataFrame and come back
+        annotated with this table's row fields)."""
+        return keys_df.join(self._df, on=list(self._key), how=how)
+
+    @staticmethod
+    def multi_way_zip_join(tables, data_field_name: str = "data", global_field_name: str = "globals"):
+        """Static alias for operators.multiway.multi_way_zip_join (ref
+        Table.multi_way_zip_join :3702)."""
+        from .operators.multiway import multi_way_zip_join as mwzj
+
+        return mwzj(tables, data_field_name)
+
+    def write_many(self, path: str, fields, overwrite: bool = False) -> None:
+        """Write each named field to its own native table under
+        ``path/<field>`` (ref Table.write_many :1438) — the fanout writer
+        with one field per output."""
+        self.write_fanout(path, {f: [f] for f in fields}, overwrite=overwrite)
+
 
 class GroupedTable:
     """Result of Table.group_by — call .aggregate(**aggs)
@@ -568,24 +727,29 @@ class GroupedTable:
         self._table = table
         self._fields = fields
         self._exprs = exprs
+        self._n_partitions: int | None = None
+
+    def partition_hint(self, n: int) -> "GroupedTable":
+        """ref GroupedTable.partition_hint (table.py:204): request n
+        partitions for the aggregation's result."""
+        self._n_partitions = n
+        return self
 
     def aggregate(self, **aggs: Column) -> Table:
         """ref TableKeyByAndAggregate (table_ir.py:510) /
         TableAggregateByKey (table_ir.py:568) — Spark's hash aggregate
         with partial (map-side) combine replaces Hail's staged
-        init/seq/comb pipeline (Extract.scala:484)."""
+        init/seq/comb pipeline (Extract.scala:484). After a
+        ``partition_hint(n)`` the result is coalesced to n partitions."""
         df = self._table._df
         keys = [F.col(f) for f in self._fields]
         keys += [c.alias(n) for n, c in self._exprs.items()]
         out = df.groupBy(*keys).agg(*[a.alias(n) for n, a in aggs.items()])
         new_key = tuple(self._fields) + tuple(self._exprs)
-        return Table(out, new_key, self._table._globals)
+        t = Table(out, new_key, self._table._globals)
+        return t.repartition(self._n_partitions) if self._n_partitions else t
 
 
-# ---------------------------------------------------------------------- #
-# structural sugar: flatten / expand_types / describe / summarize /
-# to_matrix_table / transmute_globals (ref table.py:3588-4566)
-# ---------------------------------------------------------------------- #
 def _flatten_df(df: DataFrame) -> DataFrame:
     """Recursively lift struct fields to top level as `a.b` columns
     (ref Table.flatten, table.py:3641 — arrays are NOT flattened)."""
@@ -605,213 +769,3 @@ def _flatten_df(df: DataFrame) -> DataFrame:
             else:
                 cols.append(F.col(f.name))
         df = df.select(*cols)
-
-
-def _table_flatten(self) -> "Table":
-    """Flatten nested structs into dotted top-level fields (ref
-    Table.flatten, table.py:3641).  Key fields that were structs expand
-    into their components, like the reference."""
-    df = _flatten_df(self._df)
-    new_key = []
-    for k in self._key:
-        if k in df.columns:
-            new_key.append(k)
-        else:
-            new_key.extend(c for c in df.columns if c.startswith(k + "."))
-    return Table(df, tuple(new_key), self._globals)
-
-
-def _table_expand_types(self) -> "Table":
-    """Expand non-primitive types into primitives (ref
-    Table.expand_types, table.py:3588): here the engine's physical
-    types are already Spark-native, so expansion == flatten."""
-    return _table_flatten(self)
-
-
-def _table_describe(self) -> str:
-    """Schema description string (ref Table.describe)."""
-    lines = ["-" * 40, "Global fields:"]
-    for k, v in self._globals.items():
-        lines.append(f"    '{k}': {type(v).__name__}")
-    if not self._globals:
-        lines.append("    None")
-    lines += ["-" * 40, "Row fields:"]
-    for f in self._df.schema.fields:
-        lines.append(f"    '{f.name}': {f.dataType.simpleString()}")
-    lines += ["-" * 40, f"Key: {list(self._key)}", "-" * 40]
-    out = "\n".join(lines)
-    print(out)
-    return out
-
-
-def _table_summarize(self) -> dict:
-    """Per-field summary statistics (ref Table.summarize,
-    table.py:4566): one aggregation pass — count, missing count, and
-    min/max/mean for numerics, distinct counts for strings."""
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    for f in self._df.schema.fields:
-        name, dt = f.name, f.dataType.simpleString()
-        aggs.append(F.count(F.when(F.col(name).isNull(), 1)).alias(f"{name}!missing"))
-        if dt in ("int", "bigint", "smallint", "tinyint", "double", "float"):
-            aggs += [
-                F.min(name).alias(f"{name}!min"),
-                F.max(name).alias(f"{name}!max"),
-                F.avg(name).alias(f"{name}!mean"),
-            ]
-        elif dt == "string":
-            aggs.append(F.approx_count_distinct(name).alias(f"{name}!distinct"))
-    row = self._df.agg(*aggs).collect()[0].asDict()
-    out: dict = {"n_rows": row.pop("__n")}
-    for k, v in row.items():
-        field, stat = k.split("!", 1)
-        out.setdefault(field, {})[stat] = v
-    return out
-
-
-def _table_to_matrix_table(
-    self, row_key, col_key, row_fields=(), col_fields=()
-) -> "object":
-    """Long-format table -> MatrixTable (ref Table.to_matrix_table,
-    table.py:3921): one shuffle gathering entries per row key; col
-    metadata = sorted distinct col keys (driver-resident by design)."""
-    from .matrixtable import MatrixTable
-
-    entry_fields = [
-        c
-        for c in self._df.columns
-        if c not in (*row_key, col_key, *row_fields, *col_fields)
-    ]
-    mt = MatrixTable.from_long(
-        self._df,
-        row_key=list(row_key),
-        col_key=col_key,
-        entry_fields=entry_fields,
-        col_fields=list(col_fields),
-    )
-    return mt
-
-
-def _table_to_matrix_table_row_major(
-    self, columns, entry_field_name=None, col_field_name="col"
-) -> "object":
-    """Row-major wide table -> MatrixTable (ref
-    Table.to_matrix_table_row_major, table.py:4048): the listed columns
-    become one entry per column — a pure projection (no shuffle), col
-    names become the column key."""
-    from .matrixtable import ENTRIES, MatrixTable
-
-    first = self._df.schema[columns[0]].dataType
-    if first.typeName() == "struct":
-        entry = F.array(*[F.col(c) for c in columns])
-    else:
-        name = entry_field_name or "x"
-        entry = F.array(*[F.struct(F.col(c).alias(name)) for c in columns])
-    keep = [c for c in self._df.columns if c not in columns]
-    df = self._df.select(*keep, entry.alias(ENTRIES))
-    cols = [{col_field_name: c} for c in columns]
-    return MatrixTable(df, self._key, cols, (col_field_name,), self._globals)
-
-
-def _table_transmute_globals(self, **vals) -> "Table":
-    """Like annotate_globals but drops re-used source globals (ref
-    Table.transmute_globals)."""
-    g = dict(self._globals)
-    g.update(vals)
-    return Table(self._df, self._key, g)
-
-
-def _table_all(self, expr: Column) -> bool:
-    """Whole-table ALL (ref Table.all)."""
-    return bool(
-        self._df.agg(
-            F.coalesce(F.every(expr), F.lit(True)).alias("x")
-        ).collect()[0]["x"]
-    )
-
-
-def _table_any(self, expr: Column) -> bool:
-    """Whole-table ANY (ref Table.any)."""
-    return bool(
-        self._df.agg(
-            F.coalesce(F.some(expr), F.lit(False)).alias("x")
-        ).collect()[0]["x"]
-    )
-
-
-Table.flatten = _table_flatten
-Table.expand_types = _table_expand_types
-Table.describe = _table_describe
-Table.summarize = _table_summarize
-Table.to_matrix_table = _table_to_matrix_table
-Table.to_matrix_table_row_major = _table_to_matrix_table_row_major
-Table.transmute_globals = _table_transmute_globals
-Table.all = _table_all
-Table.any = _table_any
-
-
-# ---------------------------------------------------------------------- #
-# class-surface completion (ref table.py: cache :2113, row_value :390,
-# index :1353, index_globals :1421, multi_way_zip_join :3702,
-# write_many :1438)
-# ---------------------------------------------------------------------- #
-def _t_cache(self) -> "Table":
-    return self.persist("MEMORY_ONLY")
-
-
-def _t_row_value(self) -> tuple:
-    return tuple(c for c in self._df.columns if c not in self._key)
-
-
-def _t_index_globals(self) -> dict:
-    return dict(self._globals)
-
-
-def _t_index(self, keys_df: DataFrame, how: str = "left") -> DataFrame:
-    """Key lookup (ref Table.index :1353 — expression sugar for a key
-    join; here the external keys arrive as a DataFrame and come back
-    annotated with this table's row fields)."""
-    return keys_df.join(self._df, on=list(self._key), how=how)
-
-
-def _t_multi_way_zip_join(tables, data_field_name: str = "data", global_field_name: str = "globals"):
-    """Static alias for operators.multiway.multi_way_zip_join (ref
-    Table.multi_way_zip_join :3702)."""
-    from .operators.multiway import multi_way_zip_join as mwzj
-
-    return mwzj(tables, data_field_name)
-
-
-def _t_write_many(self, path: str, fields, overwrite: bool = False) -> None:
-    """Write each named field to its own native table under
-    ``path/<field>`` (ref Table.write_many :1438) — the fanout writer
-    with one field per output."""
-    self.write_fanout(path, {f: [f] for f in fields}, overwrite=overwrite)
-
-
-Table.cache = _t_cache
-Table.row_value = property(_t_row_value)
-Table.index = _t_index
-Table.index_globals = _t_index_globals
-Table.multi_way_zip_join = staticmethod(_t_multi_way_zip_join)
-Table.write_many = _t_write_many
-
-
-def _gt_partition_hint(self, n: int) -> "GroupedTable":
-    """ref GroupedTable.partition_hint (table.py:204): request n
-    partitions for the aggregation — mapped onto
-    spark.sql.shuffle.partitions via a post-agg repartition hint."""
-    self._n_partitions = n
-    return self
-
-
-GroupedTable.partition_hint = _gt_partition_hint
-_orig_grouped_aggregate = GroupedTable.aggregate
-
-
-def _gt_aggregate_with_hint(self, **aggs):
-    out = _orig_grouped_aggregate(self, **aggs)
-    n = getattr(self, "_n_partitions", None)
-    return out.repartition(n) if n else out
-
-
-GroupedTable.aggregate = _gt_aggregate_with_hint

@@ -3,6 +3,7 @@ import os
 import sys
 import threading
 import types
+import uuid
 
 import pytest
 from py4j.clientserver import ClientServerConnection
@@ -63,3 +64,16 @@ def py4j_round_trips():
         yield trips
     finally:
         ClientServerConnection.send_command = send
+
+
+def spark_jobs(spark, f) -> int:
+    """Run ``f`` and return the number of Spark jobs it started."""
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4()}"
+    sc.setJobGroup(group, group)
+    try:
+        f()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))

@@ -3,10 +3,9 @@ computed from the same Python data, plus the shape guarantees of their
 results: pinned schema, column order, NULL handling, malformed input,
 and per-sample frames that collect without a Spark job."""
 
-import uuid
-
 import numpy as np
 import pytest
+from conftest import spark_jobs
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -17,6 +16,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from hail_spark.io.vcf import import_vcf
 from hail_spark.matrixtable import ENTRIES, MatrixTable
 from hail_spark.methods import qc
 from hail_spark.methods.qc import compute_charr, sample_qc
@@ -311,19 +311,6 @@ def test_compute_charr_matches_numpy_reference(spark):
             assert g == pytest.approx(w, rel=1e-12)
 
 
-def _jobs(spark, f):
-    """Spark jobs started while running ``f``."""
-    sc = spark.sparkContext
-    group = f"probe-{uuid.uuid4()}"
-    sc.setJobGroup(group, group)
-    try:
-        f()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_per_sample_results_collect_without_a_job(spark):
     rows = _random_matrix(np.random.default_rng(13))
     for k, r in enumerate(rows):  # PCA needs every row's GT
@@ -331,10 +318,32 @@ def test_per_sample_results_collect_without_a_job(spark):
             r[ENTRIES] = [{"GT": (j * (k + 1)) % 3, "DP": 10, "GQ": 10} for j in range(N_COLS)]
     mt = _matrix(spark, rows)
     sq = sample_qc(mt)
-    assert _jobs(spark, sq.collect) == 0
+    assert spark_jobs(spark, sq.collect) == 0
     _, scores, _ = hwe_normalized_pca(mt, k=2)
     assert scores.schema == StructType(
         [StructField("s", StringType()), StructField("scores", ArrayType(DoubleType()))]
     )
-    assert _jobs(spark, scores.collect) == 0
+    assert spark_jobs(spark, scores.collect) == 0
     assert [r["s"] for r in scores.collect()] == [f"s{j}" for j in range(N_COLS)]
+
+
+def test_sample_qc_site_without_alt_allele(spark, tmp_path):
+    """A site whose ALT is '.' (one-element ``alleles``) counts in no
+    allele category, as in Hail; only the first site's A>G calls do."""
+    p = tmp_path / "no_alt.vcf"
+    p.write_text(
+        "##fileformat=VCFv4.2\n"
+        "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tA\tB\n"
+        "1\t10\t.\tA\tG\t.\tPASS\t.\tGT\t0/1\t1/1\n"
+        "1\t20\t.\tC\t.\t.\tPASS\t.\tGT\t0/0\t./.\n"
+    )
+    mt = import_vcf(spark, str(p))
+    got = [
+        {f: r[f] for f in ("s", "n_called", "n_hom_ref", *qc._ALLELE_COUNTS)}
+        for r in sample_qc(mt).collect()
+    ]
+    zero = dict.fromkeys(("n_insertion", "n_deletion", "n_transversion", "n_star"), 0)
+    assert got == [
+        {"s": "A", "n_called": 2, "n_hom_ref": 1, "n_snp": 1, "n_transition": 1, **zero},
+        {"s": "B", "n_called": 1, "n_hom_ref": 0, "n_snp": 2, "n_transition": 2, **zero},
+    ]
